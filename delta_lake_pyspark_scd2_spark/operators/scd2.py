@@ -495,6 +495,9 @@ def check_invariants(
     Checks the reference's notes-only invariants (``notes.md:132-134``):
       * ``overlap``: interval [from, to) overlaps the next version's.
       * ``multi_current``: more than one ``is_current`` row per key.
+      * ``no_current``: no ``is_current`` row for a key (tombstones are
+        current rows, so a deleted key still has one) — the trace of a
+        close committed without its insert.
       * ``bad_interval``: ``valid_to < valid_from`` (zero-length
         intervals are allowed: equal-timestamp events chained by a
         tiebreak produce degenerate-but-ordered versions; the reference
@@ -513,11 +516,15 @@ def check_invariants(
     multi = annotated.filter(F.col("__cur_cnt") > 1).withColumn(
         "violation", F.lit("multi_current")
     )
+    none = annotated.filter(F.col("__cur_cnt") == 0).withColumn(
+        "violation", F.lit("no_current")
+    )
     bad = annotated.filter(F.col(valid_to) < F.col(valid_from)).withColumn(
         "violation", F.lit("bad_interval")
     )
     return (
         overlap.unionByName(multi)
+        .unionByName(none)
         .unionByName(bad)
         .drop("__nxt_from", "__cur_cnt")
     )

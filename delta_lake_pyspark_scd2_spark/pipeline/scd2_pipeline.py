@@ -1,5 +1,5 @@
-"""SCD2 batch pipeline: validate → intervalize → two-phase merge into a
-versioned Parquet table.
+"""SCD2 batch pipeline: validate → intervalize → merge into a versioned
+Parquet table, one commit per batch.
 
 Re-derives the reference's E1/E2 lifecycles (SURVEY.md §3:
 extract → validate(+quarantine) → transform(window) → 2-phase merge →
@@ -11,10 +11,17 @@ stale-event guard that keeps the single-current invariant under
 superset re-runs (the reference's Phase A/B split can double-open a
 key there; see tests/test_scd2_pipeline.py).
 
+Atomicity: the reference's Phase A (close) and Phase B (insert) land
+in ONE table version, as Delta's ``MERGE INTO`` does — a reader or a
+crash never sees a key whose current row is closed but whose new one
+is missing.
+
 Scale story (the levers that matter at 100 TB):
-  * Phase A touches only the partitions holding the current rows of
-    *changed* keys — partition-scoped CoW, cost ∝ changed data.
-  * Phase B is append-only (no rewrite at all).
+  * Closes touch only the partitions holding the current rows of
+    *changed* keys — partition-scoped CoW, cost ∝ changed data (or,
+    with ``close_mode="dv"``, deletion vectors: ∝ closed rows).
+  * Inserts are added files only, written by the same Spark write as
+    the close rewrite.
   * Change detection joins staged×current on the key — broadcast when
     the batch is small, AQE-planned shuffle otherwise.
   * The idempotency anti-join reads only (key, valid_from) columns —
@@ -27,7 +34,7 @@ import time
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from delta_lake_pyspark_scd2_spark.functions import partition_cols_from
@@ -209,32 +216,6 @@ def _read_event_log(
     )
 
 
-def _observed_long(obs: Observation, key: str) -> int | None:
-    """Non-blocking read of one observed long metric; ``None`` when the
-    metrics row is unavailable (the action has not run, or AQE's
-    empty-relation propagation elided the CollectMetrics node — the
-    round-10 rejected-variant failure mode) so the caller can fall back
-    to an explicit action. ``Observation.get`` would BLOCK forever in
-    the elided case; the JVM-side ``getRowOrEmpty`` does not."""
-    try:
-        jopt = obs._jo.getRowOrEmpty()
-        if not jopt.isDefined():
-            return None
-        from pyspark.serializers import CPickleSerializer
-
-        utils = getattr(
-            obs._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils"
-        )
-        row = CPickleSerializer().loads(utils.toPyRow(jopt.get()))
-        d = row.asDict(recursive=False)
-        if key not in d:
-            return None
-        v = d[key]
-        return 0 if v is None else int(v)
-    except Exception:
-        return None
-
-
 def _prepare_versions(spec: SCD2Spec, staged_events: DataFrame) -> DataFrame:
     """Collapse + intervalize a batch of events into SCD2 version rows
     with partition columns (reference transform, src/header_etl.py:106-125).
@@ -413,8 +394,14 @@ def _merge_batch(
     *,
     key_profile: dict | None = None,
 ) -> dict:
-    """Two-phase SCD2 merge (reference Phase A/B,
-    src/header_etl.py:144-280) on the versioned table.
+    """SCD2 merge (reference Phase A/B, src/header_etl.py:144-280) on
+    the versioned table, committed as ONE table version: the closes of
+    changed keys' current rows and the inserted version rows go through
+    one ``replace_partitions(..., adds=)`` (or, in dv mode, one
+    ``remove_rows(..., adds=)``) call, and a batch that closes and
+    inserts nothing commits nothing. Every step runs in order on the
+    calling thread; the parallelism is Spark's. ``late_policy="rebuild"``
+    adds a second commit (the interval rebuild), valid on its own.
 
     Correctness refinements over the reference (documented divergences):
       * events at or before the key's current ``valid_from`` are *stale*
@@ -428,11 +415,11 @@ def _merge_batch(
     keys = list(spec.key_cols)
     ts = spec.event_ts_col
 
-    # Phases A and B derive touched partitions *arithmetically* from
-    # valid_from under THIS spec's partition scheme; that is only sound
-    # if the table on disk was partitioned the same way. Fail fast on a
-    # spec/manifest mismatch instead of silently pruning to the wrong
-    # partitions and missing closes.
+    # The close and the insert derive touched partitions
+    # *arithmetically* from valid_from under THIS spec's partition
+    # scheme; that is only sound if the table on disk was partitioned
+    # the same way. Fail fast on a spec/manifest mismatch instead of
+    # silently pruning to the wrong partitions and missing closes.
     table_pc = table.partition_columns()
     if table_pc != list(spec.partition_cols):
         raise ValueError(
@@ -445,10 +432,11 @@ def _merge_batch(
     tracked = spec.effective_tracked
     # Current rows via manifest data skipping: files whose footer says
     # max(is_current)=false (fully-closed histories) never enter the
-    # scan. Phase-B appends are all-current and Phase-A rewrites mix,
-    # so over time old day-partitions go all-closed and drop out — the
-    # per-batch current-row scan tracks the LIVE key count, not the
-    # total version-row count.
+    # scan. Insert files are all-current (the merge's write keeps them
+    # apart from the rewritten files, which mix), so over time old
+    # day-partitions go all-closed and drop out — the per-batch
+    # current-row scan tracks the LIVE key count, not the total
+    # version-row count.
     cur_src = table.read_where([("is_current", "=", True)])
     if spec.evolve_schema:
         cur_src = _pad_columns(cur_src, kept)
@@ -468,7 +456,7 @@ def _merge_batch(
     )
 
     # Split staged events: new-key events, fresh events, stale events.
-    # Persisted: reused by Phase A and Phase B — without it every
+    # Persisted: reused by the close and insert plans — without it every
     # downstream action re-runs the batch×current join.
     #
     # Freshness reference point differs by policy. "drop": the current
@@ -526,101 +514,90 @@ def _merge_batch(
         staged = _left_join_current(kept, current)
         is_new_key = F.col("__cur_from").isNull()
         is_fresh = F.col(ts) > F.col("__cur_from")
-    # The stale count rides the staged cache's materialization as an
-    # Observation INSIDE the persisted plan (round-11, guide §5 "the
-    # driver is a single process"): it fires exactly once, on the
-    # first action that fills the cache (the `touched` collect below),
-    # so the dedicated `late.count()` job — previously a full serial
-    # prefix of Phase A — disappears. when/otherwise (not a bare
-    # cast) so NULL predicates count as 0, exactly like filter().
-    import uuid as _uuid
+    staged = staged.persist()
+    # every frame cached below is released on the way out, failure or not
+    cached = [df for df in (staged, hot_df) if df is not None]
+    try:
+        helper_cols = [
+            c
+            for c in staged.columns
+            if c in ("__cur_from", "__max_seen") or c.startswith("__curv_")
+        ]
+        late = staged.filter(~is_new_key & ~is_fresh).drop(*helper_cols)
+        usable = staged.filter(is_new_key | is_fresh).drop(*helper_cols)
 
-    stale_obs = Observation(f"scd2_stale_{_uuid.uuid4().hex[:8]}")
-    staged = staged.observe(
-        stale_obs,
-        F.sum(
-            F.when(~is_new_key & ~is_fresh, F.lit(1)).otherwise(F.lit(0))
-        ).alias("n_stale"),
-    ).persist()
-    t_a = time.time()
-    helper_cols = [
-        c
-        for c in staged.columns
-        if c in ("__cur_from", "__max_seen") or c.startswith("__curv_")
-    ]
-    late = staged.filter(~is_new_key & ~is_fresh).drop(*helper_cols)
-    usable = staged.filter(is_new_key | is_fresh).drop(*helper_cols)
-
-    # Null-safe change detection + first changing event per key
-    # (J1 + P6 + A1) as a pure filter+aggregate over staged: a usable
-    # existing-key event row changes iff any tracked value differs
-    # null-safely from the carried current value (same predicate
-    # scd2.detect_changes applies after its join — here the join
-    # already happened once, in staged). One row per changed key with
-    # the first changing event's ts; the current row's valid_from
-    # rides along so Phase A's touched partitions derive from
-    # `changed` alone — no table re-scan, no second join.
-    any_change = F.lit(False)
-    for c in tracked:
-        any_change = any_change | scd2.null_safe_neq(
-            F.col(c), F.col(f"__curv_{c}")
+        # Null-safe change detection + first changing event per key
+        # (J1 + P6 + A1) as a pure filter+aggregate over staged: a usable
+        # existing-key event row changes iff any tracked value differs
+        # null-safely from the carried current value (same predicate
+        # scd2.detect_changes applies after its join — here the join
+        # already happened once, in staged). One row per changed key with
+        # the first changing event's ts; the current row's valid_from
+        # rides along so the touched partitions derive from `changed`
+        # alone — no table re-scan, no second join.
+        any_change = F.lit(False)
+        for c in tracked:
+            any_change = any_change | scd2.null_safe_neq(
+                F.col(c), F.col(f"__curv_{c}")
+            )
+        changed = (
+            staged.filter(~is_new_key & is_fresh & any_change)
+            .groupBy(*keys)
+            .agg(
+                F.min(ts).alias("first_change_ts"),
+                F.min("__cur_from").alias("__cur_from"),
+            )
+            .persist()
         )
-    changed = (
-        staged.filter(~is_new_key & is_fresh & any_change)
-        .groupBy(*keys)
-        .agg(
-            F.min(ts).alias("first_change_ts"),
-            F.min("__cur_from").alias("__cur_from"),
+        cached.append(changed)
+
+        # ONE collect plans the commit, and fills the `staged` and
+        # `changed` caches before any table mutation. It counts, per
+        # partition: closes — the current row of each changed key, in
+        # the partition of its carried valid_from (one current row per
+        # key, see check_invariants, so one close per changed key) —
+        # and usable events, whose partitions bound those of the
+        # versions they become; stale events are summed alongside.
+        def flag(pred: Column) -> Column:
+            # 0 where a filter() would drop the row, NULL included
+            return F.when(pred, 1).otherwise(0)
+
+        marks = (
+            changed.filter(F.col("first_change_ts") > F.col("__cur_from"))
+            .select(
+                F.col("__cur_from").alias("valid_from"),
+                F.lit(1).alias("n_close"),
+                F.lit(0).alias("n_usable"),
+                F.lit(0).alias("n_stale"),
+            )
+            .unionByName(
+                staged.select(
+                    F.col(ts).alias("valid_from"),
+                    F.lit(0).alias("n_close"),
+                    flag(is_new_key | is_fresh).alias("n_usable"),
+                    flag(~is_new_key & ~is_fresh).alias("n_stale"),
+                )
+            )
         )
-        .persist()
-    )
+        per_part = (
+            partition_cols_from(marks, "valid_from", spec.partition_prefix)
+            .groupBy(*spec.partition_cols)
+            .agg(*[F.sum(c).alias(c) for c in ("n_close", "n_usable", "n_stale")])
+            .collect()
+        )
 
-    # Phase A — close current rows of changed keys at first_change_ts,
-    # rewriting only the partitions those rows live in. Touched
-    # partitions come from the carried current-row valid_from by pure
-    # date arithmetic over the (small, persisted) changed set. No forced
-    # broadcast of `changed`: its size is data-dependent (≤ all keys in
-    # the batch) — AQE picks broadcast when it is actually small and
-    # falls back to a shuffle join when it is not.
-    closed = 0
-    close_parts = partition_cols_from(
-        changed.filter(F.col("first_change_ts") > F.col("__cur_from")).select(
-            F.col("__cur_from").alias("valid_from")
-        ),
-        "valid_from",
-        spec.partition_prefix,
-    )
-    # this collect materializes the `staged` AND `changed` caches (its
-    # plan scans every staged partition), fires the stale Observation,
-    # and pins every staged row before any table mutation below — the
-    # single serial prefix of Phase A
-    touched = [
-        {k: str(r[k]) for k in spec.partition_cols}
-        for r in close_parts.select(*spec.partition_cols).distinct().collect()
-    ]
-    # Guarded read (round-10's rejected variant showed AQE's
-    # empty-relation propagation can complete a query without its
-    # CollectMetrics row): non-blocking getRowOrEmpty, falling back to
-    # an explicit count — cheap now, the cache is materialized.
-    n_stale = _observed_long(stale_obs, "n_stale")
-    if n_stale is None:
-        n_stale = late.count()
+        def parts(counter: str) -> list[dict[str, str]]:
+            return [
+                {k: str(r[k]) for k in spec.partition_cols}
+                for r in per_part
+                if r[counter]
+            ]
 
-    # Phase B's COMPUTE overlapped with Phase A's write (guide §2.6:
-    # actions are only sequential because the driver calls them
-    # sequentially). Safe because Phase A never changes any
-    # (key, valid_from) pair — "rewrite" flips valid_to/is_current/
-    # closed_by_batch in place, "dv" kills rows while appending closed
-    # copies with the SAME (key, valid_from) — so the idempotency
-    # anti-join is invariant under A's commit and is planned against
-    # the explicitly pinned pre-A manifest version (read_partitions
-    # resolves its file list eagerly). Only the append COMMIT orders
-    # after A: committing B first would let A's partition rewrite
-    # (planned over pre-B files) drop B's freshly appended rows.
-    v_pre = table.latest_version()
+        touched = parts("n_close")
+        n_closed = sum(r["n_close"] for r in per_part)
+        n_stale = sum(r["n_stale"] for r in per_part)
 
-    def _phase_b_compute() -> tuple[DataFrame, DataFrame, int]:
-        # insert version rows from the first change onward for changed
+        # Inserts: version rows from the first change onward for changed
         # keys plus everything for new keys; idempotency key =
         # (key, valid_from) anti-join (reference src/header_etl.py:
         # 247-280). New keys read straight off the staged frame (null
@@ -631,70 +608,56 @@ def _merge_batch(
             .filter(F.col(ts) >= F.col("first_change_ts"))
             .drop("first_change_ts", "__cur_from")
         )
-        to_version = new_key_events.unionByName(changed_events)
-        # Persisted: feeds the partition-scope collect AND the
-        # anti-join — without it the collapse+intervalize windows run
-        # twice.
-        versions = _prepare_versions(spec, to_version).persist()
+        versions = _prepare_versions(
+            spec, new_key_events.unionByName(changed_events)
+        )
         # Idempotency conflicts share (key, valid_from), and the
         # partition columns are a pure function of valid_from — so a
         # conflicting existing row can only live in a partition some
-        # incoming version also maps to. Scope the anti-join's right
-        # side to exactly those partitions (manifest-pruned scan)
-        # instead of the whole table: per-batch cost stays ∝ batch
-        # footprint as the table grows 100×.
-        inserts: DataFrame | None = None
-        try:
-            ins_touched = [
-                {k: str(r[k]) for k in spec.partition_cols}
-                for r in versions.select(*spec.partition_cols)
-                .distinct()
-                .collect()
-            ]
-            existing_keys = table.read_partitions(
-                ins_touched, version=v_pre
-            ).select(*keys, "valid_from")
-            inserts = versions.join(
-                existing_keys, on=[*keys, "valid_from"], how="left_anti"
-            ).persist()
-            # the count materializes the cache (the append replays it)
-            # and is the exact insert count — the append no longer
-            # needs an Observation riding its write
-            return versions, inserts, inserts.count()
-        except BaseException:
-            # release this thread's persists on ANY failure so an
-            # aborted merge leaves no cache entries behind
-            versions.unpersist()
-            if inserts is not None:
-                inserts.unpersist()
-            raise
+        # usable event also maps to. Scope the anti-join's right side
+        # to exactly those partitions (manifest-pruned scan) instead of
+        # the whole table: per-batch cost stays ∝ batch footprint as the
+        # table grows 100×.
+        ins_touched = parts("n_usable")
+        existing_keys = table.read_partitions(ins_touched).select(
+            *keys, "valid_from"
+        )
+        inserts = versions.join(
+            existing_keys, on=[*keys, "valid_from"], how="left_anti"
+        ).persist()
+        cached.append(inserts)
+        # fills the cache the write replays; the exact insert count
+        n_inserted = inserts.count()
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(_phase_b_compute)
-    try:
-        if touched and spec.close_mode == "dv":
-            # Deletion-vector close: mark the (few) current rows of
-            # changed keys dead at their (file, position) and append
-            # their closed copies — no partition rewrite at all. The
-            # positional read applies existing DVs, so an
-            # already-closed row can't close twice. Write
-            # amplification: O(closed rows), not O(partition).
+        # ONE commit holds the closes and the inserts, so a reader (or a
+        # crash) never sees a key closed without its new current row.
+        t_commit = time.time()
+        if touched or n_inserted:
+            commit_metrics = {
+                "batch_id": batch_id,
+                "n_closed": n_closed,
+                "n_inserted": n_inserted,
+            }
             to_close = changed.drop("__cur_from")
-            part_df = table.read_partitions(touched, with_position=True)
-            closing = (
-                part_df.join(to_close, on=keys, how="inner")
-                .filter(
-                    F.col("is_current")
-                    & F.col("first_change_ts").isNotNull()
-                    & (F.col("first_change_ts") > F.col("valid_from"))
-                )
-                .persist()
+            closes = (
+                F.col("is_current")
+                & F.col("first_change_ts").isNotNull()
+                & (F.col("first_change_ts") > F.col("valid_from"))
             )
-            dead = closing.select("__file", "__pos")
-            closed = dead.count()
-            if closed:
+            if spec.close_mode == "dv":
+                # Deletion-vector close: mark the (few) current rows of
+                # changed keys dead at their (file, position) and add
+                # their closed copies next to the inserts — no partition
+                # rewrite at all. The positional read applies existing
+                # DVs, so an already-closed row can't close twice. Write
+                # amplification: O(closed rows), not O(partition).
+                closing = (
+                    table.read_partitions(touched, with_position=True)
+                    .join(to_close, on=keys, how="inner")
+                    .filter(closes)
+                    .persist()
+                )
+                cached.append(closing)
                 closed_copies = (
                     closing.withColumn("valid_to", F.col("first_change_ts"))
                     .withColumn("is_current", F.lit(False))
@@ -702,119 +665,76 @@ def _merge_batch(
                     .drop("first_change_ts", "__file", "__pos")
                 )
                 table.remove_rows(
-                    dead,
-                    adds=closed_copies,
-                    operation="SCD2_CLOSE_DV",
-                    metrics={"batch_id": batch_id, "n_closed": closed},
-                )
-            closing.unpersist()
-        elif touched:
-            to_close = changed.drop("__cur_from")
-            part_df = table.read_partitions(touched)
-            updated = (
-                part_df.alias("t")
-                .join(to_close.alias("c"), on=keys, how="left")
-                .withColumn(
-                    "__close",
-                    F.col("is_current")
-                    & F.col("first_change_ts").isNotNull()
-                    & (F.col("first_change_ts") > F.col("valid_from")),
-                )
-                .withColumn(
-                    "valid_to",
-                    F.when(F.col("__close"), F.col("first_change_ts")).otherwise(
-                        F.col("valid_to")
+                    closing.select("__file", "__pos"),
+                    adds=closed_copies.unionByName(
+                        inserts, allowMissingColumns=True
                     ),
+                    operation="SCD2_MERGE_DV",
+                    merge_schema=spec.evolve_schema,
+                    metrics=commit_metrics,
                 )
-                .withColumn(
-                    "is_current",
-                    F.when(F.col("__close"), F.lit(False)).otherwise(
-                        F.col("is_current")
-                    ),
+            else:
+                # Copy-on-write close of the touched partitions; the
+                # inserts ride the same Spark write as its `adds`.
+                close = F.col("__close")
+                updated = (
+                    table.read_partitions(touched)
+                    .join(to_close, on=keys, how="left")
+                    .withColumn("__close", closes)
+                    .withColumn(
+                        "valid_to",
+                        F.when(close, F.col("first_change_ts")).otherwise(
+                            F.col("valid_to")
+                        ),
+                    )
+                    .withColumn(
+                        "is_current",
+                        F.when(close, F.lit(False)).otherwise(F.col("is_current")),
+                    )
+                    .withColumn(
+                        "closed_by_batch",
+                        F.when(close, F.lit(batch_id)).otherwise(
+                            F.col("closed_by_batch")
+                        ),
+                    )
+                    .drop("first_change_ts", "__close")
                 )
-                .withColumn(
-                    "closed_by_batch",
-                    F.when(F.col("__close"), F.lit(batch_id)).otherwise(
-                        F.col("closed_by_batch")
-                    ),
+                table.replace_partitions(
+                    updated,
+                    touched,
+                    adds=inserts,
+                    operation="SCD2_MERGE",
+                    merge_schema=spec.evolve_schema,
+                    metrics=commit_metrics,
                 )
-            )
-            # count piggybacks on the write job (observe) — no
-            # separate scan
-            obs = Observation("scd2_close")
-            updated = updated.observe(
-                obs, F.sum(F.col("__close").cast("long")).alias("n_closed")
-            )
-            table.replace_partitions(
-                updated.drop("first_change_ts", "__close"),
-                touched,
-                operation="SCD2_CLOSE",
-                # evaluated at commit time, after the write job
-                # resolves the observation — count rides the write,
-                # no extra scan
-                metrics=lambda: {
-                    "batch_id": batch_id,
-                    "n_closed": int(obs.get["n_closed"] or 0),
-                },
-            )
-            closed = int(obs.get["n_closed"] or 0)
-    except BaseException:
-        # Phase A failed: wait out the in-flight Phase-B jobs (no
-        # dangling actions against a table whose merge aborted), then
-        # DRAIN the future — fut.result() below is never reached, so a
-        # completed Phase B's persisted frames must be released here
-        # or they leak for the life of the session (round-10 ADVICE).
-        # Phase A's exception propagates; a Phase-B failure in this
-        # path cleaned up after itself inside _phase_b_compute.
-        pool.shutdown(wait=True)
-        if fut.done() and not fut.cancelled() and fut.exception() is None:
-            v_b, ins_b, _ = fut.result()
-            ins_b.unpersist()
-            v_b.unpersist()
-        raise
+
+        # Phase C (optional) — late-arriving interval rebuild, its own
+        # commit after the merge's (the table is valid between them), so
+        # rebuilt histories include this batch's fresh versions. Event
+        # source = full log (prior batches ∪ this batch), so versions
+        # collapsed away by earlier change-only loads are recoverable.
+        t_c = time.time()
+        n_rebuilt = 0
+        if spec.late_policy == "rebuild" and n_stale:
+            all_events = prior_events.unionByName(kept, allowMissingColumns=True)
+            n_rebuilt = _rebuild_late(spec, table, late, all_events, batch_id)
     finally:
-        pool.shutdown(wait=True)
-
-    t_b = time.time()
-    # Phase B — commit: append the (already computed, cached) inserts
-    # strictly after Phase A's commit.
-    versions, inserts, n_inserted = fut.result()
-    if n_inserted:
-        table.append(
-            inserts,
-            merge_schema=spec.evolve_schema,
-            metrics={"batch_id": batch_id, "n_inserted": n_inserted},
-        )
-
-    # Phase C (optional) — late-arriving interval rebuild. Runs after
-    # A/B so rebuilt histories include this batch's fresh versions.
-    # Event source = full log (prior batches ∪ this batch), so versions
-    # collapsed away by earlier change-only loads are recoverable.
-    t_c = time.time()
-    n_rebuilt = 0
-    if spec.late_policy == "rebuild" and n_stale:
-        all_events = prior_events.unionByName(kept, allowMissingColumns=True)
-        n_rebuilt = _rebuild_late(spec, table, late, all_events, batch_id)
-
-    for df in (inserts, versions, changed, staged):
-        df.unpersist()
-    if hot_df is not None:
-        hot_df.unpersist()
+        for df in cached:
+            df.unpersist()
     out = {
-        "n_closed": closed,
+        "n_closed": n_closed,
         "n_hot_keys": n_hot_keys,
         "n_inserted": n_inserted,
         "n_stale": n_stale,
-        # Phase-A scope evidence: partitions actually rewritten (or
-        # DV'd) this merge — the number that must track the BATCH's
-        # date spread, not the table's, for cost ∝ changed data
+        # close scope evidence: partitions actually rewritten (or DV'd)
+        # this merge — the number that must track the BATCH's date
+        # spread, not the table's, for cost ∝ changed data
         "n_parts_closed": len(touched),
         # phase breakdown (reference tracks per-phase durations,
-        # src/header_etl.py:319-331; these localize merge cost the
-        # same way at any scale: close = partition rewrite, insert =
-        # append, rebuild = late-history reconstruction)
-        "duration_s_close": round(t_b - t_a, 3),
-        "duration_s_insert": round(t_c - t_b, 3),
+        # src/header_etl.py:319-331): commit = the one write + manifest
+        # commit of closes and inserts; the rest of duration_s_merge is
+        # staging and change detection
+        "duration_s_commit": round(t_c - t_commit, 3),
     }
     if spec.late_policy == "rebuild":
         out["n_rebuilt"] = n_rebuilt

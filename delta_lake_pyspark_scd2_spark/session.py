@@ -18,10 +18,11 @@ DEFAULT_APP_NAME = "delta_lake_pyspark_scd2_spark"
 
 
 def _cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else this machine's core count."""
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    except ValueError:
-        return 32
+        return max(1, int(os.environ["SPARK_GRAFT_CPUS"]))
+    except (KeyError, ValueError):
+        return os.cpu_count() or 1
 
 
 def get_spark(

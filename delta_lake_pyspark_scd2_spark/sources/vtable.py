@@ -557,12 +557,19 @@ class VersionedParquetTable:
         generated: dict[str, str] | None = None,
         mapping: dict[str, str] | None = None,
         layout_ready: bool = False,
+        side_col: str | None = None,
     ) -> list[ManifestEntry]:
         """Write df once via Spark (partitioned layout), then move the
         produced parquet files into ``data/`` under their partition
         dirs. Filenames carry Spark's task UUIDs → never collide with
         live files; a failed write leaves only unreferenced garbage
         (never a corrupt table) exactly like Delta.
+
+        ``side_col`` names a string column that splits one write into
+        sides (see :meth:`replace_partitions`): it is partitioned on
+        first, its directory level is dropped on the move, and its
+        value prefixes each file name as ``<side>-`` — which also keeps
+        two sides' same-named task files in one partition apart.
 
         ``constraints`` (name → SQL boolean expr) are CHECK-enforced on
         the written rows via an Observation riding the write job itself
@@ -621,8 +628,9 @@ class VersionedParquetTable:
             # files) pass layout_ready=True to skip it.
             df = df.hint("rebalance", *partition_cols)
         writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
+        dirs = ([side_col] if side_col else []) + list(partition_cols)
+        if dirs:
+            writer = writer.partitionBy(*dirs)
         writer.parquet(staging)
         if obs is not None:
             got = obs.get
@@ -644,6 +652,10 @@ class VersionedParquetTable:
                     continue
                 rel_dir = os.path.relpath(root, staging)
                 rel_dir = "" if rel_dir == "." else rel_dir
+                name = fname
+                if side_col:
+                    side, _, rel_dir = rel_dir.partition(os.sep)
+                    name = f"{side.split('=', 1)[1]}-{fname}"
                 partition: dict[str, str] = {}
                 for comp in rel_dir.split(os.sep):
                     if "=" in comp:
@@ -651,12 +663,12 @@ class VersionedParquetTable:
                         partition[k] = v
                 dest_dir = os.path.join(data_root, rel_dir)
                 os.makedirs(dest_dir, exist_ok=True)
-                dest = os.path.join(dest_dir, fname)
+                dest = os.path.join(dest_dir, name)
                 os.rename(os.path.join(root, fname), dest)
                 stats, rows = _file_stats(dest)
                 entries.append(
                     ManifestEntry(
-                        os.path.join(rel_dir, fname), partition, stats, rows
+                        os.path.join(rel_dir, name), partition, stats, rows
                     )
                 )
         shutil.rmtree(staging)
@@ -1048,24 +1060,7 @@ class VersionedParquetTable:
             if applied is not None and applied >= txn[1]:
                 return m["version"]
         pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        if merge_schema:
-            new_fields = {f.name for f in schema.fields}
-            # blocked names: dropped-column tombstones AND the live
-            # physical slots of renamed columns — a new logical column
-            # with either name would collide with on-disk data
-            retired = set(m.get("retired_physical", [])) | set(
-                (m.get("column_mapping") or {}).values()
-            )
-            for f in df.schema.fields:
-                if f.name not in new_fields:
-                    if f.name in retired:
-                        raise ValueError(
-                            f"cannot add column {f.name}: live files hold "
-                            "data under that physical name (dropped or "
-                            "renamed-away column) — rewrite the table first"
-                        )
-                    schema = schema.add(f.name, f.dataType, True)
+        schema = _table_schema(m, df) if merge_schema else _table_schema(m)
         ident_assigned = any(
             c not in df.columns for c in (m.get("identity_cols") or {})
         )
@@ -1138,11 +1133,7 @@ class VersionedParquetTable:
                     # Our already-written files lack the winner's
                     # columns and read them as NULL — standard
                     # mergeSchema semantics.
-                    schema = T.StructType.fromJson(json.loads(m["schema"]))
-                    have = {f.name for f in schema.fields}
-                    for f in df.schema.fields:
-                        if f.name not in have:
-                            schema = schema.add(f.name, f.dataType, True)
+                    schema = _table_schema(m, df)
                     base_schema_json = m["schema"]
         raise RuntimeError(
             f"append to {self.path} lost {attempt + 1} optimistic commit races"
@@ -1225,6 +1216,7 @@ class VersionedParquetTable:
         df: DataFrame,
         partitions: list[dict[str, str]],
         *,
+        adds: DataFrame | None = None,
         operation: str = "REPLACE_PARTITIONS",
         merge_schema: bool = False,
         metrics: "dict | Callable[[], dict] | None" = None,
@@ -1236,8 +1228,15 @@ class VersionedParquetTable:
         ``partitions`` for ``df``'s files; every other partition is
         carried by reference. This is the engine's MERGE rewrite
         primitive — cost proportional to touched data, not table size.
-        ``merge_schema`` widens the committed schema with ``df``'s new
-        nullable columns (untouched partitions read them as NULL).
+        ``merge_schema`` widens the committed schema with the new
+        nullable columns of ``df`` and ``adds`` (untouched partitions
+        read them as NULL).
+
+        ``adds`` appends new rows, in any partition, in the SAME commit
+        (like :meth:`remove_rows`'s): one Spark write covers both
+        sides, so the scheduler overlaps them, and a reader sees the
+        rewrite and the appended rows together or not at all. Only
+        ``df`` must stay inside ``partitions``.
 
         Concurrency (Delta's logical conflict rules at partition
         granularity): on a version collision the commit REBASES when
@@ -1246,7 +1245,7 @@ class VersionedParquetTable:
         SCD2 merges for different days, or an unrelated append, land
         concurrently. Any overlap or metadata change is a hard
         conflict (the replacement was computed from a stale read of
-        exactly those partitions).
+        exactly those partitions). ``adds`` rebase like a blind append.
         """
         m = self._current()
         if txn is not None:
@@ -1254,42 +1253,43 @@ class VersionedParquetTable:
             if applied is not None and applied >= txn[1]:
                 return m["version"]
         pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        if merge_schema:
-            have = {f.name for f in schema.fields}
-            retired = set(m.get("retired_physical", [])) | set(
-                (m.get("column_mapping") or {}).values()
-            )
-            for f in df.schema.fields:
-                if f.name not in have:
-                    if f.name in retired:
-                        raise ValueError(
-                            f"cannot add column {f.name}: live files hold "
-                            "data under that physical name (dropped or "
-                            "renamed-away column) — rewrite the table first"
-                        )
-                    schema = schema.add(f.name, f.dataType, True)
+        schema = _table_schema(m, df, adds) if merge_schema else _table_schema(m)
         touched = {tuple(sorted(p.items())) for p in partitions}
         cons = m.get("constraints") or {}
-        ident_assigned = any(
-            c not in df.columns for c in (m.get("identity_cols") or {})
-        )
+        ident = m.get("identity_cols") or {}
+        gen = m.get("generated_cols")
+        data, side_col, write_schema = self._apply_generated(df, gen), None, schema
+        if adds is not None:
+            # identity values must come from ONE plan to stay unique
+            if any((c in df.columns) != (c in adds.columns) for c in ident):
+                raise ValueError(
+                    "df and adds must both carry or both omit each "
+                    f"identity column {sorted(ident)}"
+                )
+            side_col = "__side"
+            data = data.withColumn(side_col, F.lit("replace")).unionByName(
+                self._apply_generated(adds, gen).withColumn(side_col, F.lit("add")),
+                allowMissingColumns=True,
+            )
+            write_schema = T.StructType(
+                [*schema.fields, T.StructField(side_col, T.StringType())]
+            )
+        ident_assigned = any(c not in data.columns for c in ident)
         new_files = self._write_files(
-            _align(
-                self._apply_identity(
-                    self._apply_generated(df, m.get("generated_cols")),
-                    m.get("identity_cols"),
-                ),
-                schema,
-            ),
+            _align(self._apply_identity(data, ident), write_schema),
             pc,
             cons,
-            generated=m.get("generated_cols"),
+            generated=gen,
             mapping=m.get("column_mapping"),
             layout_ready=layout_ready,
+            side_col=side_col,
         )
+        added, replaced = [], []
+        for e in new_files:
+            is_add = os.path.basename(e.path).startswith("add-")
+            (added if is_add else replaced).append(e)
         stray = [
-            e for e in new_files if tuple(sorted(e.partition.items())) not in touched
+            e for e in replaced if tuple(sorted(e.partition.items())) not in touched
         ]
         if stray:
             raise ValueError(
@@ -1330,6 +1330,8 @@ class VersionedParquetTable:
                     # skips them
                     data_change=operation not in ("COMPACT", "ZORDER"),
                 )
+                if added:
+                    self._maybe_auto_compact(added)
                 return v
             except RuntimeError:  # lost the version race — try to rebase
                 m2 = self._current()
@@ -1373,11 +1375,7 @@ class VersionedParquetTable:
                     ) from None
                 if m2["schema"] != m["schema"]:
                     # merge_schema rebase: re-union onto the winner's schema
-                    schema = T.StructType.fromJson(json.loads(m2["schema"]))
-                    have = {f.name for f in schema.fields}
-                    for f in df.schema.fields:
-                        if f.name not in have:
-                            schema = schema.add(f.name, f.dataType, True)
+                    schema = _table_schema(m2, df, adds)
                 m = m2
         raise RuntimeError(
             f"partition rewrite of {self.path} lost 10 optimistic commit races"
@@ -2152,6 +2150,7 @@ class VersionedParquetTable:
         *,
         adds: DataFrame | None = None,
         operation: str = "DELETE_ROWS",
+        merge_schema: bool = False,
         metrics: "dict | Callable[[], dict] | None" = None,
         cdc_files: list[str] | None = None,
     ) -> int:
@@ -2166,13 +2165,16 @@ class VersionedParquetTable:
         O(changed rows) commit. At 100 TB closing 10 keys in a 1 TB
         day-partition writes 10 rows + a KB-sized sidecar, not the day.
 
+        ``merge_schema`` widens the committed schema with the new
+        nullable columns of ``adds``.
+
         Read cost until compaction: scans of DV'd files pay a broadcast
         anti-join against the (tiny) sidecars; ``compact()`` rewrites
         DV'd partitions and clears them.
         """
         m = self._current()
         pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        schema = _table_schema(m, adds) if merge_schema else _table_schema(m)
         cons = m.get("constraints") or {}
         # per-file dead counts: bounded by files touched, driver-safe
         per_file = {
@@ -2270,6 +2272,8 @@ class VersionedParquetTable:
             # later assignment would reuse their ids
             identity_cols=self._identity_bump(m, new_files),
         )
+        if new_files:
+            self._maybe_auto_compact(new_files)
         return v
 
     def compact(
@@ -3368,6 +3372,34 @@ def _filter_expr(col: str, op: str, value):
     if op == "not_null":
         return c.isNotNull()
     raise ValueError(f"unknown filter op {op!r}")
+
+
+def _table_schema(m: dict, *dfs: "DataFrame | None") -> T.StructType:
+    """The commit record ``m``'s schema, widened (``mergeSchema``) with
+    every column of ``dfs`` it lacks as a nullable field; old files
+    read the new columns as NULL. Blocked names: dropped-column
+    tombstones AND the live physical slots of renamed columns — a new
+    logical column under either would collide with on-disk data."""
+    schema = T.StructType.fromJson(json.loads(m["schema"]))
+    have = {f.name for f in schema.fields}
+    retired = set(m.get("retired_physical", [])) | set(
+        (m.get("column_mapping") or {}).values()
+    )
+    for df in dfs:
+        if df is None:
+            continue
+        for f in df.schema.fields:
+            if f.name in have:
+                continue
+            if f.name in retired:
+                raise ValueError(
+                    f"cannot add column {f.name}: live files hold "
+                    "data under that physical name (dropped or "
+                    "renamed-away column) — rewrite the table first"
+                )
+            schema = schema.add(f.name, f.dataType, True)
+            have.add(f.name)
+    return schema
 
 
 def _align(df: DataFrame, schema: T.StructType) -> DataFrame:

@@ -120,7 +120,6 @@ _SLOW_TESTS = {
     "test_scd2_dv_close.py::test_dv_close_idempotent_rerun",
     "test_scd2_dv_close.py::test_dv_close_then_compact_clears",
     "test_scd2_pipeline.py::test_late_rerun_idempotent",
-    "test_scd2_pipeline.py::test_overlapped_phase_b_matches_serialized_merge",
     "test_scd2_pipeline.py::test_skew_preflight_split_matches_plain_merge",
     "test_scd2_pipeline.py::test_vtable_check_constraints",
     "test_scd2_pipeline.py::test_vtable_generic_upsert",

@@ -122,11 +122,16 @@ def test_check_invariants_flags_violations(spark):
                 valid_to=ts("9999-12-31T00:00:00"), is_current=True),
             Row(k="Y", valid_from=ts("2023-01-05T00:00:00"),
                 valid_to=ts("9999-12-31T00:00:00"), is_current=True),
+            # closed with no current successor for k=Z
+            Row(k="Z", valid_from=ts("2023-01-01T00:00:00"),
+                valid_to=ts("2023-01-02T00:00:00"), is_current=False),
         ]
     )
     v = scd2.check_invariants(bad, "k")
-    kinds = {r.violation for r in v.collect()}
-    assert "overlap" in kinds and "multi_current" in kinds
+    kinds = {(r.k, r.violation) for r in v.collect()}
+    assert ("X", "overlap") in kinds and ("Y", "multi_current") in kinds
+    assert ("Z", "no_current") in kinds
+    assert not {k for k, kind in kinds if kind == "no_current"} - {"Z"}
 
 
 def test_asof_join_forward_inclusive_strict_and_ties(spark):

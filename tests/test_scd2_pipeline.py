@@ -9,6 +9,7 @@ the reference only wrote down (notes.md:132-134).
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
 
 import pytest
@@ -168,8 +169,9 @@ def test_multi_key_and_partition_pruned_close(spark, table_path):
     b2 = spark.createDataFrame([ev("A", "2023-03-01T10:00:00", "Signed")], BATCH_SCHEMA)
     run_scd2_batch(spark, SPEC, b2, table_path, batch_id="b2")
     t = VersionedParquetTable(spark, table_path)
-    close_commit = [h for h in t.history() if h["operation"] == "SCD2_CLOSE"][0]
-    assert close_commit["metrics"]["n_closed"] == 1
+    merge_commit = [h for h in t.history() if h["operation"] == "SCD2_MERGE"][0]
+    assert merge_commit["metrics"]["n_closed"] == 1
+    assert merge_commit["metrics"]["n_inserted"] == 1
     rows = {(r.contract, r.is_current) for r in t.read().collect()}
     assert (("A", False)) in rows and (("A", True)) in rows and (("B", True)) in rows
 
@@ -189,7 +191,7 @@ def test_vtable_time_travel_and_history(spark, table_path):
     assert t.read(0).count() == 1      # versionAsOf 0
     assert t.read().count() == 2
     ops = [h["operation"] for h in t.history()]
-    assert ops[-1] == "CREATE" and "SCD2_CLOSE" in ops and "APPEND" in ops
+    assert ops == ["SCD2_MERGE", "CREATE"]  # closes + inserts: one version
 
 
 REBUILD_SPEC = SCD2Spec(
@@ -333,12 +335,13 @@ def test_soft_delete_tombstone(spark, table_path):
     assert rows[2].is_current and not rows[2].deleted
 
 
-def test_merge_schema_evolution_new_tracked_column(spark, table_path):
+@pytest.mark.parametrize("close_mode", ["rewrite", "dv"])
+def test_merge_schema_evolution_new_tracked_column(spark, table_path, close_mode):
     # notes.md:107-108: schema evolution inside the merge itself — a
     # batch carries a new column; when tracked, NULL→value change-detects
     spec1 = SCD2Spec(
         key_cols=("contract",), event_ts_col="event_time",
-        tracked_cols=("status",), evolve_schema=True,
+        tracked_cols=("status",), evolve_schema=True, close_mode=close_mode,
     )
     run_scd2_batch(
         spark, spec1,
@@ -348,6 +351,7 @@ def test_merge_schema_evolution_new_tracked_column(spark, table_path):
     spec2 = SCD2Spec(
         key_cols=("contract",), event_ts_col="event_time",
         tracked_cols=("status", "risk_score"), evolve_schema=True,
+        close_mode=close_mode,
     )
     b2 = spark.createDataFrame(
         [("A", ts("2023-01-15T00:00:00"), "Draft", None, 0, 0.7)],
@@ -763,8 +767,6 @@ def test_skew_preflight_split_matches_plain_merge(spark, tmp_path):
     Key HOT emits 600 events (one changing per hour) while 50 other
     keys emit 2 each — the single-hot-key shape AQE's skew-join cannot
     spread."""
-    import dataclasses
-
     def batch(n_hot=600):
         rows = []
         for i in range(n_hot):
@@ -875,8 +877,6 @@ def test_spec_rejects_unknown_enum_values():
     """A typo like skew_policy='Auto' or 'none' must fail at spec
     construction, not silently take the auto-threshold branch
     (round-9 advice)."""
-    import dataclasses
-
     for field, bad in [
         ("skew_policy", "Auto"),
         ("skew_policy", "none"),
@@ -888,75 +888,100 @@ def test_spec_rejects_unknown_enum_values():
             dataclasses.replace(SPEC, **{field: bad})
 
 
-def test_overlapped_phase_b_matches_serialized_merge(spark, tmp_path):
-    """The Phase-B compute runs CONCURRENTLY with Phase A's write
-    (round-10 optimization, guide §2.6), with its idempotency anti-join
-    planned against the pinned pre-A manifest version. Equivalence rests
-    on Phase A never changing a (key, valid_from) pair; prove it by
-    running the same two batches through the overlapped merge and a
-    serialized one (synchronous executor monkeypatch — same code path,
-    overlap removed) and comparing full version histories row-for-row.
-    The batch mixes the racy ingredients: closes and inserts in the SAME
-    partition, an idempotent replayed event, and a brand-new key."""
-    import concurrent.futures as cf
+def _history(spark, path):
+    cols = ["contract", "valid_from", "valid_to", "is_current",
+            "status", "closed_by_batch"]
+    return sorted(
+        tuple(None if r[c] is None else str(r[c]) for c in cols)
+        for r in _read(spark, path).select(*cols).collect()
+    )
 
-    class _SyncFuture:
-        def __init__(self, v):
-            self._v = v
 
-        def result(self):
-            return self._v
+# b1 opens A and B; b2 closes and inserts for A and B in the SAME
+# partition, replays A's b1 event (idempotency conflict: a no-op) and
+# opens a brand-new key C
+MERGE_B1 = [
+    ev("A", "2023-01-21T10:00:00", "Draft"),
+    ev("B", "2023-01-21T11:00:00", "Draft"),
+]
+MERGE_B2 = [
+    ev("A", "2023-01-21T10:00:00", "Draft"),
+    ev("A", "2023-01-21T15:00:00", "Active"),
+    ev("B", "2023-01-21T16:00:00", "Closed"),
+    ev("C", "2023-01-21T17:00:00", "Draft"),
+]
+MERGE_HISTORY = sorted([
+    ("A", "2023-01-21 10:00:00", "2023-01-21 15:00:00", "False", "Draft", "b2"),
+    ("A", "2023-01-21 15:00:00", "9999-12-31 00:00:00", "True", "Active", None),
+    ("B", "2023-01-21 11:00:00", "2023-01-21 16:00:00", "False", "Draft", "b2"),
+    ("B", "2023-01-21 16:00:00", "9999-12-31 00:00:00", "True", "Closed", None),
+    ("C", "2023-01-21 17:00:00", "9999-12-31 00:00:00", "True", "Draft", None),
+])
 
-    class _SyncPool:
-        def __init__(self, *a, **k):
-            pass
 
-        def submit(self, fn, *a, **k):
-            return _SyncFuture(fn(*a, **k))
+@pytest.mark.parametrize("close_mode", ["rewrite", "dv"])
+def test_merge_closes_and_inserts_in_one_version(spark, tmp_path, close_mode):
+    """Closes and inserts of one batch land in exactly one new table
+    version whose metrics carry both counts; a batch with nothing to do
+    commits nothing."""
+    spec = dataclasses.replace(SPEC, close_mode=close_mode)
+    path = str(tmp_path / "t")
+    run_scd2_batch(spark, spec, spark.createDataFrame(MERGE_B1, BATCH_SCHEMA),
+                   path, batch_id="b1")
+    t = VersionedParquetTable(spark, path)
+    v0 = t.latest_version()
+    m = run_scd2_batch(spark, spec, spark.createDataFrame(MERGE_B2, BATCH_SCHEMA),
+                       path, batch_id="b2")
+    assert (m["n_closed"], m["n_inserted"], m["n_stale"]) == (2, 3, 1)
+    assert t.latest_version() == v0 + 1
+    commit = t.history()[0]
+    assert commit["metrics"]["n_closed"] == 2
+    assert commit["metrics"]["n_inserted"] == 3
+    assert _history(spark, path) == MERGE_HISTORY
+    # replaying the batch changes nothing and commits nothing
+    m = run_scd2_batch(spark, spec, spark.createDataFrame(MERGE_B2, BATCH_SCHEMA),
+                       path, batch_id="b2_replay")
+    assert (m["n_closed"], m["n_inserted"]) == (0, 0)
+    assert t.latest_version() == v0 + 1
+    # inserts alone (a new key, no close) are one version too
+    m = run_scd2_batch(
+        spark, spec,
+        spark.createDataFrame([ev("D", "2023-01-22T09:00:00", "Draft")], BATCH_SCHEMA),
+        path, batch_id="b3",
+    )
+    assert (m["n_closed"], m["n_inserted"]) == (0, 1)
+    assert t.latest_version() == v0 + 2
+    assert len(_history(spark, path)) == len(MERGE_HISTORY) + 1
 
-        def shutdown(self, wait=True):
-            pass
 
-    b1 = [
-        ev("A", "2023-01-21T10:00:00", "Draft"),
-        ev("B", "2023-01-21T11:00:00", "Draft"),
-    ]
-    # same-day close+insert for A and B (same partition), replay of A's
-    # b1 event (idempotency conflict), new key C
-    b2 = [
-        ev("A", "2023-01-21T10:00:00", "Draft"),  # replay: no-op
-        ev("A", "2023-01-21T15:00:00", "Active"),
-        ev("B", "2023-01-21T16:00:00", "Closed"),
-        ev("C", "2023-01-21T17:00:00", "Draft"),
-    ]
-    metrics = {}
-    for variant, pool_cls in [("overlap", None), ("serial", _SyncPool)]:
-        real = cf.ThreadPoolExecutor
-        if pool_cls is not None:
-            cf.ThreadPoolExecutor = pool_cls
-        try:
-            path = str(tmp_path / f"t_{variant}")
-            run_scd2_batch(
-                spark, SPEC, spark.createDataFrame(b1, BATCH_SCHEMA), path,
-                batch_id="b1",
-            )
-            metrics[variant] = run_scd2_batch(
-                spark, SPEC, spark.createDataFrame(b2, BATCH_SCHEMA), path,
-                batch_id="b2",
-            )
-        finally:
-            cf.ThreadPoolExecutor = real
-        cols = ["contract", "valid_from", "valid_to", "is_current",
-                "status", "agent", "closed_by_batch"]
-        hist = sorted(
-            tuple(str(r[c]) for c in cols)
-            for r in _read(spark, path).select(*cols).collect()
-        )
-        if variant == "overlap":
-            overlap_hist = hist
-        else:
-            assert hist == overlap_hist
-    for k in ("n_closed", "n_inserted", "n_stale"):
-        assert metrics["overlap"][k] == metrics["serial"][k], k
-    assert metrics["overlap"]["n_closed"] == 2
-    assert metrics["overlap"]["n_inserted"] == 3
+@pytest.mark.parametrize("close_mode", ["rewrite", "dv"])
+def test_failed_merge_commit_leaves_table_untouched(
+    spark, tmp_path, monkeypatch, close_mode
+):
+    """Crash injection: the commit that would make the batch's inserted
+    rows visible fails after the close rows are written. No version may
+    land, no key may be left without a current row, and re-running the
+    batch converges to the clean history."""
+    spec = dataclasses.replace(SPEC, close_mode=close_mode)
+    path = str(tmp_path / "t")
+    run_scd2_batch(spark, spec, spark.createDataFrame(MERGE_B1, BATCH_SCHEMA),
+                   path, batch_id="b1")
+    t = VersionedParquetTable(spark, path)
+    v0 = t.latest_version()
+    real_commit = VersionedParquetTable._commit
+
+    def crash_on_insert_commit(self, version, files, schema, pc, op, *a, **kw):
+        metrics = a[0] if a else kw.get("metrics")
+        if isinstance(metrics, dict) and "n_inserted" in metrics:
+            raise OSError("injected crash before the commit")
+        return real_commit(self, version, files, schema, pc, op, *a, **kw)
+
+    monkeypatch.setattr(VersionedParquetTable, "_commit", crash_on_insert_commit)
+    b2 = spark.createDataFrame(MERGE_B2, BATCH_SCHEMA)
+    with pytest.raises(OSError, match="injected crash"):
+        run_scd2_batch(spark, spec, b2, path, batch_id="b2")
+    monkeypatch.undo()
+    assert t.latest_version() == v0
+    assert scd2.check_invariants(_read(spark, path), "contract").count() == 0
+    run_scd2_batch(spark, spec, b2, path, batch_id="b2")
+    assert _history(spark, path) == MERGE_HISTORY

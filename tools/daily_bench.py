@@ -2,8 +2,8 @@
 growing SCD2 table.
 
 The scale claim under test: per-batch merge cost is ∝ batch size, NOT
-table size (Phase A rewrites only the partitions holding changed keys'
-current rows; Phase B appends; the idempotency anti-join prunes to
+table size (the close rewrites only the partitions holding changed keys'
+current rows; inserts only add files; the idempotency anti-join prunes to
 key/valid_from columns). A growing table with flat per-batch times is
 the evidence.
 

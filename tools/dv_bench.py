@@ -13,9 +13,11 @@ Usage::
 Wall-clock on local[32] NVMe is SCAN-bound — writes are nearly free
 locally, so both modes time alike and ``merge_s`` mostly shows the
 shared scan+join. The metric that transfers to a cluster (object
-store, replicated writes) is ``close_bytes_written``: rewrite mode
-re-writes every touched-partition byte per batch; dv mode writes the
-closed copies + a KB-scale sidecar. Measured (2M base, 2k closes):
+store, replicated writes) is ``commit_bytes_written``, the bytes of a
+batch's one merge commit: both modes write the same inserts, then
+rewrite mode re-writes every touched-partition byte per batch while dv
+mode writes the closed copies + a KB-scale sidecar. Measured before the
+inserts joined the close commit (close bytes only; 2M base, 2k closes):
 rewrite ≈ 60 MB/day vs dv ≈ 0.2 MB/day — a ~300x write-amplification
 gap that scales with partition fatness, while the dv read-side
 anti-join costs ~1 s per 8M scanned rows until compaction clears it.
@@ -49,12 +51,12 @@ SPEC = SCD2Spec(
 )
 
 
-def _close_commit_bytes(table, batch_id: str) -> int:
-    """Bytes physically written by the close commit of ``batch_id``:
+def _merge_commit_bytes(table, batch_id: str) -> int:
+    """Bytes physically written by the merge commit of ``batch_id``:
     data files in its ``add`` delta + any new DV sidecar."""
     total = 0
     for h in table.history():
-        if h["operation"] not in ("SCD2_CLOSE", "SCD2_CLOSE_DV"):
+        if h["operation"] not in ("SCD2_MERGE", "SCD2_MERGE_DV"):
             continue
         if h["metrics"].get("batch_id") != batch_id:
             continue
@@ -118,9 +120,9 @@ def run_mode(spark, mode: str, base_rows: int, upd_keys: int, days: int) -> dict
                 {
                     "day": day,
                     "merge_s": m.get("duration_s_merge"),
-                    "close_s": m.get("duration_s_close"),
+                    "commit_s": m.get("duration_s_commit"),
                     "n_closed": m.get("n_closed", 0),
-                    "close_bytes_written": _close_commit_bytes(
+                    "commit_bytes_written": _merge_commit_bytes(
                         VersionedParquetTable(spark, f"{d}/t"), f"day{day}"
                     ),
                 }
