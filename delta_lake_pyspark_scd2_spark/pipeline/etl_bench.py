@@ -121,7 +121,7 @@ def run_synthetic_volume_bench(
     )
 
     t = VersionedParquetTable(spark, table_path)
-    manifest = t._current()
+    manifest = t.snapshot()
     return {
         "n_rows": n_rows,
         "load_s": round(t1 - t0, 2),

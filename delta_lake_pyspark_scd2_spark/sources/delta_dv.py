@@ -19,8 +19,8 @@ Format"):
 
 The parser handles all three 32-bit container kinds (array, bitmap,
 run). The serializer emits the simplest legal encoding (no-run cookie,
-array/bitmap containers) — used by tests to build protocol-faithful
-fixtures and by any writer wanting to EXPORT deletion vectors.
+array/bitmap containers); ``VersionedParquetTable`` writes its
+deletion vectors with it.
 """
 
 from __future__ import annotations
@@ -233,22 +233,29 @@ def read_dv_positions(descriptor: dict, table_root: str, fs) -> list[int]:
     return parse_bitmap_array(data)
 
 
-def write_dv_file(positions: list[int], local_path: str) -> dict:
-    """Write a single-vector DV sidecar at ``local_path`` and return
-    the descriptor fields a writer would put in its ``add`` action
-    (storageType "p" pointing at the absolute path; callers embedding
-    it as "u" rename the file and re-derive the descriptor)."""
-    data = serialize_bitmap_array(positions)
+def write_dv_file(vectors: list[list[int]], table_root: str, fs) -> list[dict]:
+    """Write one ``deletion_vector_<uuid>.bin`` file under ``table_root``
+    holding one bitmap per entry of ``vectors`` (each at its own
+    offset, the layout PROTOCOL.md defines) and return their
+    ``storageType "u"`` descriptors, in order. ``fs`` is the fsio shim."""
+    from delta_lake_pyspark_scd2_spark.sources.fsio import join
+
+    u = _uuid.uuid4()
     blob = bytearray(b"\x01")
-    blob += struct.pack(">I", len(data))
-    blob += data
-    blob += struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)
-    with open(local_path, "wb") as fh:
-        fh.write(blob)
-    return {
-        "storageType": "p",
-        "pathOrInlineDv": local_path,
-        "offset": 1,
-        "sizeInBytes": len(data),
-        "cardinality": len(set(positions)),
-    }
+    out = []
+    for positions in vectors:
+        data = serialize_bitmap_array(positions)
+        out.append(
+            {
+                "storageType": "u",
+                "pathOrInlineDv": z85_encode(u.bytes),
+                "offset": len(blob),
+                "sizeInBytes": len(data),
+                "cardinality": len(set(positions)),
+            }
+        )
+        blob += struct.pack(">I", len(data))
+        blob += data
+        blob += struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)
+    fs.put_if_absent(join(table_root, f"deletion_vector_{u}.bin"), bytes(blob))
+    return out

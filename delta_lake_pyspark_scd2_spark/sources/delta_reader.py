@@ -1,61 +1,63 @@
-"""Read-only Delta Lake table reader — no delta-spark required.
+"""Delta Lake log replay and snapshot scan — no delta-spark required.
 
-The reference's storage layer IS Delta (its tables live as parquet +
-``_delta_log`` JSON commits, e.g.
-``/root/reference/data/landing_test/header/_delta_log/...``; round-1
-VERDICT "What's missing" #2: a real user switching engines brings
-existing Delta tables with them). delta-spark is absent in this
-environment, but the Delta *transaction-log protocol* is a public,
-documented format (github.com/delta-io/delta PROTOCOL.md): newline-
-delimited JSON actions (``metaData`` / ``add`` / ``remove`` /
-``protocol``) per commit, with an optional parquet **checkpoint**
-holding the compacted state every N commits. Replaying it needs no
-library — just JSON + parquet.
+The reference's storage layer IS Delta: parquet files plus a
+``_delta_log`` of JSON commits (PAPER.md §1.1). delta-spark is absent
+in this environment, but the Delta *transaction-log protocol* is a
+public, documented format (github.com/delta-io/delta PROTOCOL.md):
+newline-delimited JSON actions (``protocol`` / ``metaData`` / ``add`` /
+``remove`` / ``txn`` / ``cdc`` / ``commitInfo``) per commit, with a
+parquet **checkpoint** holding the compacted state every N commits.
+Replaying it needs no library — just JSON + parquet.
+
+This module holds the one replay (:meth:`DeltaTableReader.snapshot`)
+and the one scan (:func:`scan`) of the package:
+``VersionedParquetTable`` (``vtable.py``) reads and writes its tables
+through them, and :class:`DeltaTableReader` is the read-only view of
+any Delta table, whoever wrote it.
 
 Supported:
   * snapshot reads at latest or any retained version (time travel);
   * partitioned tables (partition values come from the log, typed via
     the table schema — Delta schemaString IS Spark's StructType JSON);
-  * parquet checkpoints + incremental JSON tail (``_last_checkpoint``);
+  * parquet checkpoints + incremental JSON tail;
   * history() from commitInfo actions;
   * **deletion vectors** (``add.deletionVector``): Z85 + roaring-
-    bitmap sidecars decoded per the protocol (``delta_dv.py``), dead
-    rows anti-joined out by ``_metadata.row_index`` — merge-on-read
-    tables read exactly;
+    bitmap files decoded per the protocol (``delta_dv.py``), dead
+    rows anti-joined out by ``_metadata.row_index``;
   * **column mapping, name mode**: files are scanned under each
     column's ``delta.columnMapping.physicalName`` and aliased back to
-    logical names (renamed/dropped-column tables read correctly);
+    logical names;
   * **column mapping, id mode**: parquet columns matched by field id —
     each read-schema field carries ``parquet.field.id`` metadata
     (from ``delta.columnMapping.id``) and Spark's native
-    ``fieldId.read`` resolver does the matching, the same mechanism
-    delta-spark uses.
+    ``fieldId.read`` resolver does the matching.
 
 Rejected explicitly (conservative checks, never silent corruption):
-  * protocol ``minReaderVersion`` > 3 or reader features beyond
-    deletionVectors / columnMapping / timestampNtz / v2Checkpoint-less
-    reads.
+protocol ``minReaderVersion`` > 3 or reader features beyond
+deletionVectors / columnMapping / timestampNtz.
 
-All filesystem access (log listing, commit/checkpoint reads, DV
-sidecar bytes) goes through the Hadoop FileSystem shim
-(``sources/fsio.py``), so a table on ``file:``, HDFS, ``s3a://`` or
-``abfss://`` reads identically — the same property the SCD2 sidecars
-already have. The data scan itself is a plain Spark partitioned-
-parquet read: Catalyst pushdown and partition pruning apply unchanged.
+All log access (listing, commit/checkpoint reads, DV bytes) goes
+through the Hadoop FileSystem shim (``sources/fsio.py``), so a table on
+``file:``, HDFS, ``s3a://`` or ``abfss://`` reads identically. The data
+scan itself is a plain Spark partitioned-parquet read: Catalyst
+pushdown and partition pruning apply unchanged.
 
 Scale: snapshot reconstruction is O(#actions) driver-side JSON work on
 the *tail* since the newest checkpoint (Delta's own design). DV
 bitmaps are decoded driver-side and shipped as a (file, position)
 DataFrame for the anti-join — cost ∝ deleted-rows-since-compaction
-(the same bound Delta accepts for its DV broadcast); a table carrying
-billions of undeleted tombstones wants OPTIMIZE first, there as here.
+(the same bound Delta accepts for its DV broadcast).
 """
 
 from __future__ import annotations
 
 import io
 import json
-from dataclasses import dataclass, field
+import os
+import posixpath
+from dataclasses import dataclass
+from functools import cached_property
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,17 +78,39 @@ _SUPPORTED_READER_FEATURES = {
 _PHYS_NAME_KEY = "delta.columnMapping.physicalName"
 
 
+def _as_dict(v) -> dict:
+    """Checkpoint MAP columns come back from pyarrow as [(k, v), ...]."""
+    return v if isinstance(v, dict) else dict(v or [])
+
+
 @dataclass
 class DeltaSnapshot:
+    """Table state at ``version``: the protocol and metaData actions in
+    effect, every live ``add`` action (keyed by its log path, i.e.
+    URL-encoded and relative to the table root) and the ``txn``
+    watermarks (appId → version)."""
+
     version: int
-    schema: T.StructType
-    partition_columns: list[str]
-    #: path -> partitionValues (relative path, URL-decoded)
-    files: dict[str, dict[str, str | None]]
-    #: path -> add.deletionVector descriptor (only DV-carrying files)
-    deletion_vectors: dict[str, dict] = field(default_factory=dict)
-    #: "none" | "name" | "id"
-    column_mapping_mode: str = "none"
+    protocol: dict
+    metadata: dict
+    adds: dict[str, dict]
+    txns: dict[str, int]
+
+    @cached_property
+    def schema(self) -> T.StructType:
+        return T.StructType.fromJson(json.loads(self.metadata["schemaString"]))
+
+    @property
+    def partition_columns(self) -> list[str]:
+        return list(self.metadata.get("partitionColumns") or [])
+
+    @property
+    def configuration(self) -> dict[str, str]:
+        return dict(self.metadata.get("configuration") or {})
+
+    @property
+    def column_mapping_mode(self) -> str:
+        return self.configuration.get("delta.columnMapping.mode", "none")
 
     def physical_name(self, logical: str) -> str:
         if self.column_mapping_mode == "none":
@@ -97,10 +121,60 @@ class DeltaSnapshot:
         return logical
 
 
+def _apply_actions(state: dict, actions) -> None:
+    """Fold one commit's (or one checkpoint's) actions into ``state``.
+    Removes apply before adds: a commit that replaces a file's deletion
+    vector removes and re-adds the same path, in either order."""
+    adds = []
+    for action in actions:
+        if "add" in action:
+            a = dict(action["add"])
+            a["partitionValues"] = _as_dict(a.get("partitionValues"))
+            dv = a.get("deletionVector")
+            if dv:
+                a["deletionVector"] = {
+                    k: v for k, v in _as_dict(dv).items() if v is not None
+                }
+            else:
+                a.pop("deletionVector", None)
+            adds.append(a)
+        elif "remove" in action:
+            state["adds"].pop(action["remove"]["path"], None)
+        elif "metaData" in action:
+            md = dict(action["metaData"])
+            md["configuration"] = _as_dict(md.get("configuration"))
+            mode = md["configuration"].get("delta.columnMapping.mode", "none")
+            if mode not in ("none", "name", "id"):
+                raise NotImplementedError(
+                    f"Delta column mapping mode {mode!r} is not supported "
+                    "by this reader (none/name/id are)"
+                )
+            state["metadata"] = md
+        elif "protocol" in action:
+            p = action["protocol"]
+            if (p.get("minReaderVersion") or 1) > 3:
+                raise NotImplementedError(
+                    f"Delta minReaderVersion {p['minReaderVersion']} > 3"
+                )
+            unsupported = set(p.get("readerFeatures") or []) - (
+                _SUPPORTED_READER_FEATURES
+            )
+            if unsupported:
+                raise NotImplementedError(
+                    f"unsupported Delta reader features: {sorted(unsupported)}"
+                )
+            state["protocol"] = {k: v for k, v in p.items() if v is not None}
+        elif "txn" in action:
+            state["txns"][action["txn"]["appId"]] = int(action["txn"]["version"])
+        # cdc / commitInfo / domainMetadata: no snapshot effect
+    for a in adds:
+        state["adds"][a["path"]] = a
+
+
 class DeltaTableReader:
     """Snapshot/time-travel reads of a Delta table directory."""
 
-    def __init__(self, spark: SparkSession, path: str):
+    def __init__(self, spark: SparkSession | None, path: str):
         self.spark = spark
         self.path = path
         self._log = fsio.join(path, LOG_DIR)
@@ -124,14 +198,16 @@ class DeltaTableReader:
                 out.append(int(f[:-5]))
         return sorted(out)
 
+    def _checkpoint_versions(self) -> list[int]:
+        return sorted(
+            int(f.split(".")[0])
+            for f in self._fs.list_names(self._log)
+            if f.endswith(".checkpoint.parquet") and f.split(".")[0].isdigit()
+        )
+
     def _checkpoint_version_at_or_before(self, version: int) -> int | None:
-        best = None
-        for f in self._fs.list_names(self._log):
-            if f.endswith(".checkpoint.parquet") and f.split(".")[0].isdigit():
-                v = int(f.split(".")[0])
-                if v <= version and (best is None or v > best):
-                    best = v
-        return best
+        cps = [v for v in self._checkpoint_versions() if v <= version]
+        return cps[-1] if cps else None
 
     def latest_version(self) -> int:
         vs = self._commit_versions()
@@ -145,102 +221,68 @@ class DeltaTableReader:
     def _commit_file(self, version: int) -> str:
         return fsio.join(self._log, f"{version:020d}.json")
 
+    def commit_actions(self, version: int) -> list[dict]:
+        """The actions of commit ``version``, in log order."""
+        p = self._commit_file(version)
+        if not self._fs.exists(p):
+            raise FileNotFoundError(
+                f"Delta commit {version} missing (vacuumed?) in {self.path}"
+            )
+        return [
+            json.loads(line)
+            for line in self._fs.read_text(p).splitlines()
+            if line.strip()
+        ]
+
     # -- action replay -------------------------------------------------------
 
-    def _apply_action(self, state: dict, action: dict) -> None:
-        if "metaData" in action:
-            md = action["metaData"]
-            conf = md.get("configuration") or {}
-            if not isinstance(conf, dict):  # MAP round-trip (checkpoints)
-                conf = dict(conf)
-            mode = conf.get("delta.columnMapping.mode", "none")
-            if mode not in ("none", "name", "id"):
-                raise NotImplementedError(
-                    f"Delta column mapping mode {mode!r} is not supported "
-                    "by this reader (none/name/id are)"
-                )
-            state["column_mapping_mode"] = mode
-            state["schema"] = T.StructType.fromJson(json.loads(md["schemaString"]))
-            state["partition_columns"] = list(md.get("partitionColumns") or [])
-        elif "protocol" in action:
-            p = action["protocol"]
-            if p.get("minReaderVersion", 1) > 3:
-                raise NotImplementedError(
-                    f"Delta minReaderVersion {p['minReaderVersion']} > 3"
-                )
-            feats = set(p.get("readerFeatures") or [])
-            unsupported = feats - _SUPPORTED_READER_FEATURES
-            if unsupported:
-                raise NotImplementedError(
-                    f"unsupported Delta reader features: {sorted(unsupported)}"
-                )
-        elif "add" in action:
-            a = action["add"]
-            pv = a.get("partitionValues") or {}
-            if not isinstance(pv, dict):
-                # parquet checkpoints store partitionValues as a MAP;
-                # pyarrow round-trips maps as [(k, v), ...]
-                pv = dict(pv)
-            state["files"][a["path"]] = pv
-            dv = a.get("deletionVector")
-            if dv:
-                if not isinstance(dv, dict):
-                    dv = dict(dv)
-                state["dvs"][a["path"]] = dv
-            else:
-                state["dvs"].pop(a["path"], None)
-        elif "remove" in action:
-            state["files"].pop(action["remove"]["path"], None)
-            state["dvs"].pop(action["remove"]["path"], None)
-        # txn / cdc / commitInfo / domainMetadata: no snapshot effect
-
-    def _replay_checkpoint(self, state: dict, cp_version: int) -> None:
+    def checkpoint_actions(self, cp_version: int) -> list[dict]:
+        """The actions of the parquet checkpoint at ``cp_version`` (one
+        action per row, the other columns null)."""
         import pyarrow.parquet as pq
 
         cp_path = fsio.join(self._log, f"{cp_version:020d}.checkpoint.parquet")
         tbl = pq.read_table(io.BytesIO(self._fs.read_bytes(cp_path)))
-        rows = tbl.to_pylist()
-        # checkpoint rows are one-action-per-row with null other columns
-        for row in rows:
-            action = {k: v for k, v in row.items() if v is not None}
-            self._apply_action(state, action)
+        return [
+            {k: v for k, v in row.items() if v is not None}
+            for row in tbl.to_pylist()
+        ]
 
-    def snapshot(self, version: int | None = None) -> DeltaSnapshot:
+    def snapshot(
+        self, version: int | None = None, *, base: "DeltaSnapshot | None" = None
+    ) -> DeltaSnapshot:
+        """Replay the log up to ``version``: from ``base`` (an earlier
+        snapshot of this table) when given, else from the newest
+        checkpoint at or below ``version``, then the JSON commits."""
         v = self.latest_version() if version is None else version
-        state: dict = {
-            "schema": None,
-            "partition_columns": [],
-            "files": {},
-            "dvs": {},
-            "column_mapping_mode": "none",
-        }
-        cp = self._checkpoint_version_at_or_before(v)
-        start = 0
-        if cp is not None:
-            self._replay_checkpoint(state, cp)
-            start = cp + 1
-        replayed_any = cp is not None
+        if base is not None and base.version <= v:
+            state = {
+                "protocol": base.protocol,
+                "metadata": base.metadata,
+                "adds": dict(base.adds),
+                "txns": dict(base.txns),
+            }
+            start = base.version + 1
+        else:
+            state = {"protocol": {}, "metadata": None, "adds": {}, "txns": {}}
+            cp = self._checkpoint_version_at_or_before(v)
+            start = 0
+            if cp is not None:
+                _apply_actions(state, self.checkpoint_actions(cp))
+                start = cp + 1
         for cv in range(start, v + 1):
-            p = self._commit_file(cv)
-            if not self._fs.exists(p):
+            try:
+                actions = self.commit_actions(cv)
+            except FileNotFoundError:
                 raise FileNotFoundError(
                     f"Delta commit {cv} missing (vacuumed?); cannot "
                     f"reconstruct version {v} of {self.path}"
-                )
-            for line in self._fs.read_text(p).splitlines():
-                line = line.strip()
-                if line:
-                    self._apply_action(state, json.loads(line))
-            replayed_any = True
-        if not replayed_any or state["schema"] is None:
+                ) from None
+            _apply_actions(state, actions)
+        if state["metadata"] is None:
             raise ValueError(f"no metaData action found for version {v}")
         return DeltaSnapshot(
-            v,
-            state["schema"],
-            state["partition_columns"],
-            state["files"],
-            state["dvs"],
-            state["column_mapping_mode"],
+            v, state["protocol"], state["metadata"], state["adds"], state["txns"]
         )
 
     # -- reads ---------------------------------------------------------------
@@ -249,14 +291,10 @@ class DeltaTableReader:
         """Commit timestamp in epoch ms: the ``commitInfo.timestamp``
         when present, else the commit file's mtime — the same fallback
         order delta-spark uses for ``timestampAsOf`` resolution."""
-        p = self._commit_file(version)
-        for line in self._fs.read_text(p).splitlines():
-            if not line.strip():
-                continue
-            a = json.loads(line)
+        for a in self.commit_actions(version):
             if "commitInfo" in a and "timestamp" in a["commitInfo"]:
                 return int(a["commitInfo"]["timestamp"])
-        return self._fs.mtime_ms(p)
+        return self._fs.mtime_ms(self._commit_file(version))
 
     def version_at_timestamp(self, ts_ms: int) -> int:
         """Largest version committed at or before ``ts_ms`` (epoch ms) —
@@ -291,64 +329,20 @@ class DeltaTableReader:
         if timestamp_ms is not None:
             version = self.version_at_timestamp(timestamp_ms)
         snap = snapshot if snapshot is not None else self.snapshot(version)
-        if not snap.files:
-            return self.spark.createDataFrame([], snap.schema)
-        # PROTOCOL.md: add.path is the RELATIVE path, URL-encoded —
-        # decode before touching the filesystem (a partition value with
-        # a space yields %20 in the log but a literal space on disk)
-        from urllib.parse import unquote
-
-        decoded = {p: unquote(p) for p in snap.files}
-        paths = [fsio.join(self.path, dp) for dp in decoded.values()]
-        _enable_field_id_read(self.spark, snap)
-        df = self.spark.read.option("basePath", self.path).schema(
-            _physical_schema(snap)
-        ).parquet(*paths)
-        if snap.deletion_vectors:
-            df = self._apply_deletion_vectors(df, snap, decoded)
-        # physical → logical names, logical types, declared column order
-        return df.select(
-            *[
-                F.col(snap.physical_name(f.name))
-                .cast(f.dataType)
-                .alias(f.name)
-                for f in snap.schema.fields
-            ]
+        by_id = snap.column_mapping_mode == "id"
+        return scan(
+            self.spark,
+            self.path,
+            # PROTOCOL.md: add.path is the RELATIVE path, URL-encoded —
+            # decode before touching the filesystem (a partition value
+            # with a space yields %20 in the log but a space on disk)
+            [(unquote(p), a.get("deletionVector")) for p, a in snap.adds.items()],
+            snap.schema,
+            snap.partition_columns,
+            physical={f.name: snap.physical_name(f.name) for f in snap.schema.fields},
+            field_ids=_field_ids(snap.schema) if by_id else None,
+            fs=self._fs,
         )
-
-    def _apply_deletion_vectors(
-        self, df: DataFrame, snap: DeltaSnapshot, decoded: dict[str, str]
-    ) -> DataFrame:
-        """Anti-join each DV'd file's dead positions out by
-        ``(_metadata file path relative to the table root, row_index)``
-        — the vtable ``_scan`` pattern applied to Delta's descriptors."""
-        from delta_lake_pyspark_scd2_spark.sources.delta_dv import (
-            read_dv_positions,
-        )
-
-        dead_rows = []
-        for p, descriptor in snap.deletion_vectors.items():
-            rel = decoded[p]
-            for pos in read_dv_positions(descriptor, self.path, self._fs):
-                dead_rows.append((rel, pos))
-        if not dead_rows:
-            return df
-        root = fsio.scan_root(self.path)
-        rel_col = F.expr(
-            f"substring(regexp_replace(_metadata.file_path, "
-            f"'^[a-zA-Z0-9+.-]+:/+', '/'), {len(root) + 2})"
-        )
-        dead = self.spark.createDataFrame(
-            dead_rows, "__file string, __pos long"
-        )
-        df = df.select(
-            "*",
-            rel_col.alias("__file"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
-        return df.join(
-            F.broadcast(dead), on=["__file", "__pos"], how="left_anti"
-        ).drop("__file", "__pos")
 
     def table_changes(
         self, version_from: int, version_to: int | None = None
@@ -361,93 +355,134 @@ class DeltaTableReader:
         analogue)."""
         out = []
         for v in reversed(self._commit_versions()):
-            for line in self._fs.read_text(self._commit_file(v)).splitlines():
-                if not line.strip():
-                    continue
-                a = json.loads(line)
+            for a in self.commit_actions(v):
                 if "commitInfo" in a:
                     out.append({"version": v, **a["commitInfo"]})
                     break
         return out
 
 
-def _enable_field_id_read(spark: SparkSession, snap: DeltaSnapshot) -> None:
-    """id-mode tables resolve parquet columns by field id; Spark's
-    resolver only engages when this conf is on (the read schema's
-    ``parquet.field.id`` metadata then drives the match). Left enabled:
-    it is a no-op for schemas without field-id metadata — the same
-    sticky requirement delta-spark documents for id-mapped tables."""
-    if snap.column_mapping_mode == "id":
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+def _field_ids(schema: T.StructType) -> dict[str, int]:
+    out = {}
+    for f in schema.fields:
+        fid = (f.metadata or {}).get("delta.columnMapping.id")
+        if fid is None:
+            raise ValueError(
+                f"column {f.name!r}: id-mode column mapping requires "
+                "delta.columnMapping.id metadata on every field"
+            )
+        out[f.name] = int(fid)
+    return out
 
 
-def _physical_schema(snap: DeltaSnapshot) -> T.StructType:
-    """Schema for the parquet scan: data columns under their PHYSICAL
-    names as declared, partition columns as strings (they live in
-    directory names — also physical; the caller casts and renames
-    back).
-
-    Under ``id`` mode each field carries ``parquet.field.id`` metadata
-    (copied from ``delta.columnMapping.id``) so Spark's native
-    field-id resolution (``spark.sql.parquet.fieldId.read.enabled``)
-    matches parquet columns by id, exactly how delta-spark reads
-    id-mapped tables — names in the footer become irrelevant."""
-    fields = []
-    pc = set(snap.partition_columns)
-    by_id = snap.column_mapping_mode == "id"
-    for f in snap.schema.fields:
-        phys = snap.physical_name(f.name)
-        meta = None
-        if by_id:
-            fid = (f.metadata or {}).get("delta.columnMapping.id")
-            if fid is None:
-                raise ValueError(
-                    f"column {f.name!r}: id-mode column mapping requires "
-                    "delta.columnMapping.id metadata on every field"
-                )
-            meta = {"parquet.field.id": int(fid)}
-        if f.name in pc:
-            fields.append(T.StructField(phys, T.StringType(), True, meta))
-        else:
-            fields.append(T.StructField(phys, f.dataType, f.nullable, meta))
-    return T.StructType(fields)
-
-
-def import_delta_as_vtable(
+def scan(
     spark: SparkSession,
-    delta_path: str,
-    dest_path: str,
+    root: str,
+    files: "list[tuple[str, dict | None]]",
+    schema: T.StructType,
+    partition_cols: list[str],
     *,
-    version: int | None = None,
-):
-    """Migration path: materialize a real Delta table's snapshot as a
-    :class:`VersionedParquetTable` at ``dest_path``, preserving the
-    partition layout — so a user with existing Delta tables can adopt
-    this engine's storage (and its merge/CDC/maintenance surface)
-    with one call. The inverse of
-    ``delta_writer.export_vtable_as_delta``.
+    physical: dict[str, str] | None = None,
+    field_ids: dict[str, int] | None = None,
+    with_position: bool = False,
+    rel_base: str = "",
+    fs=None,
+) -> DataFrame:
+    """One scan over ``files`` — ``(path relative to root, deletion
+    vector descriptor or None)`` pairs — with deletion vectors applied,
+    in ``schema``'s logical names, types and column order.
 
-    One distributed read → one partitioned write; cost ∝ snapshot
-    size. History does NOT carry over (the import is a fresh v0 —
-    the same contract as Delta's own SHALLOW CLONE across formats).
-    """
-    from delta_lake_pyspark_scd2_spark.sources.vtable import (
-        VersionedParquetTable,
+    Files are read under their ``physical`` names (logical → physical;
+    column mapping) or, with ``field_ids``, matched by parquet field id.
+    Partition columns come from hive-style directories, typed by
+    ``schema``. ``with_position`` keeps ``__file`` (the path relative
+    to ``rel_base``; files outside it get a ``../`` prefix) and
+    ``__pos`` (``_metadata.row_index``), so callers can build new
+    deletion vectors from what they read. Files without deletion
+    vectors take the plain scan with no extra columns or joins."""
+    physical = {k: v for k, v in (physical or {}).items() if k != v}
+    extras = ["__file", "__pos"]
+    if not files:
+        out = T.StructType([T.StructField(f.name, f.dataType, f.nullable) for f in schema.fields])
+        if with_position:
+            out = out.add("__file", T.StringType()).add("__pos", T.LongType())
+        return spark.createDataFrame([], out)
+    if field_ids:
+        # Spark's resolver honours parquet.field.id only with this conf;
+        # it is a no-op for schemas without field-id metadata
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    read_schema = T.StructType(
+        [
+            T.StructField(
+                physical.get(f.name, f.name),
+                f.dataType,
+                f.nullable,
+                {"parquet.field.id": field_ids[f.name]}
+                if field_ids and f.name in field_ids
+                else None,
+            )
+            for f in schema.fields
+        ]
     )
+    lp = fsio.local_path(root)
+    if lp is not None:
+        root = os.path.abspath(lp)
+    dead = []
+    for p, dv in files:
+        if dv:
+            from delta_lake_pyspark_scd2_spark.sources.delta_dv import (
+                read_dv_positions,
+            )
 
-    reader = DeltaTableReader(spark, delta_path)
-    snap = reader.snapshot(version)
-    df = reader.read(snapshot=snap)  # one log replay, not two
-    return VersionedParquetTable.create(
-        spark,
-        df,
-        dest_path,
-        partition_cols=list(snap.partition_columns),
-        metrics={
-            "imported_from": delta_path,
-            "source_version": snap.version,
-        },
+            key = posixpath.relpath(p, rel_base) if rel_base else p
+            fs = fs or fsio.get_fs(root, spark)
+            dead.extend((key, pos) for pos in read_dv_positions(dv, root, fs))
+    positions = with_position or bool(dead)
+    # _metadata.file_path is a URI: strip the scheme, percent-decode
+    # (a literal '+' stays '+'), then the root prefix
+    rel = F.expr(
+        "substring(url_decode(replace(regexp_replace(_metadata.file_path, "
+        f"'^[a-zA-Z0-9+.-]+:/+', '/'), '+', '%2B')), "
+        f"{len(fsio.scan_root(root)) + 2})"
     )
+    if rel_base:
+        rel = F.when(
+            rel.startswith(rel_base + "/"), F.substring(rel, len(rel_base) + 2, 1 << 30)
+        ).otherwise(F.concat(F.lit("../"), rel))
+    # partition discovery needs one basePath per directory prefix above
+    # the partition directories (one group for tables this engine wrote)
+    depth = len(partition_cols) + 1
+    groups: dict[str, list[str]] = {}
+    for p, _ in files:
+        groups.setdefault("/".join(p.split("/")[:-depth]), []).append(p)
+    df = None
+    for base, ps in groups.items():
+        part = (
+            spark.read.option("basePath", fsio.join(root, base) if base else root)
+            .schema(read_schema)
+            .parquet(*[fsio.join(root, p) for p in ps])
+        )
+        if positions:
+            part = part.select(
+                "*", rel.alias("__file"), F.col("_metadata.row_index").alias("__pos")
+            )
+        df = part if df is None else df.unionByName(part)
+    if dead:
+        df = df.join(
+            F.broadcast(spark.createDataFrame(dead, "__file string, __pos long")),
+            on=extras,
+            how="left_anti",
+        )
+    if positions and not with_position:
+        df = df.drop(*extras)
+    if physical or field_ids:
+        # physical → logical, AFTER the _metadata-derived columns (a
+        # projection would sever access to the scan's _metadata)
+        df = df.select(
+            *[F.col(physical.get(f.name, f.name)).alias(f.name) for f in schema.fields],
+            *(extras if with_position else []),
+        )
+    return df
 
 
 def _cdf_changes(
@@ -463,6 +498,8 @@ def _cdf_changes(
       1. ``cdc`` actions (the writer ran with
          ``delta.enableChangeDataFeed``): their ``_change_data``
          parquet files are read as-is — full pre/post-image fidelity.
+         Partition columns come from the action's ``partitionValues``
+         when it carries them, else from the file.
       2. pure-append commits (``add`` with ``dataChange`` and no
          ``remove``): the added files ARE the inserts. Version 0's
          snapshot arrives this way, matching ``startingVersion=0``.
@@ -480,25 +517,23 @@ def _cdf_changes(
     spark = reader.spark
     hi = reader.latest_version() if version_to is None else version_to
     snap = reader.snapshot(hi)
-    from urllib.parse import unquote
+    schema = snap.schema
+    physical = {f.name: snap.physical_name(f.name) for f in schema.fields}
+    logical_of = {p: n for n, p in physical.items()}
+    ids = _field_ids(schema) if snap.column_mapping_mode == "id" else None
+    names = [f.name for f in schema.fields]
 
-    phys = _physical_schema(snap)
-    data_cols = [
-        F.col(snap.physical_name(f.name)).cast(f.dataType).alias(f.name)
-        for f in snap.schema.fields
-    ]
-    pcols = set(snap.partition_columns)
+    def _scan(paths: list[str], sch: T.StructType, pc: list[str]) -> DataFrame:
+        return scan(
+            spark, reader.path, [(unquote(p), None) for p in paths], sch, pc,
+            physical=physical, field_ids=ids, fs=reader._fs,
+        )
+
     pieces = []
-
-    def _read_files(paths: list[str], sch: T.StructType) -> DataFrame:
-        full = [fsio.join(reader.path, unquote(p)) for p in paths]
-        _enable_field_id_read(spark, snap)
-        return spark.read.option("basePath", reader.path).schema(sch).parquet(*full)
-
     for v in range(version_from, hi + 1):
-        cdc, adds, removes = [], [], []
-        commit_path = reader._commit_file(v)
-        if not reader._fs.exists(commit_path):
+        try:
+            actions = reader.commit_actions(v)
+        except FileNotFoundError:
             # the log was checkpointed + cleaned past this version:
             # its row-level changes are GONE. Raising matches Delta's
             # behavior for startingVersion outside the retained log —
@@ -507,63 +542,37 @@ def _cdf_changes(
                 f"Delta commit {v} is no longer in the log (checkpoint "
                 "cleanup); bootstrap from a snapshot read instead of "
                 "replaying changes from that version"
-            )
-        for line in reader._fs.read_text(commit_path).splitlines():
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            if "cdc" in a:
-                cdc.append(a["cdc"])
-            elif "add" in a and a["add"].get("dataChange", True):
-                adds.append(a["add"])
-            elif "remove" in a and a["remove"].get("dataChange", True):
-                removes.append(a["remove"])
+            ) from None
+        cdc = [a["cdc"] for a in actions if "cdc" in a]
+        adds = [
+            a["add"] for a in actions
+            if "add" in a and a["add"].get("dataChange", True)
+        ]
+        removes = [
+            a for a in actions
+            if "remove" in a and a["remove"].get("dataChange", True)
+        ]
+        stamp = F.lit(v).cast("long").alias("_commit_version")
         if cdc:
-            # _change_data files: data columns + _change_type; partition
-            # values live in the action, grouped so each distinct
-            # partition reads once
+            # group by partition values so each distinct partition reads
+            # once; under name-mode column mapping the keys are PHYSICAL
             by_part: dict[tuple, list[str]] = {}
             for c in cdc:
-                pv = c.get("partitionValues") or {}
-                if not isinstance(pv, dict):
-                    pv = dict(pv)
-                by_part.setdefault(tuple(sorted(pv.items())), []).append(
-                    c["path"]
-                )
-            cdc_schema = T.StructType(
-                [f for f in phys.fields if f.name not in pcols]
-                + [T.StructField("_change_type", T.StringType())]
-            )
-            # under column-mapping name mode the log's cdc
-            # partitionValues keys are PHYSICAL names; resolve them to
-            # logical before the schema lookup (and inject under the
-            # physical name data_cols select by — never double-map)
-            logical_of = {
-                snap.physical_name(f.name): f.name for f in snap.schema.fields
-            }
+                pv = _as_dict(c.get("partitionValues"))
+                by_part.setdefault(tuple(sorted(pv.items())), []).append(c["path"])
             for pv_items, paths in by_part.items():
-                df = _read_files(paths, cdc_schema)
-                for k, val in pv_items:
-                    logical = logical_of.get(k, k)
-                    f = snap.schema[logical]
-                    df = df.withColumn(
-                        snap.physical_name(logical), F.lit(val).cast(f.dataType)
-                    )
-                pieces.append(
-                    df.select(
-                        *data_cols,
-                        "_change_type",
-                        F.lit(v).alias("_commit_version"),
-                    )
-                )
+                given = {logical_of.get(k, k): val for k, val in pv_items}
+                sch = T.StructType(
+                    [f for f in schema.fields if f.name not in given]
+                ).add("_change_type", T.StringType())
+                df = _scan(paths, sch, [])
+                for k, val in given.items():
+                    df = df.withColumn(k, F.lit(val).cast(schema[k].dataType))
+                pieces.append(df.select(*names, "_change_type", stamp))
         elif adds and not removes:
-            df = _read_files([a["path"] for a in adds], phys)
+            df = _scan([a["path"] for a in adds], schema, snap.partition_columns)
             pieces.append(
-                df.select(
-                    *data_cols,
-                    F.lit("insert").alias("_change_type"),
-                    F.lit(v).alias("_commit_version"),
-                )
+                df.select(*names, F.lit("insert").alias("_change_type"), stamp)
             )
         elif removes:
             raise ValueError(
@@ -575,7 +584,7 @@ def _cdf_changes(
         return spark.createDataFrame(
             [],
             T.StructType(
-                snap.schema.fields
+                [T.StructField(f.name, f.dataType, f.nullable) for f in schema.fields]
                 + [
                     T.StructField("_change_type", T.StringType()),
                     T.StructField("_commit_version", T.LongType()),
@@ -586,89 +595,3 @@ def _cdf_changes(
     for p in pieces[1:]:
         out = out.unionByName(p)
     return out
-
-
-def sync_delta_to_vtable(
-    spark: SparkSession,
-    delta_path: str,
-    dest_path: str,
-    key_cols: list[str],
-    *,
-    create_if_missing: bool = True,
-) -> dict:
-    """Continuous Delta → vtable migration: catch the replica up with
-    every Delta commit since the last sync, exactly once.
-
-    The resume cursor IS the replica's writer-transaction watermark
-    (``txnAppId = delta_sync:<source>``, ``txnVersion`` = the Delta
-    commit version) — no sidecar state, so a crash between applying
-    and recording is impossible by construction, and a re-run of an
-    already-applied commit is skipped inside the MERGE itself.
-
-    Commits apply in order: cdc commits as MERGE upsert+delete (update
-    postimages and inserts win per key; deletes drop keys), append
-    commits as inserts. Bootstrap: with no replica yet, ONE snapshot
-    read at the source head creates it — a single distributed scan
-    regardless of commit count, immune to checkpoint log-cleanup
-    having dropped early commit JSONs (a change replay from a
-    vacuumed version raises instead of silently under-filling). After
-    bootstrap, cost per call ∝ changed rows since the last sync.
-
-    Zero-downtime switch-over story: keep the reference's Delta
-    writers running, sync on a schedule, then cut readers over to the
-    vtable (gaining its merge/CDC/maintenance surface) and retire the
-    Delta side.
-    """
-    from delta_lake_pyspark_scd2_spark.sources.vtable import (
-        VersionedParquetTable,
-    )
-
-    reader = DeltaTableReader(spark, delta_path)
-    app = f"delta_sync:{delta_path}"
-    hi = reader.latest_version()
-    exists = VersionedParquetTable.is_table(dest_path)
-    if not exists and not create_if_missing:
-        raise FileNotFoundError(dest_path)
-    if not exists:
-        # bootstrap from the SNAPSHOT at head, not a change replay:
-        # one distributed read regardless of commit count, and immune
-        # to checkpoint log-cleanup having dropped early commit JSONs
-        # (table_changes raises for vacuumed versions, correctly).
-        snap = reader.snapshot(hi)
-        VersionedParquetTable.create(
-            spark,
-            reader.read(snapshot=snap),
-            dest_path,
-            partition_cols=list(snap.partition_columns),
-            txn=(app, hi),
-            metrics={"delta_sync_version": hi},
-        )
-        return {"synced_to_version": hi, "commits_applied": 1}
-    last = VersionedParquetTable(spark, dest_path).last_txn_version(app)
-    start = (last + 1) if last is not None else 0
-    applied = 0
-    for v in range(start, hi + 1):
-        ch = reader.table_changes(v, v)
-        rows = ch.filter(
-            F.col("_change_type").isin(
-                "insert", "update_postimage", "delete"
-            )
-        )
-        meta = ["_change_type", "_commit_version"]
-        ups = rows.filter(F.col("_change_type") != "delete").drop(*meta)
-        dels = (
-            rows.filter(F.col("_change_type") == "delete")
-            .select(*key_cols)
-            .distinct()
-        )
-        t = VersionedParquetTable(spark, dest_path)
-        t.upsert(
-            ups,
-            key_cols,
-            deletes=dels if not dels.isEmpty() else None,
-            operation="DELTA_SYNC",
-            metrics={"delta_sync_version": v},
-            txn=(app, v),
-        )
-        applied += 1
-    return {"synced_to_version": hi, "commits_applied": applied}

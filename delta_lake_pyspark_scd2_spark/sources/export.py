@@ -392,9 +392,11 @@ def export_token_shards(
         # once; round-10 backlog #2 — text previously crossed both the
         # (source, chunk) prefix-sum window exchange AND the shard
         # repartition). The plan table is one (source, id, shard, tok)
-        # row per doc, so the attach is gated: broadcast only when it
-        # fits comfortably (rows ≤ autoBroadcastJoinThreshold / 64B)
-        # AND (source, id) is a unique non-null key (the broadcast join
+        # row per doc, so the attach is gated: broadcast only when its
+        # estimated size fits autoBroadcastJoinThreshold — per row, the
+        # source twice (the shard label embeds it: sources can be long),
+        # the id as text and two numbers — AND (source, id) is a unique
+        # non-null key (the broadcast join
         # on the pair must be 1:1 with the window form; NULL keys take
         # the window path, whose null-safe joins keep them). Oversized
         # or degenerate inputs fall back to the full-frame prefix sum —
@@ -417,6 +419,8 @@ def export_token_shards(
                     F.col(source_col).isNull() | F.col(id_col).isNull()
                 ).cast("long")
             ).alias("nulls"),
+            F.avg(F.octet_length(F.col(source_col))).alias("source_bytes"),
+            F.avg(F.octet_length(F.col(id_col).cast("string"))).alias("id_bytes"),
         ).first()
         raw_thresh = df.sparkSession.conf.get(
             "spark.sql.autoBroadcastJoinThreshold", "10485760"
@@ -431,8 +435,9 @@ def export_token_shards(
                 bcast_bytes = int(raw_thresh)
             except ValueError:
                 bcast_bytes = 0
+        row_bytes = 2 * (gate["source_bytes"] or 0) + (gate["id_bytes"] or 0) + 16
         plan_fits = (
-            gate["n"] * 64 <= max(bcast_bytes, 0)
+            gate["n"] * row_bytes <= max(bcast_bytes, 0)
             and gate["nk"] == gate["n"]
             and not gate["nulls"]
         )

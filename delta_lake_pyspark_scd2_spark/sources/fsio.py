@@ -1,9 +1,9 @@
 """Filesystem shim for table-format metadata I/O.
 
 The SCD2 sidecars already go through the Hadoop FileSystem API
-(``pipeline/scd2_pipeline.py``); this module gives the Delta interop
-layer (``delta_reader.py`` / ``delta_writer.py``) the same property:
-every listing, read, and commit publish goes wherever Spark can reach
+(``pipeline/scd2_pipeline.py``); this module gives the transaction log
+(``delta_reader.py`` / ``vtable.py``) the same property: every log
+listing, read, and commit publish goes wherever Spark can reach
 — local paths, ``file:`` URIs, HDFS, ``s3a://``, ``abfss://`` —
 instead of ``os.listdir`` (round-2 VERDICT "What's missing" #2).
 
@@ -11,11 +11,11 @@ Two interchangeable implementations:
 
 - :class:`HadoopFS` — the real thing, backed by
   ``org.apache.hadoop.fs.FileSystem`` through the session's JVM. Used
-  whenever a SparkSession is available (always, on the read/write
-  paths — they hold a session by construction).
-- :class:`LocalFS` — pure-``os`` twin for scheme-less local paths when
-  no session exists (e.g. ``is_delta_table`` called before Spark
-  starts). Same method surface, same semantics.
+  for every non-local scheme (HDFS, object stores).
+- :class:`LocalFS` — pure-``os`` twin for local paths (scheme-less or
+  ``file:``), with or without a session (e.g. the streaming source's
+  planner has none). Same method surface, same semantics, no JVM round
+  trips.
 
 Atomic commit publish (``put_if_absent``): the log protocol needs
 put-if-absent so two writers can never clobber the same version.
@@ -280,12 +280,14 @@ class HadoopFS:
 
 
 def get_fs(path: str, spark=None):
-    """Filesystem for ``path``: Hadoop-backed when a session is
-    available (passed or active), the pure-local twin otherwise."""
+    """Filesystem for ``path``: the pure-local twin for local paths
+    (``os`` calls; a JVM round trip per listing or read costs ~10 ms,
+    which snapshot lookups pay many times per write), Hadoop-backed
+    for any other scheme through the passed or active session."""
+    if local_path(path) is not None:
+        return LocalFS(path)
     if spark is None:
         from pyspark.sql import SparkSession
 
         spark = SparkSession.getActiveSession()
-    if spark is not None:
-        return HadoopFS(spark, path)
-    return LocalFS(path)
+    return HadoopFS(spark, path)

@@ -3,56 +3,65 @@
 The reference relies on Delta Lake for: table-exists checks, partitioned
 initial writes, MERGE upserts, ``mergeSchema`` appends, time travel and
 history (SURVEY.md §2.1 S3-S10). delta-spark is not available in this
-environment, so this module supplies the same *capabilities* natively:
+environment, so this module writes the Delta format itself
+(github.com/delta-io/delta PROTOCOL.md): a table is parquet files plus
+a ``_delta_log``, and any Delta reader can open it — as this class
+opens, and writes to, Delta tables other engines wrote.
+
+Layout:
 
   * data files are plain Parquet under ``<path>/data/<k=v>/...`` —
-    written once, never mutated (the same contract object stores give);
-  * every commit writes a JSON **manifest** ``_manifest/v{N}.json``
-    listing the complete live file set (like a Delta checkpoint),
-    the table schema, partition columns and operation metrics;
-  * readers pin a manifest version → snapshot isolation + time travel;
-  * partition-scoped copy-on-write: an update rewrites only the files
-    of touched partitions and commits a manifest that swaps them —
-    untouched partitions are carried by reference. At 100 TB a merge
-    touching one day of data costs one day of data, not the table.
+    written once, never mutated (the contract object stores give);
+  * every commit is one newline-delimited JSON file
+    ``_delta_log/{version:020d}.json`` of Delta actions: ``commitInfo``
+    (operation, metrics, timestamp), ``protocol`` and ``metaData``
+    when they change, ``txn`` writer watermarks, ``remove``/``add``
+    file actions (``add.stats`` carries numRecords and per-column
+    min/max/null counts from the parquet footer) and ``cdc`` change
+    files under ``_change_data/``. A commit holds O(files touched),
+    never O(table);
+  * ``metaData`` holds the schema and partition columns; its
+    ``configuration`` the table properties and CHECK constraints
+    (``delta.enableChangeDataFeed``, ``delta.constraints.<name>``);
+    per-field metadata the generated columns
+    (``delta.generationExpression``), identity columns
+    (``delta.identity.*``) and, after a rename or drop, name-mode
+    column mapping (``delta.columnMapping.physicalName``);
+  * deletion vectors are Delta roaring bitmaps in
+    ``deletion_vector_<uuid>.bin`` files (``delta_dv``);
+  * every ``CHECKPOINT_INTERVAL`` commits a Delta parquet checkpoint
+    ``{version:020d}.checkpoint.parquet`` (+ ``_last_checkpoint``) is
+    written outside the atomic-commit path, so reconstruction replays
+    at most ``CHECKPOINT_INTERVAL`` JSON commits;
+  * the ``protocol`` action declares exactly the table features in use
+    (e.g. ``deletionVectors`` only while a live file carries a DV);
+    writes to a table declaring a writer feature this class does not
+    implement are refused.
 
-Concurrency: manifest commit is an atomic ``os.link`` (hard-link fails
-EEXIST atomically — unlike ``os.rename``, which silently overwrites),
-so a version collision is detected, never silently overwritten. Blind
-appends resolve collisions optimistically (rebase onto the new head —
-files AND, under mergeSchema, the schema union — and retry: Delta's
-append semantics); rewriting commits and metadata changes stay
-single-writer and surface collisions as errors.
+Snapshot reconstruction and scans run through the same replay and scan
+as :class:`~delta_lake_pyspark_scd2_spark.sources.delta_reader.DeltaTableReader`.
 
-Log layout (Delta's checkpoint + incremental-log split): each commit
-``v{N}.json`` is a DELTA record — ``add`` (new file entries) and
-``remove`` (dropped paths) against version N-1 — so commit size is
-O(files touched by the operation), never O(table). Every
-``CHECKPOINT_INTERVAL`` commits a full-snapshot checkpoint
-``v{N}.ckpt.parquet`` is also written (derived, idempotent, outside the
-atomic-commit path), so snapshot reconstruction replays at most
-``CHECKPOINT_INTERVAL`` deltas from the nearest checkpoint at or
-below the requested version. At 100 TB a merge touching one day
-commits one day's file entries; the million-file live set lives only
-in the periodic checkpoint — written as PARQUET (zstd, one row per
-file record), so at millions of files it stays columnar and
-compressed instead of one giant JSON parse (the same graduation
-Delta's checkpoints made; measured at 200k records: 3.9 MB vs
-61.5 MB JSON, and a partition-pruning projection read of
-path+partition costs 0.02 s vs 1.2 s for the JSON parse). Legacy
-``.ckpt.json`` checkpoints and old-format manifests carrying a full
-``files`` list still read.
+Readers pin a version → snapshot isolation + time travel. Updates are
+partition-scoped copy-on-write: a rewrite swaps only the files of the
+touched partitions; untouched partitions are carried by reference, so a
+merge touching one day of data costs one day of data, not the table.
 
-Object-store portability caveat (local-FS assumption, by design in
-this environment): the commit primitive needs a conditional PUT
-(S3 If-None-Match / GCS x-goog-if-generation-match / ABFS ETag) where
-hard links don't exist.
+Concurrency: a commit is published with ``fsio.put_if_absent`` — an
+atomic ``os.link`` on a local filesystem, ``create(overwrite=false)``
+on HDFS and the object-store connectors (see ``fsio.py`` for the
+conditional-PUT caveat on object stores) — so a version collision is
+detected, never silently overwritten. Blind appends resolve collisions
+optimistically (rebase onto the new head — files AND, under
+mergeSchema, the schema union — and retry: Delta's append semantics);
+rewriting commits and metadata changes stay single-writer and surface
+collisions as errors.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import posixpath
 import re
 import shutil
 import time
@@ -60,25 +69,50 @@ import uuid
 import warnings
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MANIFEST_DIR = "_manifest"
+from delta_lake_pyspark_scd2_spark.sources import delta_dv, fsio
+from delta_lake_pyspark_scd2_spark.sources.delta_reader import (
+    LOG_DIR,
+    DeltaTableReader,
+    scan,
+)
+
+#: The transaction log directory.
+MANIFEST_DIR = LOG_DIR
 DATA_DIR = "data"
-DV_DIR = "_dv"
-#: Change-data files (Delta ``_change_data`` analogue): row-level
-#: change records written AT COMMIT TIME by upsert/delete/remove_rows
-#: when the table property ``enableChangeDataFeed`` is true. The CDC
-#: streaming source reads these parquet files directly on executors —
-#: no driver-side row materialization, no re-deriving changes by join.
-CDC_DIR = "_cdc"
+#: Change-data files (Delta ``_change_data``): row-level change records
+#: written AT COMMIT TIME by upsert/delete/update/remove_rows when the
+#: table property ``enableChangeDataFeed`` is true. The CDC streaming
+#: source reads these parquet files directly on executors.
+CDC_DIR = "_change_data"
 #: ``_change_type`` column values, Delta CDF's vocabulary.
 CDC_TYPES = ("insert", "delete", "update_preimage", "update_postimage")
-#: Full-snapshot checkpoint cadence: reconstruction replays at most
-#: this many delta commits. Delta Lake's default is 10 as well.
+#: Checkpoint cadence: reconstruction replays at most this many JSON
+#: commits. Delta Lake's default is 10 as well.
 CHECKPOINT_INTERVAL = 10
+#: Writer features this class implements.
+WRITER_FEATURES = frozenset(
+    {
+        "changeDataFeed",
+        "checkConstraints",
+        "columnMapping",
+        "deletionVectors",
+        "generatedColumns",
+        "identityColumns",
+        "timestampNtz",
+    }
+)
+#: Table properties stored under their Delta configuration key.
+_PROPERTY_KEYS = {"enableChangeDataFeed": "delta.enableChangeDataFeed"}
+#: Physical names of dropped columns that live files still hold.
+_RETIRED_KEY = "vtable.retiredPhysicalNames"
+_PHYS = "delta.columnMapping.physicalName"
+_CONSTRAINT = "delta.constraints."
 
 
 @dataclass(frozen=True)
@@ -86,15 +120,13 @@ class ManifestEntry:
     """One live data file: path relative to ``data/``, its partition
     values (empty dict for unpartitioned tables), and file-level
     statistics — row count plus per-column min/max/null-count read from
-    the parquet footer at commit time (the Delta ``add``-action ``stats``
-    analogue). ``stats`` maps column name → ``{"min", "max", "nulls"}``;
+    the parquet footer at commit time (the ``add.stats`` of its log
+    entry). ``stats`` maps column name → ``{"min", "max", "nulls"}``;
     columns without usable footer stats are simply absent.
 
-    ``dv`` (Delta deletion-vector analogue): ``{"paths": [...],
-    "count": n}`` — parquet sidecars under ``_dv/`` listing dead
-    ``(__file, __pos)`` row positions of THIS file; readers anti-join
-    them out. None for files with no dead rows (the common case, which
-    keeps the plain fast scan path)."""
+    ``dv``: the file's Delta deletion-vector descriptor
+    (``cardinality`` = dead rows) or None for files with no dead rows
+    (the common case, which keeps the plain fast scan path)."""
 
     path: str
     partition: dict[str, str]
@@ -173,11 +205,9 @@ def _file_stats(path: str) -> tuple[dict, int]:
     return out, md.num_rows
 
 
-def _same_record(a: dict, b: dict) -> bool:
-    """Record equality for the commit diff, tolerant of absent keys in
-    old-format records (no ``dv`` field == ``dv`` None)."""
-    return all(
-        a.get(k) == b.get(k) for k in ("partition", "stats", "rows", "dv")
+def _same_record(a: dict, b: ManifestEntry) -> bool:
+    return (a["partition"], a["stats"], a["rows"], a["dv"]) == (
+        b.partition, b.stats, b.rows, b.dv,
     )
 
 
@@ -196,22 +226,124 @@ def _drop_crc_sidecar(full_path: str) -> None:
 
 
 def _entry(f: dict) -> ManifestEntry:
-    """Rehydrate a manifest file record, carrying stats forward so
-    unrewritten files never lose their skipping metadata."""
-    return ManifestEntry(
-        f["path"], f["partition"], f.get("stats"), f.get("rows"), f.get("dv")
+    """A snapshot file record as an entry, carrying stats and the
+    deletion vector forward unchanged."""
+    return ManifestEntry(f["path"], f["partition"], f["stats"], f["rows"], f["dv"])
+
+
+def _record(add: dict, logical: dict[str, str]) -> dict:
+    """A snapshot file record from an ``add`` action; ``logical`` maps
+    physical partition-column names back to logical ones."""
+    st = json.loads(add["stats"]) if add.get("stats") else {}
+    mins, maxs = st.get("minValues") or {}, st.get("maxValues") or {}
+    nulls = st.get("nullCount") or {}
+    return {
+        "path": posixpath.relpath(unquote(add["path"]), DATA_DIR),
+        "partition": {
+            logical.get(k, k): v for k, v in add["partitionValues"].items()
+        },
+        "stats": {
+            c: {"min": mins.get(c), "max": maxs.get(c), "nulls": nulls.get(c)}
+            for c in {**mins, **maxs, **nulls}
+        },
+        "rows": st.get("numRecords"),
+        "dv": add.get("deletionVector"),
+        "size": add.get("size"),
+        "mtime": add.get("modificationTime"),
+    }
+
+
+def _dv_key(dv: dict | None):
+    """A deletion vector's identity (Delta's ``uniqueId``)."""
+    if not dv:
+        return None
+    return (dv["storageType"], dv["pathOrInlineDv"], dv.get("offset"))
+
+
+def _protocol(metadata: dict, has_dv: bool) -> dict:
+    """The protocol action declaring exactly the table features that
+    ``metadata`` and the live files use."""
+    conf = metadata.get("configuration") or {}
+    schema = metadata["schemaString"]
+    reader = set()
+    if has_dv:
+        reader.add("deletionVectors")
+    if conf.get("delta.columnMapping.mode", "none") != "none":
+        reader.add("columnMapping")
+    if '"timestamp_ntz"' in schema:
+        reader.add("timestampNtz")
+    writer = set(reader)
+    if conf.get("delta.enableChangeDataFeed", "").lower() == "true":
+        writer.add("changeDataFeed")
+    if any(k.startswith(_CONSTRAINT) for k in conf):
+        writer.add("checkConstraints")
+    if '"delta.generationExpression"' in schema:
+        writer.add("generatedColumns")
+    if '"delta.identity.start"' in schema:
+        writer.add("identityColumns")
+    out = {"minReaderVersion": 3 if reader else 1, "minWriterVersion": 7}
+    if reader:
+        out["readerFeatures"] = sorted(reader)
+    out["writerFeatures"] = sorted(writer)
+    return out
+
+
+#: Delta checkpoint columns for the actions a checkpoint carries.
+def _checkpoint_schema():
+    import pyarrow as pa
+
+    smap = pa.map_(pa.string(), pa.string())
+    strs = pa.list_(pa.string())
+    return pa.schema(
+        [
+            ("txn", pa.struct(
+                [("appId", pa.string()), ("version", pa.int64()),
+                 ("lastUpdated", pa.int64())]
+            )),
+            ("add", pa.struct(
+                [("path", pa.string()), ("partitionValues", smap),
+                 ("size", pa.int64()), ("modificationTime", pa.int64()),
+                 ("dataChange", pa.bool_()), ("stats", pa.string()),
+                 ("tags", smap),
+                 ("deletionVector", pa.struct(
+                     [("storageType", pa.string()),
+                      ("pathOrInlineDv", pa.string()),
+                      ("offset", pa.int32()), ("sizeInBytes", pa.int32()),
+                      ("cardinality", pa.int64())]
+                 ))]
+            )),
+            ("metaData", pa.struct(
+                [("id", pa.string()), ("name", pa.string()),
+                 ("description", pa.string()),
+                 ("format", pa.struct(
+                     [("provider", pa.string()), ("options", smap)]
+                 )),
+                 ("schemaString", pa.string()),
+                 ("partitionColumns", strs), ("configuration", smap),
+                 ("createdTime", pa.int64())]
+            )),
+            ("protocol", pa.struct(
+                [("minReaderVersion", pa.int32()),
+                 ("minWriterVersion", pa.int32()),
+                 ("readerFeatures", strs), ("writerFeatures", strs)]
+            )),
+        ]
     )
 
 
 class VersionedParquetTable:
-    def __init__(self, spark: SparkSession, path: str):
+    def __init__(self, spark: SparkSession | None, path: str):
         self.spark = spark
-        self.path = path
-        # Snapshot-reconstruction cache: version → materialized file
-        # records. Commits are immutable once written, so a cached
-        # snapshot can never go stale; bounded (LRU-evicted) so long
-        # histories don't accumulate full file lists on the driver.
-        self._snap_cache: dict[int, list[dict]] = {}
+        # data files move with os calls: a ``file:`` URI becomes its path
+        self.path = fsio.local_path(path) or path
+        self._log = DeltaTableReader(spark, self.path)
+        self._fs = self._log._fs
+        # Snapshot cache: version → (log replay, snapshot dict). Commits
+        # are immutable once written, so a cached snapshot can never go
+        # stale; bounded (oldest evicted) so long histories don't pile
+        # up file lists on the driver, and a version whose predecessor
+        # is cached replays one commit on top of it.
+        self._snap_cache: dict[int, tuple] = {}
         self._snap_cache_max = 4
 
     # -- existence / versions ------------------------------------------------
@@ -219,325 +351,359 @@ class VersionedParquetTable:
     @classmethod
     def is_table(cls, path: str) -> bool:
         """Reference: ``DeltaTable.isDeltaTable`` (src/header_etl.py:157)."""
-        d = os.path.join(path, MANIFEST_DIR)
-        return os.path.isdir(d) and any(f.endswith(".json") for f in os.listdir(d))
+        return DeltaTableReader.is_delta_table(path)
 
     def versions(self) -> list[int]:
-        d = os.path.join(self.path, MANIFEST_DIR)
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(f[1:-5])
-            for f in os.listdir(d)
-            if f.startswith("v")
-            and f.endswith(".json")
-            and not f.endswith(".ckpt.json")
-            and f[1:-5].isdigit()
-        )
-
-    def _checkpoint_versions(self) -> list[int]:
-        d = os.path.join(self.path, MANIFEST_DIR)
-        if not os.path.isdir(d):
-            return []
-        out = set()
-        for f in os.listdir(d):
-            if not f.startswith("v"):
-                continue
-            for suffix in (".ckpt.parquet", ".ckpt.json"):
-                if f.endswith(suffix) and f[1 : -len(suffix)].isdigit():
-                    out.add(int(f[1 : -len(suffix)]))
-        return sorted(out)
+        """The versions whose commits are retained."""
+        return self._log._commit_versions()
 
     def latest_version(self) -> int:
         vs = self.versions()
         if not vs:
-            raise FileNotFoundError(f"no manifest under {self.path}")
+            raise FileNotFoundError(f"no _delta_log commits under {self.path}")
         return vs[-1]
+
+    def commit_actions(self, version: int) -> list[dict]:
+        """The Delta actions of commit ``version``, in log order."""
+        return self._log.commit_actions(version)
+
+    def _commit_info(self, version: int) -> dict:
+        """``commitInfo`` of ``version`` with ``timestamp`` in epoch
+        seconds (the commit file's mtime when the writer left none)."""
+        for a in self.commit_actions(version):
+            if "commitInfo" in a:
+                ci = dict(a["commitInfo"])
+                break
+        else:
+            ci = {}
+        if "timestamp" not in ci:
+            ci["timestamp"] = self._fs.mtime_ms(self._log._commit_file(version))
+        ci["timestamp"] = ci["timestamp"] / 1000
+        return ci
 
     def history(self) -> list[dict]:
         """Commit log, newest first (reference S6: ``DeltaTable.history``).
-        Reads only the delta commit records — ``num_files`` is stamped
-        at commit time, so no snapshot reconstruction happens here."""
+        Reads only the commits' ``commitInfo`` — ``num_files`` is
+        stamped at commit time, so no snapshot reconstruction happens
+        here."""
         out = []
         for v in reversed(self.versions()):
-            m = self._load_commit(v)
+            ci = self._commit_info(v)
             out.append(
                 {
                     "version": v,
-                    "timestamp": m["timestamp"],
-                    "operation": m["operation"],
-                    "num_files": m["num_files"]
-                    if "num_files" in m
-                    else len(m["files"]),
-                    "metrics": m.get("metrics", {}),
+                    "timestamp": ci["timestamp"],
+                    "operation": ci.get("operation"),
+                    "num_files": ci.get("numFiles"),
+                    "metrics": ci.get("metrics", ci.get("operationMetrics", {})),
                 }
             )
         return out
 
-    # -- manifest I/O --------------------------------------------------------
+    # -- snapshots -----------------------------------------------------------
 
-    def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.path, MANIFEST_DIR, f"v{version:010d}.json")
-
-    def _ckpt_path(self, version: int) -> str:
-        """Canonical (current-format) checkpoint path: PARQUET — at
-        millions of files a JSON checkpoint is a single giant parse;
-        parquet keeps it columnar, compressed, and row-group-scannable
-        (the same graduation Delta's checkpoints made)."""
-        return os.path.join(
-            self.path, MANIFEST_DIR, f"v{version:010d}.ckpt.parquet"
-        )
-
-    def _ckpt_file(self, version: int) -> str | None:
-        """Existing checkpoint file for ``version`` in any format
-        (parquet preferred, legacy JSON accepted), or None."""
-        p = self._ckpt_path(version)
-        if os.path.exists(p):
-            return p
-        legacy = os.path.join(
-            self.path, MANIFEST_DIR, f"v{version:010d}.ckpt.json"
-        )
-        return legacy if os.path.exists(legacy) else None
-
-    @staticmethod
-    def _read_ckpt_file(path: str) -> list[dict]:
-        if path.endswith(".parquet"):
-            import pyarrow.parquet as pq
-
-            rows = pq.read_table(path).to_pylist()
-            return [
-                {
-                    "path": r["path"],
-                    "partition": json.loads(r["partition"]),
-                    "stats": json.loads(r["stats"]) if r["stats"] else None,
-                    "rows": r["rows"],
-                    "dv": json.loads(r["dv"]) if r["dv"] else None,
-                }
-                for r in rows
-            ]
-        with open(path) as fh:
-            return json.load(fh)["files"]
-
-    def _load_commit(self, version: int) -> dict:
-        """Raw commit record: metadata + either delta actions
-        (``add``/``remove``) or, old-format, a full ``files`` list."""
-        with open(self._manifest_path(version)) as fh:
-            return json.load(fh)
-
-    def _snapshot_files(self, version: int) -> list[dict]:
-        """Materialize the live file set at ``version``: start from the
-        nearest checkpoint (or full-format commit) at or below it, then
-        replay the delta commits up to it — at most
-        ``CHECKPOINT_INTERVAL`` of them. Cached per instance (commits
-        are immutable)."""
-        if version in self._snap_cache:
-            return self._snap_cache[version]
-        # walk back collecting deltas until a self-contained base
-        chain: list[dict] = []
-        base: list[dict] = []
-        ckpts = {v for v in self._checkpoint_versions() if v <= version}
-        v = version
-        while True:
-            if v in self._snap_cache:
-                base = self._snap_cache[v]
-                break
-            if v in ckpts:
-                base = self._read_ckpt_file(self._ckpt_file(v))
-                break
-            m = self._load_commit(v)
-            if "files" in m:  # old-format full snapshot
-                base = m["files"]
-                break
-            chain.append(m)
-            if v == 0:  # v0 is a delta against the empty table
-                break
-            v -= 1
-        files = list(base)
-        for m in reversed(chain):
-            adds = m.get("add", [])
-            # an ``add`` for an already-live path is a metadata
-            # replacement (deletion-vector update) — drop the old record
-            gone = set(m.get("remove", [])) | {a["path"] for a in adds}
-            files = [f for f in files if f["path"] not in gone]
-            files.extend(adds)
+    def snapshot(self, version: int | None = None) -> dict:
+        """Table state at ``version`` (default: latest) — ``version``,
+        ``schema`` (logical StructType JSON), ``partition_cols``,
+        ``files`` (one record per live file: ``path`` relative to
+        ``data/``, ``partition``, ``stats``, ``rows``, ``dv``, ``size``),
+        ``constraints``, ``properties``, ``generated_cols``,
+        ``identity_cols``, ``column_mapping`` (logical → physical, renamed
+        columns only), ``txns``, plus the raw ``protocol`` and
+        ``metadata`` actions. The dict is cached and shared: treat it
+        as read-only."""
+        v = self.latest_version() if version is None else version
+        if v in self._snap_cache:
+            return self._snap_cache[v][1]
+        base = self._snap_cache.get(v - 1)
+        snap = self._log.snapshot(v, base=base[0] if base else None)
+        state = _snapshot_dict(snap)
         if len(self._snap_cache) >= self._snap_cache_max:
             self._snap_cache.pop(next(iter(self._snap_cache)))
-        self._snap_cache[version] = files
-        return files
+        self._snap_cache[v] = (snap, state)
+        return state
 
-    def _load_manifest(self, version: int) -> dict:
-        """Commit metadata with the file set MATERIALIZED under
-        ``files`` — the shape every reader of this class consumes;
-        the on-disk delta/checkpoint split stays internal."""
-        m = self._load_commit(version)
-        if "files" not in m:
-            m = dict(m)
-            m["files"] = self._snapshot_files(version)
-        return m
+    def _check_writable(self, m: dict) -> None:
+        """Refuse to commit to a table whose protocol needs a writer
+        feature this class does not implement."""
+        p, conf = m["protocol"], m["metadata"]["configuration"]
+        # appendOnly and invariants constrain writes only when active
+        feats = set(p.get("writerFeatures") or []) - {"appendOnly", "invariants"}
+        if (p.get("minWriterVersion") or 1) > 7:
+            feats.add(f"minWriterVersion={p['minWriterVersion']}")
+        if conf.get("delta.appendOnly", "").lower() == "true":
+            feats.add("appendOnly")
+        if '"delta.invariants"' in m["metadata"]["schemaString"]:
+            feats.add("invariants")
+        if conf.get("delta.columnMapping.mode") == "id":
+            feats.add("columnMapping(id mode)")
+        missing = sorted(feats - WRITER_FEATURES)
+        if missing:
+            raise ValueError(
+                f"cannot write to {self.path}: its protocol needs writer "
+                f"feature(s) {missing} that this writer does not implement"
+            )
 
-    def _write_checkpoint(self, version: int, files: list[dict]) -> None:
-        """Full-snapshot checkpoint — derived data, written OUTSIDE the
-        atomic commit path (a lost checkpoint only means a longer
-        replay). ``os.replace`` is fine here: content for a given
-        version is deterministic, so concurrent writers racing on the
-        same checkpoint write identical bytes."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def _file(self, rel: str) -> str:
+        """Local path of a data file given its ``data/``-relative path."""
+        return os.path.normpath(os.path.join(self.path, DATA_DIR, rel))
 
-        tmp = self._ckpt_path(version) + f".tmp-{uuid.uuid4().hex}"
-        table = pa.table(
-            {
-                "path": [f["path"] for f in files],
-                "partition": [json.dumps(f["partition"]) for f in files],
-                "stats": [
-                    json.dumps(f["stats"]) if f.get("stats") is not None else None
-                    for f in files
-                ],
-                "rows": pa.array(
-                    [f.get("rows") for f in files], type=pa.int64()
-                ),
-                "dv": [
-                    json.dumps(f["dv"]) if f.get("dv") is not None else None
-                    for f in files
-                ],
+    def _dv_file(self, dv: dict) -> str | None:
+        """Local path of a deletion vector's file (None when inline)."""
+        if dv["storageType"] == "i":
+            return None
+        if dv["storageType"] == "p":
+            return fsio.local_path(dv["pathOrInlineDv"])
+        return os.path.join(self.path, delta_dv.dv_file_relative_path(dv))
+
+    def _metadata_action(self, base: dict | None, meta: dict) -> dict | None:
+        """The ``metaData`` action for table metadata ``meta``, or None
+        when it equals ``base``'s (a commit re-emits metaData only when
+        something in it changed)."""
+        schema = meta["schema"]
+        if isinstance(schema, str):
+            schema = T.StructType.fromJson(json.loads(schema))
+        old = base["metadata"] if base else {}
+        old_conf = old.get("configuration") or {}
+        mapping, retired = meta["column_mapping"], meta["retired_physical"]
+        conf = {
+            _PROPERTY_KEYS.get(k, k): str(v) for k, v in meta["properties"].items()
+        }
+        conf.update({_CONSTRAINT + n: e for n, e in meta["constraints"].items()})
+        # name-mode column mapping once a column was renamed or dropped;
+        # column ids stay stable across commits
+        name_mode = bool(mapping or retired)
+        ids = {}
+        if old:
+            for f in T.StructType.fromJson(json.loads(old["schemaString"])).fields:
+                md = f.metadata or {}
+                if "delta.columnMapping.id" in md:
+                    ids[md.get(_PHYS, f.name)] = md["delta.columnMapping.id"]
+        max_id = int(old_conf.get("delta.columnMapping.maxColumnId", 0))
+        fields = []
+        for f in schema.fields:
+            md = {k: v for k, v in (f.metadata or {}).items() if not k.startswith("delta.")}
+            if f.name in meta["generated_cols"]:
+                md["delta.generationExpression"] = meta["generated_cols"][f.name]
+            spec = meta["identity_cols"].get(f.name)
+            if spec:
+                md["delta.identity.start"] = int(spec["start"])
+                md["delta.identity.step"] = int(spec["step"])
+                md["delta.identity.allowExplicitInsert"] = True
+                if int(spec["next"]) != int(spec["start"]):
+                    md["delta.identity.highWaterMark"] = int(spec["next"]) - int(
+                        spec["step"]
+                    )
+            if name_mode:
+                phys = mapping.get(f.name, f.name)
+                if phys not in ids:
+                    max_id += 1
+                    ids[phys] = max_id
+                md["delta.columnMapping.id"] = ids[phys]
+                md[_PHYS] = phys
+            fields.append(T.StructField(f.name, f.dataType, f.nullable, md))
+        if name_mode:
+            conf["delta.columnMapping.mode"] = "name"
+            conf["delta.columnMapping.maxColumnId"] = str(max_id)
+        if retired:
+            conf[_RETIRED_KEY] = json.dumps(sorted(retired))
+        md = {
+            **old,
+            "id": old.get("id") or str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": T.StructType(fields).json(),
+            "partitionColumns": list(meta["partition_cols"]),
+            "configuration": conf,
+            "createdTime": old.get("createdTime") or int(time.time() * 1000),
+        }
+        if old and (
+            json.loads(md["schemaString"]) == json.loads(old["schemaString"])
+            and md["partitionColumns"] == old.get("partitionColumns")
+            and conf == old_conf
+        ):
+            return None
+        return md
+
+    def _add_action(self, e: ManifestEntry, prev: dict | None, data_change: bool) -> dict:
+        st: dict = {} if e.rows is None else {"numRecords": e.rows}
+        for key, field in (
+            ("minValues", "min"), ("maxValues", "max"), ("nullCount", "nulls")
+        ):
+            vals = {
+                c: s[field] for c, s in (e.stats or {}).items()
+                if s.get(field) is not None
             }
-        )
-        pq.write_table(table, tmp, compression="zstd")
-        os.replace(tmp, self._ckpt_path(version))
+            if vals:
+                st[key] = vals
+        if prev is None:
+            info = os.stat(self._file(e.path))
+            size, mtime = info.st_size, int(info.st_mtime * 1000)
+        else:
+            size, mtime = prev["size"], prev["mtime"]
+        add = {
+            "path": quote(posixpath.normpath(posixpath.join(DATA_DIR, e.path)), safe="/="),
+            "partitionValues": e.partition,
+            "size": size,
+            "modificationTime": mtime,
+            "dataChange": data_change,
+            "stats": json.dumps(st),
+        }
+        if e.dv:
+            add["deletionVector"] = e.dv
+        return {"add": add}
 
-    def _commit(
+    def _write_commit(
         self,
-        version: int,
+        base: dict | None,
         files: list[ManifestEntry],
-        schema: T.StructType,
-        partition_cols: list[str],
         operation: str,
         metrics: "dict | Callable[[], dict] | None" = None,
-        constraints: dict[str, str] | None = None,
-        txns: dict[str, int] | None = None,
-        column_mapping: dict[str, str] | None = None,
-        retired_physical: list[str] | None = None,
-        generated_cols: dict[str, str] | None = None,
-        properties: dict[str, str] | None = None,
-        identity_cols: dict[str, dict] | None = None,
+        *,
+        txn: tuple[str, int] | None = None,
         cdc_files: list[str] | None = None,
         data_change: bool = True,
-    ) -> None:
-        os.makedirs(os.path.join(self.path, MANIFEST_DIR), exist_ok=True)
-        parent = (
-            self._load_commit(version - 1) if version > 0 else {}
-        )
-        if constraints is None:
-            # inherit like every other metadata field — a commit that
-            # doesn't mention constraints must not silently drop them
-            # (callers that CLEAR constraints pass the reduced dict)
-            constraints = parent.get("constraints", {})
-        if generated_cols is None:
-            generated_cols = parent.get("generated_cols", {})
-        if identity_cols is None:
-            identity_cols = parent.get("identity_cols", {})
-        if properties is None:
-            properties = parent.get("properties", {})
-        if column_mapping is None:
-            # Inherit the logical→physical column mapping (Delta column
-            # mapping analogue); only RENAME_COLUMN commits change it.
-            column_mapping = parent.get("column_mapping", {})
-        if retired_physical is None:
-            retired_physical = parent.get("retired_physical", [])
-        if txns is None:
-            # Inherit the writer-transaction watermarks (Delta ``txn``
-            # actions): every commit carries the full app→version map so
-            # a reader needs one commit record, not a log scan. The map
-            # is bounded by the number of distinct writer apps — small.
-            txns = parent.get("txns", {})
-        # Delta record: diff the desired file set against the parent
-        # snapshot — commit size ∝ files this operation touched. Data
-        # files are written-once, but an entry's METADATA can change
-        # (deletion vectors), so the diff compares full records: a
-        # same-path entry whose dv changed is re-emitted in ``add`` and
-        # replayed as a replacement.
-        prev = {f["path"]: f for f in self._snapshot_files(version - 1)} if version > 0 else {}
-        new_records = [
-            {"path": e.path, "partition": e.partition, "stats": e.stats,
-             "rows": e.rows, "dv": e.dv}
-            for e in files
+        **meta,
+    ) -> int:
+        """Publish the version after ``base`` — the snapshot the caller
+        planned against (None creates the table) — whose live file set
+        is ``files``: one ``_delta_log`` JSON file holding the diff
+        against ``base`` as ``remove``/``add`` actions (a same-path
+        entry whose deletion vector changed is removed and re-added),
+        plus ``commitInfo``, the ``protocol``/``metaData`` actions when
+        they change, a ``txn`` watermark and the ``cdc`` change files.
+        ``meta`` overrides table metadata (``schema``,
+        ``partition_cols``, ``constraints``, ``properties``,
+        ``generated_cols``, ``identity_cols``, ``column_mapping``,
+        ``retired_physical``); the rest is inherited from ``base``.
+        ``data_change=False`` marks a pure re-layout (COMPACT/ZORDER)
+        that the change feed skips. Raises RuntimeError when another
+        writer already published that version."""
+        if base is not None:
+            self._check_writable(base)
+        version = 0 if base is None else base["version"] + 1
+        meta = {**(base or _EMPTY_META), **meta}
+        md = self._metadata_action(base, meta)
+        prev = {f["path"]: f for f in base["files"]} if base else {}
+        new = {e.path: e for e in files}
+        now = int(time.time() * 1000)
+        actions: list[dict] = [
+            {
+                "commitInfo": {
+                    "timestamp": now,
+                    "operation": operation,
+                    "metrics": (metrics() if callable(metrics) else metrics) or {},
+                    "numFiles": len(files),
+                    "engineInfo": "delta_lake_pyspark_scd2_spark",
+                }
+            }
         ]
-        new_paths = {r["path"] for r in new_records}
-        manifest = {
-            "version": version,
-            "timestamp": time.time(),
-            "operation": operation,
-            "schema": schema.json(),
-            "partition_cols": partition_cols,
-            "constraints": constraints or {},
-            "add": [
-                r
-                for r in new_records
-                if r["path"] not in prev or not _same_record(r, prev[r["path"]])
-            ],
-            "remove": sorted(p for p in prev if p not in new_paths),
-            "num_files": len(new_records),
-            # Row-level change records for this commit (paths under
-            # _cdc/) and Delta's dataChange flag: data_change=False
-            # marks pure re-layout commits (COMPACT/ZORDER) the change
-            # feed must skip.
-            "cdc_files": cdc_files or [],
-            "data_change": data_change,
-            "metrics": (metrics() if callable(metrics) else metrics) or {},
-            "txns": txns,
-            "column_mapping": column_mapping,
-            "retired_physical": retired_physical,
-            "generated_cols": generated_cols,
-            "properties": properties,
-            "identity_cols": identity_cols,
-        }
-        tmp = self._manifest_path(version) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        target = self._manifest_path(version)
-        # Atomic optimistic-concurrency commit: os.link fails with
-        # EEXIST atomically, so two writers racing to the same version
-        # can never clobber each other's manifest (a bare exists-check +
-        # os.rename would — POSIX rename overwrites its target). On an
-        # object store this single primitive is what needs replacing
-        # with a conditional PUT (If-None-Match) — see module docstring.
+        protocol = _protocol(md or base["metadata"], any(e.dv for e in files))
+        if base is None or protocol != base["protocol"]:
+            actions.append({"protocol": protocol})
+        if md is not None:
+            actions.append({"metaData": md})
+        if txn is not None:
+            actions.append(
+                {"txn": {"appId": txn[0], "version": txn[1], "lastUpdated": now}}
+            )
+        for p, f in prev.items():
+            if p not in new or not _same_record(f, new[p]):
+                rm = {
+                    "path": quote(posixpath.normpath(posixpath.join(DATA_DIR, p)), safe="/="),
+                    "deletionTimestamp": now,
+                    "dataChange": data_change,
+                    "partitionValues": f["partition"],
+                    "size": f["size"],
+                }
+                if f["dv"]:
+                    rm["deletionVector"] = f["dv"]
+                actions.append({"remove": rm})
+        for e in files:
+            f = prev.get(e.path)
+            if f is None or not _same_record(f, e):
+                actions.append(self._add_action(e, f, data_change))
+        for rel in cdc_files or []:
+            full = os.path.join(self.path, CDC_DIR, rel)
+            actions.append(
+                {
+                    "cdc": {
+                        "path": quote(f"{CDC_DIR}/{rel}", safe="/="),
+                        "partitionValues": {},
+                        "size": os.path.getsize(full),
+                        "dataChange": False,
+                    }
+                }
+            )
+        payload = "".join(json.dumps(a) + "\n" for a in actions).encode()
         try:
-            os.link(tmp, target)
+            self._fs.put_if_absent(self._log._commit_file(version), payload)
         except FileExistsError:
             raise RuntimeError(
                 f"version {version} already committed (concurrent writer?)"
             ) from None
-        finally:
-            os.remove(tmp)
-        if len(self._snap_cache) >= self._snap_cache_max:
-            self._snap_cache.pop(next(iter(self._snap_cache)))
-        self._snap_cache[version] = new_records
         if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-            self._write_checkpoint(version, new_records)
+            self._checkpoint(version)
+        return version
+
+    def _checkpoint(self, version: int, actions: list[dict] | None = None) -> None:
+        """Delta parquet checkpoint of ``version`` (default: its replayed
+        state) and the ``_last_checkpoint`` pointer — derived data,
+        written OUTSIDE the atomic commit path (a lost checkpoint only
+        means a longer replay). Rewriting one is safe: content for a
+        given version is deterministic."""
+        import tempfile
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if actions is None:
+            self.snapshot(version)
+            snap = self._snap_cache[version][0]
+            actions = [
+                {"protocol": snap.protocol},
+                {"metaData": snap.metadata},
+                *(
+                    {"txn": {"appId": a, "version": v}}
+                    for a, v in sorted(snap.txns.items())
+                ),
+                *({"add": a} for a in snap.adds.values()),
+            ]
+        keys = ("txn", "add", "metaData", "protocol")
+        table = pa.Table.from_pylist(
+            [{k: a.get(k) for k in keys} for a in actions if any(k in a for k in keys)],
+            schema=_checkpoint_schema(),
+        )
+        fd, tmp = tempfile.mkstemp(suffix=".checkpoint.parquet")
+        os.close(fd)
+        try:
+            pq.write_table(table, tmp)
+            self._fs.put_file(
+                tmp, fsio.join(self._log._log, f"{version:020d}.checkpoint.parquet")
+            )
+        finally:
+            os.unlink(tmp)
+        if version >= max(self._log._checkpoint_versions(), default=-1):
+            self._fs.write_text(
+                fsio.join(self._log._log, "_last_checkpoint"),
+                json.dumps({"version": version, "size": table.num_rows}),
+            )
 
     # -- change-data files (CDF) ---------------------------------------------
 
     @staticmethod
     def _cdc_enabled(m: dict) -> bool:
-        """Delta's ``delta.enableChangeDataFeed`` analogue: row-level
-        change files are written only when the table opted in."""
-        return (
-            (m.get("properties") or {})
-            .get("enableChangeDataFeed", "")
-            .lower()
-            == "true"
-        )
+        """Delta's ``delta.enableChangeDataFeed``: row-level change
+        files are written only when the table opted in."""
+        return m["properties"].get("enableChangeDataFeed", "").lower() == "true"
 
     def _write_cdc(self, change_df: DataFrame) -> list[str]:
         """Stage this commit's row-level change records (data columns
         under their LOGICAL names plus ``_change_type``) as parquet
-        under ``_cdc/``; returns the relative paths for the commit
-        record. Files are uuid-named, never version-named, so an OCC
-        rebase (final version unknown until the manifest link wins)
-        keeps them valid; files from lost races stay unreferenced and
-        are vacuum's garbage. ``_commit_version`` is NOT stored — the
-        stream reader stamps it from the commit that references the
-        file."""
+        under ``_change_data/``; returns their paths relative to it for
+        the commit's ``cdc`` actions. Files are uuid-named, never
+        version-named, so an OCC rebase (final version unknown until
+        the commit wins) keeps them valid; files from lost races stay
+        unreferenced and are vacuum's garbage."""
         rel = f"cdc-{uuid.uuid4().hex}"
         out_dir = os.path.join(self.path, CDC_DIR, rel)
         change_df.write.parquet(out_dir)
@@ -574,7 +740,7 @@ class VersionedParquetTable:
         ``constraints`` (name → SQL boolean expr) are CHECK-enforced on
         the written rows via an Observation riding the write job itself
         (no second scan); any violation deletes the staged files and
-        raises before a manifest commit, so the table is untouched.
+        raises before the commit, so the table is untouched.
         SQL-standard semantics: NULL evaluations satisfy the check.
 
         Under a column mapping (post-rename), data files are written
@@ -656,11 +822,15 @@ class VersionedParquetTable:
                 if side_col:
                     side, _, rel_dir = rel_dir.partition(os.sep)
                     name = f"{side.split('=', 1)[1]}-{fname}"
-                partition: dict[str, str] = {}
+                # partitionValues carry the LOGICAL value: Spark
+                # Hive-escapes special characters in directory names
+                partition: dict[str, str | None] = {}
                 for comp in rel_dir.split(os.sep):
                     if "=" in comp:
                         k, v = comp.split("=", 1)
-                        partition[k] = v
+                        partition[k] = (
+                            None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+                        )
                 dest_dir = os.path.join(data_root, rel_dir)
                 os.makedirs(dest_dir, exist_ok=True)
                 dest = os.path.join(dest_dir, name)
@@ -716,12 +886,13 @@ class VersionedParquetTable:
         }
         df = t._apply_identity(t._apply_generated(df, gen), ident)
         files = t._write_files(df, pc, generated=gen, layout_ready=layout_ready)
-        t._commit(
-            0, files, df.schema, pc, "CREATE", metrics,
-            txns={txn[0]: txn[1]} if txn else {},
+        t._write_commit(
+            None, files, "CREATE", metrics,
+            txn=txn,
+            schema=df.schema,
+            partition_cols=pc,
             generated_cols=gen,
-            identity_cols=t._identity_bump({"identity_cols": ident}, files)
-            or {},
+            identity_cols=t._identity_bump({"identity_cols": ident}, files),
             properties={k: str(v) for k, v in (properties or {}).items()},
         )
         return t
@@ -736,14 +907,11 @@ class VersionedParquetTable:
         df.createOrReplaceTempView(name)
         return df
 
-    def _current(self) -> dict:
-        return self._load_manifest(self.latest_version())
-
     def txn_versions(self) -> dict[str, int]:
         """Writer-transaction watermarks at the head: app_id → the
         highest transaction version that app has committed (Delta's
         ``txn`` action / ``txnAppId``+``txnVersion`` analogue)."""
-        return dict(self._load_commit(self.latest_version()).get("txns", {}))
+        return dict(self.snapshot()["txns"])
 
     def last_txn_version(self, app_id: str) -> int | None:
         """Highest committed transaction version for ``app_id``, or
@@ -759,60 +927,39 @@ class VersionedParquetTable:
         crossed ``autoCompact.minFiles``, default 16 — Delta's
         auto-compaction trade: small steady write tax for never letting
         streaming appends accumulate a small-file problem)."""
-        v = self.latest_version() if version is None else version
-        return dict(self._load_commit(v).get("properties", {}))
+        return dict(self.snapshot(version)["properties"])
 
     def set_property(self, key: str, value: str) -> int:
-        m = self._current()
-        props = dict(m.get("properties") or {})
-        props[key] = str(value)
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
-            "SET_PROPERTY",
+        m = self.snapshot()
+        return self._write_commit(
+            m, [_entry(f) for f in m["files"]], "SET_PROPERTY",
             {"key": key, "value": str(value)},
-            m.get("constraints") or {},
-            properties=props,
+            properties={**m["properties"], key: str(value)},
         )
-        return v
 
     def unset_property(self, key: str) -> int:
-        m = self._current()
-        props = dict(m.get("properties") or {})
+        m = self.snapshot()
+        props = dict(m["properties"])
         if key not in props:
             raise KeyError(key)
         props.pop(key)
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
-            "UNSET_PROPERTY",
-            {"key": key},
-            m.get("constraints") or {},
+        return self._write_commit(
+            m, [_entry(f) for f in m["files"]], "UNSET_PROPERTY", {"key": key},
             properties=props,
         )
-        return v
 
     def generated_columns(self, version: int | None = None) -> dict[str, str]:
         """col → SQL expression for ``GENERATED ALWAYS AS`` columns
         (Delta generated-columns analogue)."""
-        v = self.latest_version() if version is None else version
-        return dict(self._load_commit(v).get("generated_cols", {}))
+        return dict(self.snapshot(version)["generated_cols"])
 
     def identity_columns(self, version: int | None = None) -> dict[str, dict]:
         """col → ``{"start", "step", "next"}`` identity state (Delta
         ``GENERATED BY DEFAULT AS IDENTITY``): ids are unique and move
         in ``step``'s direction, NOT consecutive — exactly Delta's
         contract. ``next`` is the per-commit high watermark."""
-        v = self.latest_version() if version is None else version
         return {
-            k: dict(s)
-            for k, s in self._load_commit(v).get("identity_cols", {}).items()
+            k: dict(s) for k, s in self.snapshot(version)["identity_cols"].items()
         }
 
     def _apply_identity(
@@ -838,13 +985,11 @@ class VersionedParquetTable:
 
     def _identity_bump(
         self, m: dict, new_files: list[ManifestEntry]
-    ) -> dict[str, dict] | None:
+    ) -> dict[str, dict]:
         """Advance each identity column's ``next`` watermark past the
         values just written — read from the new files' FOOTER stats,
         zero extra data I/O."""
         ident = {k: dict(s) for k, s in (m.get("identity_cols") or {}).items()}
-        if not ident:
-            return None
         for c, spec in ident.items():
             step = int(spec["step"])
             vals = []
@@ -888,57 +1033,57 @@ class VersionedParquetTable:
         """Logical → physical column-name mapping at ``version`` (Delta
         column-mapping analogue). Physical = the name a column was born
         with; identity for never-renamed columns (absent from the map)."""
-        v = self.latest_version() if version is None else version
-        return dict(self._load_commit(v).get("column_mapping", {}))
+        return dict(self.snapshot(version)["column_mapping"])
+
+    @staticmethod
+    def _check_alterable(m: dict, col: str, verb: str) -> T.StructType:
+        """Refuse to rename/drop ``col`` (``verb``) when it is missing,
+        a partition column (its name is baked into directory layout and
+        the log's partition values), or referenced by a CHECK
+        constraint or generated column (the stored SQL text would
+        silently stop binding) or an identity column; returns ``m``'s
+        schema."""
+        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        if col not in schema.fieldNames():
+            raise ValueError(f"no such column: {col}")
+        if col in m["partition_cols"]:
+            raise ValueError(
+                f"cannot {verb} partition column {col}: partition values "
+                "are keyed by name in the directory layout and the log"
+            )
+
+        def uses(e: str) -> bool:
+            return re.search(rf"\b{re.escape(col)}\b", e, re.IGNORECASE) is not None
+
+        referenced = [n for n, e in m["constraints"].items() if uses(e)]
+        if referenced:
+            raise ValueError(
+                f"cannot {verb} {col}: referenced by CHECK constraint(s) "
+                f"{referenced} — drop them first"
+            )
+        gen_hits = [c for c, e in m["generated_cols"].items() if c == col or uses(e)]
+        if gen_hits:
+            raise ValueError(
+                f"cannot {verb} {col}: involved in generated column(s) {gen_hits}"
+            )
+        if col in m["identity_cols"]:
+            raise ValueError(f"cannot {verb} identity column {col}")
+        return schema
 
     def rename_column(self, old: str, new: str) -> int:
         """``ALTER TABLE RENAME COLUMN`` without rewriting a single
-        data file (Delta column mapping): a metadata-only commit that
-        renames the schema field and records logical→physical
-        indirection — existing files keep their on-disk (physical)
-        name, readers alias it back, and future writes keep emitting
-        the physical name so all live files agree on parquet schema.
-
-        Restrictions (hard conflicts, raised): partition columns (their
-        name is baked into directory layout and manifest partition
-        keys) and columns referenced by a CHECK constraint (the stored
-        SQL text would silently stop binding)."""
-        m = self._current()
-        pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        names = [f.name for f in schema.fields]
-        if old not in names:
-            raise ValueError(f"no such column: {old}")
-        if new in names:
+        data file (Delta column mapping, name mode): a metadata-only
+        commit that renames the schema field and records
+        logical→physical indirection — existing files keep their
+        on-disk (physical) name, readers alias it back, and future
+        writes keep emitting the physical name so all live files agree
+        on parquet schema. Refused for the columns
+        :meth:`_check_alterable` protects."""
+        m = self.snapshot()
+        schema = self._check_alterable(m, old, "rename")
+        if new in schema.fieldNames():
             raise ValueError(f"column already exists: {new}")
-        if old in pc:
-            raise ValueError(
-                f"cannot rename partition column {old}: partition values "
-                "are keyed by name in the directory layout and manifest"
-            )
-        cons = m.get("constraints") or {}
-        referenced = [
-            n for n, e in cons.items()
-            if re.search(rf"\b{re.escape(old)}\b", e, re.IGNORECASE)
-        ]
-        if referenced:
-            raise ValueError(
-                f"cannot rename {old}: referenced by CHECK constraint(s) "
-                f"{referenced} — drop them first"
-            )
-        gen = m.get("generated_cols") or {}
-        gen_hits = [
-            c for c, e in gen.items()
-            if c == old or re.search(rf"\b{re.escape(old)}\b", e, re.IGNORECASE)
-        ]
-        if gen_hits:
-            raise ValueError(
-                f"cannot rename {old}: involved in generated column(s) "
-                f"{gen_hits}"
-            )
-        if old in (m.get("identity_cols") or {}):
-            raise ValueError(f"cannot rename identity column {old}")
-        mapping = dict(m.get("column_mapping") or {})
+        mapping = dict(m["column_mapping"])
         mapping[new] = mapping.pop(old, old)
         new_schema = T.StructType(
             [
@@ -948,83 +1093,36 @@ class VersionedParquetTable:
                 for f in schema.fields
             ]
         )
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            new_schema,
-            pc,
-            "RENAME_COLUMN",
+        return self._write_commit(
+            m, [_entry(f) for f in m["files"]], "RENAME_COLUMN",
             {"renamed": f"{old} -> {new}"},
-            cons,
+            schema=new_schema,
             column_mapping=mapping,
         )
-        return v
 
     def drop_column(self, name: str) -> int:
         """``ALTER TABLE DROP COLUMN`` without rewriting data files
         (Delta column-mapping drop): a metadata-only commit removing
         the field from the schema — readers simply never project the
         on-disk column again, and time travel below the commit still
-        sees it. Same restrictions as rename: partition columns and
-        constraint-referenced columns are hard conflicts; dropping the
-        last column is refused."""
-        m = self._current()
-        pc = list(m["partition_cols"])
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        names = [f.name for f in schema.fields]
-        if name not in names:
-            raise ValueError(f"no such column: {name}")
-        if name in pc:
-            raise ValueError(f"cannot drop partition column {name}")
-        if len(names) == 1:
+        sees it. Same restrictions as rename; dropping the last column
+        is refused."""
+        m = self.snapshot()
+        schema = self._check_alterable(m, name, "drop")
+        if len(schema.fields) == 1:
             raise ValueError("cannot drop the only column")
-        cons = m.get("constraints") or {}
-        referenced = [
-            n for n, e in cons.items()
-            if re.search(rf"\b{re.escape(name)}\b", e, re.IGNORECASE)
-        ]
-        if referenced:
-            raise ValueError(
-                f"cannot drop {name}: referenced by CHECK constraint(s) "
-                f"{referenced} — drop them first"
-            )
-        gen = m.get("generated_cols") or {}
-        gen_hits = [
-            c for c, e in gen.items()
-            if c == name or re.search(rf"\b{re.escape(name)}\b", e, re.IGNORECASE)
-        ]
-        if gen_hits:
-            raise ValueError(
-                f"cannot drop {name}: involved in generated column(s) "
-                f"{gen_hits}"
-            )
-        if name in (m.get("identity_cols") or {}):
-            raise ValueError(f"cannot drop identity column {name}")
-        mapping = dict(m.get("column_mapping") or {})
+        mapping = dict(m["column_mapping"])
         physical = mapping.pop(name, name)
-        new_schema = T.StructType(
-            [f for f in schema.fields if f.name != name]
-        )
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            new_schema,
-            pc,
-            "DROP_COLUMN",
-            {"dropped": name},
-            cons,
+        return self._write_commit(
+            m, [_entry(f) for f in m["files"]], "DROP_COLUMN", {"dropped": name},
+            schema=T.StructType([f for f in schema.fields if f.name != name]),
             column_mapping=mapping,
             # tombstone the physical name: live files still hold its
             # data, so a later schema-evolving add of the same name
             # would silently resurrect old values — refused instead
             # (Delta avoids this with GUID physical names)
-            retired_physical=sorted(
-                set(m.get("retired_physical", [])) | {physical}
-            ),
+            retired_physical=sorted(set(m["retired_physical"]) | {physical}),
         )
-        return v
 
     def append(self, df: DataFrame, *, merge_schema: bool = False,
                metrics: "dict | Callable[[], dict] | None" = None,
@@ -1038,9 +1136,9 @@ class VersionedParquetTable:
 
         Concurrency: appends conflict with nothing (they only add
         files), so a version collision with another writer is resolved
-        optimistically — re-read the head manifest, merge the new files
+        optimistically — re-read the head snapshot, merge the new files
         on top, retry (Delta's blind-append semantics). The data files
-        are written once; only the manifest commit retries.
+        are written once; only the commit retries.
 
         ``txn=(app_id, txn_version)`` makes the append **idempotent**
         (Delta's ``txnAppId``/``txnVersion``): if the table has already
@@ -1054,11 +1152,9 @@ class VersionedParquetTable:
         partition columns — for writers that pre-arranged the physical
         layout themselves (e.g. range-sorted batches for data
         skipping) and accept the small-file trade."""
-        m = self._current()
-        if txn is not None:
-            applied = m.get("txns", {}).get(txn[0])
-            if applied is not None and applied >= txn[1]:
-                return m["version"]
+        m = self.snapshot()
+        if _txn_applied(m, txn):
+            return m["version"]
         pc = list(m["partition_cols"])
         schema = _table_schema(m, df) if merge_schema else _table_schema(m)
         ident_assigned = any(
@@ -1080,19 +1176,15 @@ class VersionedParquetTable:
         base_schema_json, base_cons = m["schema"], cons
         for attempt in range(10):
             files = [_entry(f) for f in m["files"]] + new_files
-            v = m["version"] + 1
-            txns = None
-            if txn is not None:
-                txns = {**m.get("txns", {}), txn[0]: txn[1]}
             try:
-                self._commit(
-                    v, files, schema, pc, "APPEND", metrics, cons, txns,
-                    identity_cols=ident, cdc_files=cdc_files,
+                v = self._write_commit(
+                    m, files, "APPEND", metrics, txn=txn, cdc_files=cdc_files,
+                    schema=schema, identity_cols=ident,
                 )
                 self._maybe_auto_compact(new_files)
                 return v
             except RuntimeError:  # version collision: rebase on new head
-                m = self._current()
+                m = self.snapshot()
                 if ident_assigned:
                     # identity values were allocated against the LOST
                     # head's watermark — the rival may hold overlapping
@@ -1105,14 +1197,12 @@ class VersionedParquetTable:
                 # on the NEW head so the retried commit never regresses
                 # a rival's advance
                 ident = self._identity_bump(m, new_files)
-                if txn is not None:
-                    applied = m.get("txns", {}).get(txn[0])
-                    if applied is not None and applied >= txn[1]:
-                        # the racing writer WAS this same logical
-                        # transaction (replica replay): our staged files
-                        # stay unreferenced (vacuum sweeps them) and the
-                        # batch still lands exactly once.
-                        return m["version"]
+                if _txn_applied(m, txn):
+                    # the racing writer WAS this same logical
+                    # transaction (replica replay): our staged files
+                    # stay unreferenced (vacuum sweeps them) and the
+                    # batch still lands exactly once.
+                    return m["version"]
                 # a blind append rebases only onto metadata-identical
                 # heads: if the winner changed the schema or the
                 # constraint set, this append's files were written and
@@ -1159,7 +1249,7 @@ class VersionedParquetTable:
                 thr = 16  # malformed property: fall back, don't fail
             touched = {tuple(sorted(e.partition.items())) for e in new_files}
             per: dict[tuple, int] = {}
-            for f in self._current()["files"]:
+            for f in self.snapshot()["files"]:
                 k = tuple(sorted(f["partition"].items()))
                 if k in touched:
                     per[k] = per.get(k, 0) + 1
@@ -1186,11 +1276,9 @@ class VersionedParquetTable:
         idempotent exactly like :meth:`append`'s — a replayed
         micro-batch that REPLACES state (e.g. a streaming model table)
         must not re-apply its update on top of its own result."""
-        m = self._current()
-        if txn is not None:
-            applied = m.get("txns", {}).get(txn[0])
-            if applied is not None and applied >= txn[1]:
-                return m["version"]
+        m = self.snapshot()
+        if _txn_applied(m, txn):
+            return m["version"]
         pc = list(m["partition_cols"])
         cons = m.get("constraints") or {}
         df = self._apply_identity(
@@ -1203,13 +1291,10 @@ class VersionedParquetTable:
             mapping=m.get("column_mapping"),
             layout_ready=layout_ready,
         )
-        v = m["version"] + 1
-        self._commit(
-            v, files, df.schema, pc, "OVERWRITE", metrics, cons,
-            txns={**m.get("txns", {}), txn[0]: txn[1]} if txn else None,
+        return self._write_commit(
+            m, files, "OVERWRITE", metrics, txn=txn, schema=df.schema,
             identity_cols=self._identity_bump(m, files),
         )
-        return v
 
     def replace_partitions(
         self,
@@ -1247,11 +1332,9 @@ class VersionedParquetTable:
         conflict (the replacement was computed from a stale read of
         exactly those partitions). ``adds`` rebase like a blind append.
         """
-        m = self._current()
-        if txn is not None:
-            applied = m.get("txns", {}).get(txn[0])
-            if applied is not None and applied >= txn[1]:
-                return m["version"]
+        m = self.snapshot()
+        if _txn_applied(m, txn):
+            return m["version"]
         pc = list(m["partition_cols"])
         schema = _table_schema(m, df, adds) if merge_schema else _table_schema(m)
         touched = {tuple(sorted(p.items())) for p in partitions}
@@ -1312,36 +1395,30 @@ class VersionedParquetTable:
                 for f in m["files"]
                 if tuple(sorted(f["partition"].items())) not in touched
             ]
-            v = m["version"] + 1
             # computed OUTSIDE the try: its own RuntimeError (missing
             # identity footer stats) must surface as itself, not be
             # misread as a lost commit race
             ident_state = self._identity_bump(m, new_files)
-            txns = None
-            if txn is not None:
-                txns = {**m.get("txns", {}), txn[0]: txn[1]}
             try:
-                self._commit(
-                    v, kept + new_files, schema, pc, operation, metrics, cons,
-                    txns,
-                    identity_cols=ident_state, cdc_files=cdc_files,
+                v = self._write_commit(
+                    m, kept + new_files, operation, metrics,
+                    txn=txn, cdc_files=cdc_files,
                     # pure re-layout commits rewrite the same visible
                     # rows — Delta's dataChange=false; the change feed
                     # skips them
                     data_change=operation not in ("COMPACT", "ZORDER"),
+                    schema=schema, identity_cols=ident_state,
                 )
                 if added:
                     self._maybe_auto_compact(added)
                 return v
             except RuntimeError:  # lost the version race — try to rebase
-                m2 = self._current()
-                if txn is not None:
-                    applied = m2.get("txns", {}).get(txn[0])
-                    if applied is not None and applied >= txn[1]:
-                        # the racing writer WAS this logical transaction
-                        # (replica replay): land-once; staged files stay
-                        # unreferenced for vacuum to sweep
-                        return m2["version"]
+                m2 = self.snapshot()
+                if _txn_applied(m2, txn):
+                    # the racing writer WAS this logical transaction
+                    # (replica replay): land-once; staged files stay
+                    # unreferenced for vacuum to sweep
+                    return m2["version"]
                 if ident_assigned:
                     raise RuntimeError(
                         f"partition rewrite of {self.path} lost a commit "
@@ -1360,7 +1437,7 @@ class VersionedParquetTable:
                 winner_parts = {
                     tuple(sorted(f["partition"].items()))
                     for p, f in head_files.items()
-                    if p not in base_files or not _same_record(f, base_files[p])
+                    if p not in base_files or not _same_record(f, _entry(base_files[p]))
                 } | {
                     tuple(sorted(f["partition"].items()))
                     for p, f in base_files.items()
@@ -1419,7 +1496,7 @@ class VersionedParquetTable:
         Cost ∝ touched partitions, never table size.
 
         ``mode="dv"`` is **merge-on-read**: old rows of matched/deleted
-        keys are marked dead via deletion-vector sidecars and the
+        keys are marked dead via deletion vectors and the
         updates append in the SAME commit — write amplification
         O(changed rows) instead of O(touched partitions). The trade is
         Delta's: reads of DV'd files pay a tiny anti-join until
@@ -1456,16 +1533,14 @@ class VersionedParquetTable:
                 "(the DV commit path does not thread writer "
                 "transactions yet)"
             )
-        m = self._current()
-        if txn is not None:
-            applied = m.get("txns", {}).get(txn[0])
-            if applied is not None and applied >= txn[1]:
-                return {
-                    "n_updated": 0,
-                    "n_inserted": 0,
-                    "n_deleted": 0,
-                    "skipped_txn": True,
-                }
+        m = self.snapshot()
+        if _txn_applied(m, txn):
+            return {
+                "n_updated": 0,
+                "n_inserted": 0,
+                "n_deleted": 0,
+                "skipped_txn": True,
+            }
         pc = list(m["partition_cols"])
         cur = self.read()
         updates = self._apply_generated(updates, m.get("generated_cols"))
@@ -1583,7 +1658,7 @@ class VersionedParquetTable:
             if touched:
                 # persisted: the positional scan + semi-join feeds the
                 # emptiness gate, remove_rows' per-file counts, AND the
-                # sidecar write — without it the dominant I/O runs 3x
+                # deletion-vector build — without it the dominant I/O runs 3x
                 dead = (
                     _semi(
                         self.read_partitions(touched, with_position=True),
@@ -1647,38 +1722,30 @@ class VersionedParquetTable:
         carried by reference. Cost ∝ files that might hold deleted
         rows — at 100 TB a predicate on a clustered column touches a
         handful of files, not the table. Rewritten files whose rows all
-        matched simply vanish from the manifest.
+        matched simply vanish from the snapshot.
         """
-        m = self._current()
+        m = self.snapshot()
         pc = list(m["partition_cols"])
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         candidates = {e.path for e in self.files_for(filters)}
         kept = [_entry(f) for f in m["files"] if f["path"] not in candidates]
         if not candidates:
-            v = m["version"] + 1
-            self._commit(
-                v, kept, schema, pc, "DELETE",
-                metrics or {"n_deleted": 0}, m.get("constraints") or {},
-            )
+            self._write_commit(m, kept, "DELETE", metrics or {"n_deleted": 0})
             return {"n_deleted": 0, "n_files_rewritten": 0}
         cand_df = self._read_paths(m, sorted(candidates))
-        keep_pred = None
-        for c, op, v_ in filters:
-            e_ = _filter_expr(c, op, v_)
-            keep_pred = e_ if keep_pred is None else (keep_pred & e_)
-        survivors = cand_df.filter(~F.coalesce(keep_pred, F.lit(False)))
+        hit = _hit(filters)
+        survivors = cand_df.filter(~hit)
         cdc_files = None
         if self._cdc_enabled(m):
             cdc_files = self._write_cdc(
-                cand_df.filter(F.coalesce(keep_pred, F.lit(False)))
+                cand_df.filter(hit)
                 .withColumn("_change_type", F.lit("delete"))
             )
         n_before = sum(
-            (f.get("rows") or 0) - (f.get("dv") or {}).get("count", 0)
+            (f["rows"] or 0) - (f["dv"] or {}).get("cardinality", 0)
             for f in m["files"]
             if f["path"] in candidates
         )
-        cons = m.get("constraints") or {}
         new_files = self._write_files(
             _align(survivors, schema), pc,
             mapping=m.get("column_mapping"),
@@ -1689,14 +1756,12 @@ class VersionedParquetTable:
             layout_ready=True,
         )
         n_after = sum(e.rows or 0 for e in new_files)
-        v = m["version"] + 1
         out = {
             "n_deleted": n_before - n_after,
             "n_files_rewritten": len(candidates),
         }
-        self._commit(
-            v, kept + new_files, schema, pc, "DELETE", metrics or out, cons,
-            cdc_files=cdc_files,
+        self._write_commit(
+            m, kept + new_files, "DELETE", metrics or out, cdc_files=cdc_files
         )
         return out
 
@@ -1714,14 +1779,14 @@ class VersionedParquetTable:
            table's evolution is an honest DELETE (CDF pre-images,
            observation metrics, constraints) and downstream MVs fold
            it correctly.
-        2. Every earlier retained version's manifests are then
-           rewritten IN PLACE: data skipping (``files_for`` per
-           version) narrows to files whose stats admit a match, each
-           is re-read under the head schema, matching rows are dropped,
-           and the replacement entries (fresh footer stats) are
-           substituted into every manifest, add/remove delta, and
-           checkpoint that referenced the old file. Files whose rows
-           all matched vanish from history entirely.
+        2. Every earlier retained version's log is then rewritten IN
+           PLACE: data skipping (``files_for`` per version) narrows to
+           files whose stats admit a match, each is re-read under the
+           head schema, matching rows are dropped, and the replacement
+           entries (fresh footer stats) are substituted into every
+           commit's ``add``/``remove`` actions and every checkpoint
+           that referenced the old file. Files whose rows all matched
+           vanish from history entirely.
         3. Past commits' change-data files are scrubbed the same way
            (in place, path-stable) so a CDF replay cannot resurrect
            purged rows either.
@@ -1736,75 +1801,58 @@ class VersionedParquetTable:
         ``close_mode="dv"``) are handled, not refused (round-9
         directive #2): the rewrite shifts row positions, so a DV'd
         file's replacement is forced to a single file written in
-        ascending old-position order, and every sidecar referencing it
-        is rewritten in place — purged positions dropped, surviving
-        dead positions remapped to the new (file, position) — so each
+        ascending old-position order, and every deletion vector of it
+        is remapped into a new one — purged positions dropped,
+        surviving dead positions moved to the new position — so each
         retained version still sees exactly its own dead rows, minus
         the purged ones.
 
-        Limitations (explicit, never silent): manifest
-        rewrites are per-file atomic (``os.replace``) but not
-        transactional across versions; a crash mid-purge leaves a
-        partially-scrubbed history and RE-RUNNING the same purge
-        completes it (idempotent: already-scrubbed files no longer
-        match). DV sidecar replacement is write-new/remove-old/rename —
-        a crash in that window leaves the sidecar directory missing and
-        scans of versions referencing it FAIL LOUD (no resurrection) —
-        re-create from a backup or vacuum the referencing versions.
-        Rows already delivered to external consumers cannot be
-        recalled — that is inherent to erasure, not this mechanism.
+        Limitations (explicit, never silent): commit and checkpoint
+        rewrites are per-file atomic (``os.replace``, local
+        filesystem) but not transactional across versions; a crash
+        mid-purge leaves a partially-scrubbed history and RE-RUNNING
+        the same purge completes it (idempotent: already-scrubbed files
+        no longer match). Rows already delivered to external consumers
+        cannot be recalled — that is inherent to erasure, not this
+        mechanism.
         """
         # candidate files across ALL retained versions (dedup by path;
-        # a file shared by many versions is rewritten once), plus the
-        # union of DV sidecars referencing each candidate — collected
-        # BEFORE any mutation
+        # a file shared by many versions is rewritten once), plus every
+        # deletion vector any version holds for each — collected BEFORE
+        # any mutation
         candidates: dict[str, dict] = {}
-        dv_sidecars_by_path: dict[str, set[str]] = {}
+        dvs_by_path: dict[str, dict] = {}
         for v in self.versions():
             admitted = {e.path for e in self.files_for(filters, v)}
-            for f in self._snapshot_files(v):
+            for f in self.snapshot(v)["files"]:
                 if f["path"] not in admitted:
                     continue
                 candidates.setdefault(f["path"], f)
-                if f.get("dv"):
-                    # dv is per-VERSION metadata on a shared path —
-                    # remember every sidecar that may need a remap
-                    dv_sidecars_by_path.setdefault(f["path"], set()).update(
-                        f["dv"]["paths"]
-                    )
+                if f["dv"]:
+                    dvs_by_path.setdefault(f["path"], {})[_dv_key(f["dv"])] = f["dv"]
 
         head_out = self.delete(filters)
-        head = self.latest_version()
-        head_m = self._load_manifest(head)
+        head_m = self.snapshot()
         pc = list(head_m["partition_cols"])
         schema = T.StructType.fromJson(json.loads(head_m["schema"]))
-        mapping = head_m.get("column_mapping")
+        mapping = head_m["column_mapping"]
 
-        pred = None
-        for c, op, v_ in filters:
-            e_ = _filter_expr(c, op, v_)
-            pred = e_ if pred is None else (pred & e_)
-        hit = F.coalesce(pred, F.lit(False))
+        hit = _hit(filters)
         retained = self.versions()
 
         # rewrite candidate data files (None = every row matched)
-        replacement: dict[str, list[dict] | None] = {}
-        # DV'd files that got survivors: old path -> (new path, lazy
-        # old-position -> new-position map), consumed by the sidecar
-        # remap below
-        remap: dict[str, tuple[str, DataFrame]] = {}
+        replacement: dict[str, list[ManifestEntry] | None] = {}
+        # (old path, old DV identity) -> remapped DV (None: none survive)
+        new_dvs: dict[tuple, dict | None] = {}
         n_purged = 0
         for p, f in sorted(candidates.items()):
-            has_dv = p in dv_sidecars_by_path
-            df = self._scan(
-                [dict(f, dv=None)], schema,
-                with_position=has_dv, mapping=mapping,
-            )
+            has_dv = p in dvs_by_path
+            df = self._scan([dict(f, dv=None)], head_m, with_position=has_dv)
             survivors = df.filter(~hit)
             n_kept = survivors.count()
-            n_before = f.get("rows")
+            n_before = f["rows"]
             if n_before is None:
-                # manifest entry lacks a row stat: one extra action on
+                # log entry lacks a row stat: one extra action on
                 # the already-scanned file beats a needless rewrite
                 # (and a negative erasure count in the report)
                 n_before = df.count()
@@ -1814,181 +1862,123 @@ class VersionedParquetTable:
             if n_kept == 0:
                 replacement[p] = None
                 continue
-            if has_dv:
-                # The rewrite shifts row positions, so (a) the
-                # replacement must be exactly ONE file written in
-                # ascending old-position order, and (b) an old->new
-                # position map feeds the sidecar remap. Dead-but-
-                # unpurged rows STAY in the file — the per-version
-                # sidecars keep marking them dead.
-                # global-window-ok: scope is the rows of ONE data file,
-                # the same bound as the single-task rewrite below.
-                w = Window.orderBy("__pos").rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow
-                )
-                pos_map = (
-                    df.select("__pos", (~hit).alias("__keep"))
-                    .withColumn(
-                        "__new_pos",
-                        F.sum(F.col("__keep").cast("long")).over(w) - 1,
-                    )
-                    .filter("__keep")
-                    .select("__pos", "__new_pos")
-                    .persist()
-                )
-                ordered = (
-                    survivors.repartition(1)
-                    .sortWithinPartitions("__pos")
-                    .drop("__file", "__pos")
-                )
-                new_entries = self._write_files(
-                    _align(ordered, schema), pc, mapping=mapping,
-                    layout_ready=True,
-                )
-                if len(new_entries) != 1:  # pragma: no cover - invariant
-                    raise AssertionError(
-                        f"purge: DV'd file {p} rewrote to "
-                        f"{len(new_entries)} files; position remap "
-                        "requires exactly one"
-                    )
-                remap[p] = (new_entries[0].path, pos_map)
-            else:
-                new_entries = self._write_files(
+            if not has_dv:
+                replacement[p] = self._write_files(
                     _align(survivors, schema), pc, mapping=mapping,
                     layout_ready=True,
                 )
-            replacement[p] = [
-                {
-                    "path": e.path,
-                    "partition": e.partition,
-                    "stats": e.stats,
-                    "rows": e.rows,
-                }
-                for e in new_entries
-            ]
-
-        # Remap and rewrite the DV sidecars of rewritten files IN PLACE
-        # (paths are referenced by every retained manifest and must not
-        # move): purged positions drop out, surviving dead positions
-        # move to the replacement (file, position). Done BEFORE the old
-        # data files are removed — the lazy position maps read them.
-        n_surv: dict[tuple[str, str], int] = {}
-        dv_touched = sorted(p for p in dv_sidecars_by_path if p in replacement)
-        if dv_touched:
-            remap_all: DataFrame | None = None
-            for p in sorted(remap):
-                newp, pm = remap[p]
-                fr = pm.select(
-                    F.lit(p).alias("__file"),
-                    F.col("__pos"),
-                    F.lit(newp).alias("__new_file"),
-                    F.col("__new_pos"),
-                )
-                remap_all = (
-                    fr if remap_all is None else remap_all.unionByName(fr)
-                )
-            affected = sorted(
-                {s for p in dv_touched for s in dv_sidecars_by_path[p]}
+                continue
+            # The rewrite shifts row positions, so (a) the replacement
+            # must be exactly ONE file written in ascending old-position
+            # order, and (b) an old->new position map remaps the dead
+            # rows. Dead-but-unpurged rows STAY in the file — the
+            # per-version deletion vectors keep marking them dead.
+            # global-window-ok: scope is the rows of ONE data file,
+            # the same bound as the single-task rewrite below.
+            w = Window.orderBy("__pos").rowsBetween(
+                Window.unboundedPreceding, Window.currentRow
             )
-            for s in affected:
-                s_dir = os.path.join(self.path, DV_DIR, s)
-                s_df = self.spark.read.parquet(s_dir).select("__file", "__pos")
-                out_df = s_df.filter(~F.col("__file").isin(dv_touched))
-                if remap_all is not None:
-                    moved = s_df.join(remap_all, ["__file", "__pos"], "inner")
-                    # per-(sidecar, old path) surviving dead-row counts:
-                    # bounded by files touched, feeds the per-version
-                    # dv.count update in the manifest substitution
-                    for r in (
-                        moved.groupBy("__file")
-                        .agg(F.count(F.lit(1)).alias("n"))
+            pos_map = (
+                df.select("__pos", (~hit).alias("__keep"))
+                .withColumn(
+                    "__new_pos",
+                    F.sum(F.col("__keep").cast("long")).over(w) - 1,
+                )
+                .filter("__keep")
+                .select("__pos", "__new_pos")
+                .persist()
+            )
+            ordered = (
+                survivors.repartition(1)
+                .sortWithinPartitions("__pos")
+                .drop("__file", "__pos")
+            )
+            new_entries = self._write_files(
+                _align(ordered, schema), pc, mapping=mapping,
+                layout_ready=True,
+            )
+            if len(new_entries) != 1:  # pragma: no cover - invariant
+                raise AssertionError(
+                    f"purge: DV'd file {p} rewrote to "
+                    f"{len(new_entries)} files; position remap "
+                    "requires exactly one"
+                )
+            replacement[p] = new_entries
+            keys = sorted(dvs_by_path[p], key=str)
+            vectors = []
+            for k in keys:
+                dead = self.spark.createDataFrame(
+                    [(x,) for x in self._dead_positions(dvs_by_path[p][k])],
+                    "__pos long",
+                )
+                vectors.append(
+                    sorted(
+                        r[0]
+                        for r in pos_map.join(dead, "__pos")
+                        .select("__new_pos")
                         .collect()
-                    ):
-                        n_surv[(s, r["__file"])] = int(r["n"])
-                    out_df = out_df.unionByName(
-                        moved.select(
-                            F.col("__new_file").alias("__file"),
-                            F.col("__new_pos").alias("__pos"),
-                        )
                     )
-                tmp = s_dir + f".tmp-{uuid.uuid4().hex}"
-                out_df.coalesce(1).write.parquet(tmp)
-                shutil.rmtree(s_dir)
-                os.rename(tmp, s_dir)
-            for p in remap:
-                remap[p][1].unpersist()
+                )
+            pos_map.unpersist()
+            written = iter(
+                delta_dv.write_dv_file([x for x in vectors if x], self.path, self._fs)
+                if any(vectors)
+                else []
+            )
+            for k, vec in zip(keys, vectors):
+                new_dvs[(p, k)] = next(written) if vec else None
 
-        def _map_files(entries: list[dict]) -> tuple[list[dict], bool]:
-            out_, changed = [], False
-            for f in entries:
-                if f["path"] not in replacement:
-                    out_.append(f)
+        def _map(actions: list[dict]) -> tuple[list[dict], bool]:
+            """Substitute the replacements into log actions."""
+            out, changed = [], False
+            for a in actions:
+                kind = next((k for k in ("add", "remove") if k in a), None)
+                rel = (
+                    posixpath.relpath(unquote(a[kind]["path"]), DATA_DIR)
+                    if kind
+                    else None
+                )
+                if rel not in replacement:
+                    out.append(a)
                     continue
                 changed = True
-                repl = replacement[f["path"]] or []
-                if not f.get("dv"):
-                    out_.extend(dict(r) for r in repl)
-                    continue
-                # this version marks some of the file's rows dead: the
-                # replacement is one position-stable file (forced above)
-                # whose sidecars were remapped in place — carry the same
-                # sidecar list with the post-purge dead count, dropping
-                # the reference entirely when every dead row was purged
-                count = sum(
-                    n_surv.get((s, f["path"]), 0) for s in f["dv"]["paths"]
-                )
-                for r in repl:
-                    rec = dict(r)
-                    if count > 0:
-                        rec["dv"] = {
-                            "paths": list(f["dv"]["paths"]),
-                            "count": count,
-                        }
-                    out_.append(rec)
-            return out_, changed
+                old = a[kind]
+                dv = old.get("deletionVector")
+                dv = new_dvs[(rel, _dv_key(dv))] if dv else None
+                for e in replacement[rel] or []:
+                    add = self._add_action(
+                        ManifestEntry(e.path, e.partition, e.stats, e.rows, dv),
+                        None,
+                        old.get("dataChange", True),
+                    )["add"]
+                    if kind == "remove":
+                        add = {
+                            k: add[k]
+                            for k in ("path", "dataChange", "partitionValues", "size")
+                        } | {"deletionTimestamp": old.get("deletionTimestamp")}
+                        if dv:
+                            add["deletionVector"] = dv
+                    out.append({kind: add})
+            return out, changed
 
         if replacement:
-            # substitute into every retained manifest (full lists AND
-            # add/remove deltas) and checkpoint, atomically per file
+            # substitute into every retained commit and checkpoint,
+            # atomically per file
             for v in retained:
-                raw = self._load_commit(v)
-                changed = False
-                if "files" in raw:
-                    raw["files"], ch = _map_files(raw["files"])
-                    changed |= ch
-                if raw.get("add"):
-                    raw["add"], ch = _map_files(raw["add"])
-                    changed |= ch
-                if raw.get("remove"):
-                    new_rm = []
-                    for rp in raw["remove"]:
-                        if rp in replacement:
-                            changed = True
-                            new_rm.extend(
-                                r["path"] for r in (replacement[rp] or [])
-                            )
-                        else:
-                            new_rm.append(rp)
-                    raw["remove"] = new_rm
+                mapped, changed = _map(self.commit_actions(v))
                 if changed:
-                    tmp = self._manifest_path(v) + f".tmp-{uuid.uuid4().hex}"
+                    target = fsio.local_path(self._log._commit_file(v))
+                    tmp = f"{target}.tmp-{uuid.uuid4().hex}"
                     with open(tmp, "w") as fh:
-                        json.dump(raw, fh)
-                    os.replace(tmp, self._manifest_path(v))
-                ck = self._ckpt_file(v)
-                if ck:
-                    entries = self._read_ckpt_file(ck)
-                    mapped, ch = _map_files(entries)
-                    if ch:
-                        self._write_checkpoint(v, mapped)
-                        if ck.endswith(".json"):
-                            # the rewrite lands at the canonical parquet
-                            # path; a legacy JSON checkpoint left behind
-                            # would still hold purged file references
-                            os.remove(ck)
+                        fh.writelines(json.dumps(a) + "\n" for a in mapped)
+                    os.replace(tmp, target)
+            for v in self._log._checkpoint_versions():
+                mapped, changed = _map(self._log.checkpoint_actions(v))
+                if changed:
+                    self._checkpoint(v, mapped)
             self._snap_cache.clear()
             for p in replacement:
-                full = os.path.join(self.path, DATA_DIR, p)
+                full = self._file(p)
                 _drop_crc_sidecar(full)
                 try:
                     os.remove(full)
@@ -2020,18 +2010,14 @@ class VersionedParquetTable:
 
         n = 0
         for v in retained:
-            for rel in self._load_commit(v).get("cdc_files") or []:
+            for rel in self._cdc_paths(v):
                 full = os.path.join(self.path, CDC_DIR, rel)
                 if not os.path.exists(full):
                     continue
                 df = self.spark.read.parquet(full)
                 if any(c not in df.columns for c, _, _ in filters):
                     continue  # pre-evolution file: cannot match
-                pred = None
-                for c, op, v_ in filters:
-                    e_ = _filter_expr(c, op, v_)
-                    pred = e_ if pred is None else (pred & e_)
-                survivors = df.filter(~F.coalesce(pred, F.lit(False)))
+                survivors = df.filter(~_hit(filters))
                 n_kept = survivors.count()
                 if n_kept == df.count():
                     continue
@@ -2076,7 +2062,7 @@ class VersionedParquetTable:
         the rewritten files on the write job. CDF emits
         update_preimage/update_postimage pairs.
         """
-        m = self._current()
+        m = self.snapshot()
         gen = m.get("generated_cols") or {}
         bad = sorted(set(set_exprs) & set(gen))
         if bad:
@@ -2093,18 +2079,10 @@ class VersionedParquetTable:
         candidates = {e.path for e in self.files_for(filters)}
         kept = [_entry(f) for f in m["files"] if f["path"] not in candidates]
         if not candidates:
-            v = m["version"] + 1
-            self._commit(
-                v, kept, schema, pc, "UPDATE",
-                metrics or {"n_updated": 0}, m.get("constraints") or {},
-            )
+            self._write_commit(m, kept, "UPDATE", metrics or {"n_updated": 0})
             return {"n_updated": 0, "n_files_rewritten": 0}
         cand_df = self._read_paths(m, sorted(candidates))
-        pred = None
-        for c, op, v_ in filters:
-            e_ = _filter_expr(c, op, v_)
-            pred = e_ if pred is None else (pred & e_)
-        hit = F.coalesce(pred, F.lit(False))
+        hit = _hit(filters)
         matched = cand_df.filter(hit)
         updated = matched.withColumns(
             {c: F.expr(e) for c, e in set_exprs.items()}
@@ -2133,14 +2111,12 @@ class VersionedParquetTable:
             mapping=m.get("column_mapping"),
             layout_ready=True,
         )
-        v = m["version"] + 1
         out = {
             "n_updated": n_updated,
             "n_files_rewritten": len(candidates),
         }
-        self._commit(
-            v, kept + new_files, schema, pc, "UPDATE", metrics or out, cons,
-            cdc_files=cdc_files,
+        self._write_commit(
+            m, kept + new_files, "UPDATE", metrics or out, cdc_files=cdc_files
         )
         return out
 
@@ -2157,61 +2133,57 @@ class VersionedParquetTable:
         """Row-level delete WITHOUT rewriting files (Delta deletion
         vectors): ``dead`` is a ``(__file, __pos)`` frame — typically
         built from a ``with_position=True`` read — whose rows are
-        marked dead via a parquet DV sidecar; affected manifest entries
-        get (or extend) their ``dv`` reference, every file's bytes stay
+        marked dead in a Delta deletion vector: each affected file gets
+        a new bitmap (its old dead rows plus these), all written to one
+        ``deletion_vector_<uuid>.bin``, and every file's bytes stay
         untouched. ``adds`` appends new files in the same commit — the
         UPDATE pattern (DV the old row + append its replacement), which
         is what turns an O(partition) copy-on-write rewrite into an
         O(changed rows) commit. At 100 TB closing 10 keys in a 1 TB
-        day-partition writes 10 rows + a KB-sized sidecar, not the day.
+        day-partition writes 10 rows + a KB-sized bitmap, not the day.
 
         ``merge_schema`` widens the committed schema with the new
         nullable columns of ``adds``.
 
         Read cost until compaction: scans of DV'd files pay a broadcast
-        anti-join against the (tiny) sidecars; ``compact()`` rewrites
+        anti-join against the (tiny) dead-row set; ``compact()`` rewrites
         DV'd partitions and clears them.
         """
-        m = self._current()
+        m = self.snapshot()
         pc = list(m["partition_cols"])
         schema = _table_schema(m, adds) if merge_schema else _table_schema(m)
-        cons = m.get("constraints") or {}
-        # per-file dead counts: bounded by files touched, driver-safe
+        cons = m["constraints"]
+        # dead positions per file, on the driver: the bitmaps are built
+        # here, and their size is bounded by the rows deleted
         per_file = {
-            r["__file"]: r["n"]
+            r["__file"]: r["ps"]
             for r in dead.groupBy("__file")
-            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(F.collect_list("__pos").alias("ps"))
             .collect()
         }
-        live = {f["path"] for f in m["files"]}
-        unknown = sorted(set(per_file) - live)
+        by_path = {f["path"]: f for f in m["files"]}
+        unknown = sorted(set(per_file) - set(by_path))
         if unknown:
             raise ValueError(
                 f"deletion vector targets unknown files: {unknown[:3]}"
             )
-        dv_rel = None
+        dvs: dict[str, dict] = {}
         if per_file:
-            # distributed sidecar write (no driver collect of positions)
-            dv_rel = f"dv-{uuid.uuid4().hex}"
-            dead.select("__file", "__pos").write.parquet(
-                os.path.join(self.path, DV_DIR, dv_rel)
+            paths = sorted(per_file)
+            vectors = [
+                sorted(set(per_file[p]).union(self._dead_positions(by_path[p]["dv"])))
+                for p in paths
+            ]
+            dvs = dict(
+                zip(paths, delta_dv.write_dv_file(vectors, self.path, self._fs))
             )
-        entries: list[ManifestEntry] = []
-        for f in m["files"]:
-            e = _entry(f)
-            if e.path in per_file:
-                old = e.dv or {"paths": [], "count": 0}
-                e = ManifestEntry(
-                    e.path,
-                    e.partition,
-                    e.stats,
-                    e.rows,
-                    {
-                        "paths": old["paths"] + [dv_rel],
-                        "count": old["count"] + per_file[e.path],
-                    },
-                )
-            entries.append(e)
+        entries = [
+            ManifestEntry(
+                f["path"], f["partition"], f["stats"], f["rows"],
+                dvs.get(f["path"], f["dv"]),
+            )
+            for f in m["files"]
+        ]
         new_files: list[ManifestEntry] = []
         if adds is not None:
             adds = self._apply_identity(
@@ -2234,10 +2206,7 @@ class VersionedParquetTable:
             if per_file:
                 affected = [f for f in m["files"] if f["path"] in per_file]
                 pre = (
-                    self._scan(
-                        affected, schema, with_position=True,
-                        mapping=m.get("column_mapping"),
-                    )
+                    self._scan(affected, m, schema=schema, with_position=True)
                     .join(
                         dead.select("__file", "__pos"),
                         on=["__file", "__pos"],
@@ -2256,17 +2225,14 @@ class VersionedParquetTable:
             for p in parts[1:]:
                 change = change.unionByName(p)
             cdc_files = self._write_cdc(change)
-        n_dead = sum(per_file.values())
-        v = m["version"] + 1
-        self._commit(
-            v,
+        n_dead = sum(len(ps) for ps in per_file.values())
+        v = self._write_commit(
+            m,
             entries,
-            schema,
-            pc,
             operation,
             metrics or {"n_deleted": n_dead, "n_files_dv": len(per_file)},
-            cons,
             cdc_files=cdc_files,
+            schema=schema,
             # the appended replacements may carry identity values
             # (dv-mode upsert): advance the watermark past them, or a
             # later assignment would reuse their ids
@@ -2301,7 +2267,7 @@ class VersionedParquetTable:
         skipping, the layout Delta uses for the same job. Plain
         compaction keeps ``output_files=1`` per partition.
         """
-        m = self._current()
+        m = self.snapshot()
         pc = list(m["partition_cols"])
         if zorder_by:
             if only_partitions is not None:
@@ -2417,38 +2383,32 @@ class VersionedParquetTable:
         immutable and carried by reference; fails cleanly if retention
         (``vacuum``) already deleted any file of the target version,
         exactly like Delta."""
-        m = self._load_manifest(version)  # raises if version unknown
-        data_root = os.path.join(self.path, DATA_DIR)
+        m = self.snapshot(version)  # raises if version unknown
         missing = [
-            f["path"]
-            for f in m["files"]
-            if not os.path.exists(os.path.join(data_root, f["path"]))
+            f["path"] for f in m["files"] if not os.path.exists(self._file(f["path"]))
         ] + [
             p
             for f in m["files"]
-            for p in ((f.get("dv") or {}).get("paths", []))
-            if not os.path.exists(os.path.join(self.path, DV_DIR, p))
+            if f["dv"] and (p := self._dv_file(f["dv"])) and not os.path.exists(p)
         ]
         if missing:
             raise FileNotFoundError(
                 f"cannot restore v{version}: {len(missing)} data file(s) "
                 f"removed by retention, e.g. {missing[0]!r}"
             )
-        cur = self._current()
-        v = cur["version"] + 1
-        self._commit(
-            v,
+        return self._write_commit(
+            self.snapshot(),
             [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
             "RESTORE",
             {"restored_version": version},
-            m.get("constraints") or {},
-            column_mapping=m.get("column_mapping", {}),
-            retired_physical=m.get("retired_physical", []),
-            generated_cols=m.get("generated_cols", {}),
+            **{
+                k: m[k]
+                for k in (
+                    "schema", "partition_cols", "constraints", "column_mapping",
+                    "retired_physical", "generated_cols",
+                )
+            },
         )
-        return v
 
     # -- CHECK constraints ---------------------------------------------------
 
@@ -2457,7 +2417,7 @@ class VersionedParquetTable:
         Existing rows are validated first (one column-pruned scan, like
         Delta); from then on every write enforces the check on the
         write job itself and aborts pre-commit on violation."""
-        m = self._current()
+        m = self.snapshot()
         cons = dict(m.get("constraints") or {})
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists")
@@ -2473,123 +2433,96 @@ class VersionedParquetTable:
                 f"{expr_sql!r}"
             )
         cons[name] = expr_sql
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
-            "ADD_CONSTRAINT",
-            {"name": name, "expr": expr_sql},
-            cons,
+        return self._write_commit(
+            m, [_entry(f) for f in m["files"]], "ADD_CONSTRAINT",
+            {"name": name, "expr": expr_sql}, constraints=cons,
         )
-        return v
 
     def drop_constraint(self, name: str) -> int:
-        m = self._current()
+        m = self.snapshot()
         cons = dict(m.get("constraints") or {})
         if name not in cons:
             raise ValueError(f"no constraint {name!r}")
         del cons[name]
-        v = m["version"] + 1
-        self._commit(
-            v,
-            [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
-            "DROP_CONSTRAINT",
-            {"name": name},
-            cons,
+        return self._write_commit(
+            m, [_entry(f) for f in m["files"]], "DROP_CONSTRAINT",
+            {"name": name}, constraints=cons,
         )
-        return v
 
     def clone(self, dest_path: str) -> "VersionedParquetTable":
         """Shallow clone (Delta ``CREATE TABLE ... SHALLOW CLONE``
-        analogue): a new independent table whose v0 manifest carries the
-        source's current snapshot with zero data copied — files are
-        hardlinked (copy fallback across filesystems). Because data
-        files are immutable-once-written in both tables, later writes,
-        compaction or ``vacuum`` on either side never disturb the other:
-        each manipulates only its own manifest and link names."""
+        analogue): a new independent table whose v0 commit carries the
+        source's current snapshot and metadata with zero data copied —
+        data and deletion-vector files are hardlinked (copy fallback
+        across filesystems). Because files are immutable-once-written in
+        both tables, later writes, compaction or ``vacuum`` on either
+        side never disturb the other: each manipulates only its own log
+        and link names."""
         if self.is_table(dest_path):
             raise FileExistsError(dest_path)
-        m = self._current()
-        src_root = os.path.join(self.path, DATA_DIR)
-        dst_root = os.path.join(dest_path, DATA_DIR)
-        for f in m["files"]:
-            src = os.path.join(src_root, f["path"])
-            dst = os.path.join(dst_root, f["path"])
+        m = self.snapshot()
+        t = VersionedParquetTable(self.spark, dest_path)
+        links = [(self._file(f["path"]), t._file(f["path"])) for f in m["files"]]
+        links += [
+            (src, os.path.join(dest_path, os.path.relpath(src, self.path)))
+            for src in {self._dv_file(f["dv"]) for f in m["files"] if f["dv"]}
+            if src
+        ]
+        for src, dst in links:
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             try:
                 os.link(src, dst)
+            except FileExistsError:  # one DV file shared by many entries
+                pass
             except OSError:  # cross-device: fall back to a real copy
                 shutil.copy2(src, dst)
-        for p in sorted(
-            {
-                p
-                for f in m["files"]
-                for p in ((f.get("dv") or {}).get("paths", []))
-            }
-        ):
-            shutil.copytree(
-                os.path.join(self.path, DV_DIR, p),
-                os.path.join(dest_path, DV_DIR, p),
-            )
-        t = VersionedParquetTable(self.spark, dest_path)
-        t._commit(
-            0,
+        t._write_commit(
+            None,
             [_entry(f) for f in m["files"]],
-            T.StructType.fromJson(json.loads(m["schema"])),
-            list(m["partition_cols"]),
             "CLONE",
             {"source_path": self.path, "source_version": m["version"]},
-            m.get("constraints") or {},
+            **{k: m[k] for k in _EMPTY_META},
+            schema=m["schema"],
         )
         return t
 
     def partition_columns(self) -> list[str]:
-        """The partition columns the table was created with — manifest
+        """The partition columns the table was created with — log
         metadata only, no data or file I/O."""
-        return list(self._current()["partition_cols"])
+        return list(self.snapshot()["partition_cols"])
 
     def detail(self) -> dict:
         """``DESCRIBE DETAIL`` analogue: one dict of table-level facts
-        from manifest metadata alone (no data I/O — footer stats were
+        from the log alone (no data I/O — sizes and footer stats were
         captured at commit time)."""
-        m = self._current()
-        data_root = os.path.join(self.path, DATA_DIR)
-        size = 0
-        for f in m["files"]:
-            p = os.path.join(data_root, f["path"])
-            if os.path.exists(p):
-                size += os.path.getsize(p)
-        rows = [f.get("rows") for f in m["files"]]
-        n_dead = sum((f.get("dv") or {}).get("count", 0) for f in m["files"])
+        m = self.snapshot()
+        rows = [f["rows"] for f in m["files"]]
+        n_dead = sum((f["dv"] or {}).get("cardinality", 0) for f in m["files"])
         return {
             "location": self.path,
             "version": m["version"],
             "num_files": len(m["files"]),
-            "size_bytes": size,
+            "size_bytes": sum(f["size"] or 0 for f in m["files"]),
             "num_rows": sum(r for r in rows if r is not None) - n_dead
             if all(r is not None for r in rows)
             else None,
             "num_dead_rows": n_dead,
             "partition_cols": list(m["partition_cols"]),
             "num_versions": len(self.versions()),
-            "constraints": dict(m.get("constraints") or {}),
-            "generated_cols": dict(m.get("generated_cols") or {}),
-            "properties": dict(m.get("properties") or {}),
+            "constraints": dict(m["constraints"]),
+            "generated_cols": dict(m["generated_cols"]),
+            "properties": dict(m["properties"]),
         }
 
     def fsck(self, *, deep: bool = False) -> dict:
         """Read-only storage-integrity audit (the detection half of
         ``FSCK REPAIR TABLE``): re-resolve every RETAINED version's
-        manifest and verify each referenced data file and
-        deletion-vector sidecar is actually present on storage;
+        snapshot and verify each referenced data file and
+        deletion-vector file is actually present on storage;
         ``deep=True`` additionally re-reads every distinct live data
-        file's parquet FOOTER and compares its row count to the
-        manifest's recorded ``rows`` — catching truncation or
-        corruption that an existence check can't.
+        file's parquet FOOTER and compares its row count to the log's
+        recorded ``numRecords`` — catching truncation or corruption
+        that an existence check can't.
 
         Files are immutable once committed, so each distinct path is
         checked once even when many versions reference it. Cost:
@@ -2606,15 +2539,15 @@ class VersionedParquetTable:
         n_files = n_dvs = 0
         versions = self.versions()
         for v in versions:
-            for f in self._load_manifest(v)["files"]:
+            for f in self.snapshot(v)["files"]:
                 rel = f["path"]
                 if rel not in checked:
                     checked.add(rel)
                     n_files += 1
-                    full = os.path.join(self.path, DATA_DIR, rel)
+                    full = self._file(rel)
                     if not os.path.exists(full):
                         missing_files.append({"version": v, "path": rel})
-                    elif deep and f.get("rows") is not None:
+                    elif deep and f["rows"] is not None:
                         try:
                             _, footer_rows = _file_stats(full)
                         except Exception as e:  # unreadable footer
@@ -2629,16 +2562,14 @@ class VersionedParquetTable:
                                      "manifest_rows": f["rows"],
                                      "footer_rows": footer_rows}
                                 )
-                for dvp in (f.get("dv") or {}).get("paths", []):
-                    if dvp in checked:
-                        continue
-                    checked.add(dvp)
+                dvp = self._dv_file(f["dv"]) if f["dv"] else None
+                if dvp and (dvp, rel) not in checked:
+                    checked.add((dvp, rel))
                     n_dvs += 1
-                    if not os.path.exists(
-                        os.path.join(self.path, DV_DIR, dvp)
-                    ):
+                    if not os.path.exists(dvp):
                         missing_dvs.append(
-                            {"version": v, "path": dvp, "file": rel}
+                            {"version": v, "path": os.path.relpath(dvp, self.path),
+                             "file": rel}
                         )
         return {
             "ok": not (missing_files or missing_dvs or row_mismatches),
@@ -2658,18 +2589,20 @@ class VersionedParquetTable:
         dry_run: bool = False,
         orphan_grace_s: float = 3600.0,
     ) -> dict:
-        """Retention sweep (Delta ``VACUUM`` analogue): delete data
-        files referenced ONLY by manifests older than the newest
-        ``keep_versions``, then drop those manifests. Time travel is
-        retained for the kept versions; older versions become
-        unreadable — the same trade Delta makes. Never touches files
-        the live manifests still reference, so concurrent readers of
-        kept versions are safe.
+        """Retention sweep (Delta ``VACUUM`` plus log cleanup): delete
+        data files referenced ONLY by versions older than the newest
+        ``keep_versions``, then drop those versions' commits (a
+        checkpoint at the oldest kept version keeps it reconstructible).
+        Time travel is retained for the kept versions; older versions
+        become unreadable — the same trade Delta makes. Never touches
+        files the kept versions still reference, so concurrent readers
+        of kept versions are safe.
 
         Also sweeps **orphans** — files under ``data/`` referenced by
-        NO retained manifest, and stale ``_staging-*`` dirs — which
-        crashed writes and lost commit races legitimately leave behind
-        (the write-once design's garbage, exactly like Delta's).
+        NO retained version, deletion-vector and change-data files no
+        retained commit references, and stale ``_staging-*`` dirs —
+        which crashed writes and lost commit races legitimately leave
+        behind (the write-once design's garbage, exactly like Delta's).
         Orphans younger than ``orphan_grace_s`` are spared so an
         in-flight concurrent write is never swept mid-commit.
 
@@ -2680,165 +2613,83 @@ class VersionedParquetTable:
         keep_versions = max(1, keep_versions)
         vs = self.versions()
         kept_vs, dropped_vs = vs[-keep_versions:], vs[:-keep_versions]
+        cutoff = time.time() - max(0.0, orphan_grace_s)
+
+        def old(p: str) -> bool:
+            # a concurrent writer can remove its staging debris between
+            # the listing and the stat — skip, don't die
+            try:
+                return os.path.getmtime(p) < cutoff
+            except FileNotFoundError:
+                return False
+
+        kept = [f for v in kept_vs for f in self.snapshot(v)["files"]]
+        live = {f["path"] for f in kept}
+        doomed = sorted(
+            {f["path"] for v in dropped_vs for f in self.snapshot(v)["files"]}
+            - live
+        )
+        data_root = os.path.join(self.path, DATA_DIR)
+        orphans = sorted(
+            rel
+            for root, _dirs, fnames in os.walk(data_root)
+            for fname in fnames
+            if (rel := os.path.relpath(os.path.join(root, fname), data_root))
+            not in live
+            and rel not in doomed
+            and old(os.path.join(root, fname))
+        )
+        staging = [
+            n for n in os.listdir(self.path)
+            if n.startswith("_staging-") and old(os.path.join(self.path, n))
+        ]
+        # a dv-mode upsert writes its deletion vectors BEFORE its commit,
+        # so a young unreferenced one may belong to an in-flight writer
+        live_dv = {
+            os.path.basename(p) for f in kept if f["dv"] and (p := self._dv_file(f["dv"]))
+        }
+        dead_dv = sorted(
+            n for n in os.listdir(self.path)
+            if n.startswith("deletion_vector_")
+            and n not in live_dv
+            and old(os.path.join(self.path, n))
+        )
+        dead_cdc = self._dead_cdc_dirs(kept_vs, cutoff)
         if dry_run:
-            live = {
-                f["path"]
-                for v in kept_vs
-                for f in self._snapshot_files(v)
-            }
-            doomed = sorted(
-                {
-                    f["path"]
-                    for v in dropped_vs
-                    for f in self._load_manifest(v)["files"]
-                    if f["path"] not in live
-                }
-            )
-            # a faithful preview includes everything the real run
-            # removes: orphans past grace, stale staging dirs, and
-            # DV sidecars no kept version references
-            cutoff = time.time() - max(0.0, orphan_grace_s)
-            data_root = os.path.join(self.path, DATA_DIR)
-            orphans = []
-            if os.path.isdir(data_root):
-                for root, _dirs, fnames in os.walk(data_root):
-                    for fname in fnames:
-                        p = os.path.join(root, fname)
-                        rel = os.path.relpath(p, data_root)
-                        try:
-                            if (
-                                rel not in live
-                                and rel not in doomed
-                                and os.path.getmtime(p) < cutoff
-                            ):
-                                orphans.append(rel)
-                        except FileNotFoundError:
-                            pass  # concurrent writer cleaned it up
-            staging = []
-            for name in os.listdir(self.path):
-                if name.startswith("_staging-"):
-                    try:
-                        if os.path.getmtime(os.path.join(self.path, name)) < cutoff:
-                            staging.append(name)
-                    except FileNotFoundError:
-                        pass
-            live_dv = {
-                p
-                for v in kept_vs
-                for f in self._snapshot_files(v)
-                for p in ((f.get("dv") or {}).get("paths", []))
-            }
-            dv_root = os.path.join(self.path, DV_DIR)
-            dead_dv = []
-            if os.path.isdir(dv_root):
-                for name in sorted(set(os.listdir(dv_root)) - live_dv):
-                    # same grace window as data-file orphans: a dv-mode
-                    # upsert writes its sidecar BEFORE its manifest
-                    # commit, so a young unreferenced sidecar may belong
-                    # to an in-flight writer
-                    try:
-                        if os.path.getmtime(os.path.join(dv_root, name)) < cutoff:
-                            dead_dv.append(name)
-                    except FileNotFoundError:
-                        pass
-            dead_cdc = self._dead_cdc_dirs(kept_vs, cutoff)
             return {
                 "dry_run": True,
                 "n_data_files": len(doomed),
                 "n_versions": len(dropped_vs),
                 "paths": doomed,
                 "n_orphans": len(orphans) + len(staging),
-                "orphan_paths": sorted(orphans) + staging,
+                "orphan_paths": orphans + staging,
                 "n_dv": len(dead_dv),
                 "n_cdc": len(dead_cdc),
                 "oldest_kept_version": kept_vs[0],
             }
-        # The oldest kept version must stay reconstructible once the
-        # commits below it are gone: materialize it as a checkpoint
-        # first (idempotent if one already exists).
         if dropped_vs:
-            self._write_checkpoint(
-                kept_vs[0], self._snapshot_files(kept_vs[0])
-            )
-        live = {
-            f["path"]
-            for v in kept_vs
-            for f in self._snapshot_files(v)
-        }
-        data_root = os.path.join(self.path, DATA_DIR)
+            self._checkpoint(kept_vs[0])
         n_deleted = 0
+        for rel in doomed:
+            if os.path.exists(self._file(rel)):
+                os.remove(self._file(rel))
+                n_deleted += 1
         for v in dropped_vs:
-            for f in self._load_manifest(v)["files"]:
-                if f["path"] not in live:
-                    p = os.path.join(data_root, f["path"])
-                    if os.path.exists(p):
-                        os.remove(p)
-                        n_deleted += 1
-        for v in dropped_vs:
-            os.remove(self._manifest_path(v))
+            self._fs.delete(self._log._commit_file(v))
             self._snap_cache.pop(v, None)
-        for v in self._checkpoint_versions():
+        for v in self._log._checkpoint_versions():
             if v < kept_vs[0]:
-                p = self._ckpt_file(v)
-                if p:
-                    os.remove(p)
-        # deletion-vector sidecars referenced only by dropped versions
-        live_dv = {
-            p
-            for v in kept_vs
-            for f in self._snapshot_files(v)
-            for p in ((f.get("dv") or {}).get("paths", []))
-        }
-        dv_root = os.path.join(self.path, DV_DIR)
-        n_dv_deleted = 0
-        cutoff = time.time() - max(0.0, orphan_grace_s)
-        if os.path.isdir(dv_root):
-            for name in os.listdir(dv_root):
-                if name not in live_dv:
-                    # grace window: a dv-mode upsert writes its sidecar
-                    # before its manifest commit, so a young
-                    # unreferenced sidecar may be an in-flight write
-                    try:
-                        if os.path.getmtime(os.path.join(dv_root, name)) >= cutoff:
-                            continue
-                    except FileNotFoundError:
-                        continue
-                    shutil.rmtree(os.path.join(dv_root, name))
-                    n_dv_deleted += 1
-        # orphan sweep: files no retained manifest references — crashed
-        # writes, lost txn/commit races. A grace window (mtime) spares
-        # files a concurrent writer staged but hasn't committed yet.
-        n_orphans = 0
-        if os.path.isdir(data_root):
-            for root, _dirs, fnames in os.walk(data_root):
-                for fname in fnames:
-                    p = os.path.join(root, fname)
-                    rel = os.path.relpath(p, data_root)
-                    # a concurrent writer can remove its staging debris
-                    # between the listing and the stat — skip, don't die
-                    try:
-                        if rel not in live and os.path.getmtime(p) < cutoff:
-                            os.remove(p)
-                            n_orphans += 1
-                    except FileNotFoundError:
-                        pass
-        for name in os.listdir(self.path):
-            if name.startswith("_staging-"):
-                p = os.path.join(self.path, name)
-                try:
-                    if os.path.getmtime(p) < cutoff:
-                        shutil.rmtree(p, ignore_errors=True)
-                        n_orphans += 1
-                except FileNotFoundError:
-                    pass
-        # change-data files referenced only by dropped versions (or by
-        # no retained commit at all — lost OCC races); same grace
-        # window, cdc files are staged before their manifest commit
-        n_cdc_deleted = 0
-        cdc_root = os.path.join(self.path, CDC_DIR)
-        for name in self._dead_cdc_dirs(kept_vs, cutoff):
-            shutil.rmtree(os.path.join(cdc_root, name), ignore_errors=True)
-            n_cdc_deleted += 1
+                self._fs.delete(
+                    fsio.join(self._log._log, f"{v:020d}.checkpoint.parquet")
+                )
+        for rel in orphans:
+            os.remove(os.path.join(data_root, rel))
+        for n in staging:
+            shutil.rmtree(os.path.join(self.path, n), ignore_errors=True)
+        for n in dead_dv:
+            os.remove(os.path.join(self.path, n))
+        for n in dead_cdc:
+            shutil.rmtree(os.path.join(self.path, CDC_DIR, n), ignore_errors=True)
         # prune emptied partition dirs so listings stay honest
         for root, dirs, files in os.walk(data_root, topdown=False):
             if root != data_root and not dirs and not files:
@@ -2846,23 +2697,28 @@ class VersionedParquetTable:
         return {
             "n_files_deleted": n_deleted,
             "n_versions_dropped": len(dropped_vs),
-            "n_dv_deleted": n_dv_deleted,
-            "n_cdc_deleted": n_cdc_deleted,
-            "n_orphans_deleted": n_orphans,
+            "n_dv_deleted": len(dead_dv),
+            "n_cdc_deleted": len(dead_cdc),
+            "n_orphans_deleted": len(orphans) + len(staging),
             "oldest_kept_version": kept_vs[0],
         }
 
+    def _cdc_paths(self, version: int) -> list[str]:
+        """Change-data files of commit ``version``, relative to
+        ``_change_data/``."""
+        return [
+            posixpath.relpath(unquote(a["cdc"]["path"]), CDC_DIR)
+            for a in self.commit_actions(version)
+            if "cdc" in a
+        ]
+
     def _dead_cdc_dirs(self, kept_vs: list[int], cutoff: float) -> list[str]:
-        """Top-level ``_cdc/`` dirs referenced by NO retained commit and
-        older than the grace cutoff."""
+        """Top-level ``_change_data/`` dirs referenced by NO retained
+        commit and older than the grace cutoff."""
         cdc_root = os.path.join(self.path, CDC_DIR)
         if not os.path.isdir(cdc_root):
             return []
-        live = {
-            p.split(os.sep, 1)[0]
-            for v in kept_vs
-            for p in (self._load_commit(v).get("cdc_files") or [])
-        }
+        live = {p.split("/", 1)[0] for v in kept_vs for p in self._cdc_paths(v)}
         out = []
         for name in sorted(set(os.listdir(cdc_root)) - live):
             try:
@@ -2877,93 +2733,39 @@ class VersionedParquetTable:
     def _scan(
         self,
         files: list[dict],
-        schema: T.StructType,
+        m: dict,
         *,
+        schema: T.StructType | None = None,
         with_position: bool = False,
-        mapping: dict[str, str] | None = None,
     ) -> DataFrame:
-        """One scan over ``files`` with deletion vectors applied.
+        """One scan over snapshot records ``files`` of ``m`` (the shared
+        Delta scan): deletion vectors applied, files read under their
+        PHYSICAL column names and aliased back to ``schema`` (default:
+        ``m``'s) — how a rename costs zero data I/O. ``with_position``
+        keeps ``__file`` (the ``data/``-relative path) and ``__pos``
+        (``_metadata.row_index``) so callers can build NEW deletion
+        vectors from what they read."""
+        if schema is None:
+            schema = T.StructType.fromJson(json.loads(m["schema"]))
+        return scan(
+            self.spark,
+            self.path,
+            [
+                (posixpath.normpath(posixpath.join(DATA_DIR, f["path"])), f["dv"])
+                for f in files
+            ],
+            schema,
+            m["partition_cols"],
+            physical=m["column_mapping"],
+            with_position=with_position,
+            rel_base=DATA_DIR,
+            fs=self._fs,
+        )
 
-        Files carrying a ``dv`` get their dead ``(__file, __pos)`` rows
-        anti-joined out (the DV sidecars are tiny — AQE broadcasts
-        them); files without DVs — the common case — take the plain
-        path with zero overhead. ``with_position`` keeps the computed
-        ``__file`` (path relative to ``data/``) and ``__pos``
-        (``_metadata.row_index``) columns so callers can build NEW
-        deletion vectors from what they read.
-
-        ``mapping`` (logical → physical): files are read under their
-        on-disk physical names and aliased back to the logical schema —
-        how a rename costs zero data I/O."""
-        data_root = os.path.abspath(os.path.join(self.path, DATA_DIR))
-        mapping = {
-            log: phys
-            for log, phys in (mapping or {}).items()
-            if log != phys
-        }
-        dv_paths = sorted(
-            {p for f in files for p in ((f.get("dv") or {}).get("paths", []))}
-        )
-        if not files:
-            out_schema = schema
-            if with_position:
-                out_schema = T.StructType(
-                    schema.fields
-                    + [
-                        T.StructField("__file", T.StringType()),
-                        T.StructField("__pos", T.LongType()),
-                    ]
-                )
-            return self.spark.createDataFrame([], out_schema)
-        phys_schema = (
-            T.StructType(
-                [
-                    T.StructField(
-                        mapping.get(f.name, f.name), f.dataType, f.nullable
-                    )
-                    for f in schema.fields
-                ]
-            )
-            if mapping
-            else schema
-        )
-        reader = self.spark.read.option("basePath", data_root).schema(phys_schema)
-        df = reader.parquet(
-            *[os.path.join(data_root, f["path"]) for f in files]
-        )
-        if dv_paths or with_position:
-            # _metadata.file_path is a URI (file:///...); strip scheme
-            # and the data-root prefix to recover the manifest-relative
-            # path DVs are keyed on.
-            rel = F.expr(
-                f"substring(regexp_replace(_metadata.file_path, "
-                f"'^[a-zA-Z0-9+.-]+:/+', '/'), {len(data_root) + 2})"
-            )
-            df = df.select(
-                "*",
-                rel.alias("__file"),
-                F.col("_metadata.row_index").alias("__pos"),
-            )
-        if dv_paths:
-            dead = self.spark.read.parquet(
-                *[os.path.join(self.path, DV_DIR, p) for p in dv_paths]
-            ).select("__file", "__pos")
-            df = df.join(dead, on=["__file", "__pos"], how="left_anti")
-            if not with_position:
-                df = df.drop("__file", "__pos")
-        if mapping:
-            # physical → logical, AFTER the _metadata-derived columns
-            # (a projection would sever access to the scan's _metadata);
-            # emitted in logical-schema order, extras (__file/__pos) last
-            extras = [c for c in df.columns if c in ("__file", "__pos")]
-            df = df.select(
-                *[
-                    F.col(mapping.get(f.name, f.name)).alias(f.name)
-                    for f in schema.fields
-                ],
-                *extras,
-            )
-        return df
+    def _dead_positions(self, dv: dict | None) -> list[int]:
+        if not dv:
+            return []
+        return delta_dv.read_dv_positions(dv, self.path, self._fs)
 
     def version_at_timestamp(self, ts: float) -> int:
         """Largest committed version whose commit timestamp is <= ``ts``
@@ -2973,7 +2775,7 @@ class VersionedParquetTable:
         of commit records only — no snapshot reconstruction."""
         best = None
         for v in self.versions():
-            if self._load_commit(v)["timestamp"] <= ts:
+            if self._commit_info(v)["timestamp"] <= ts:
                 best = v
             else:
                 break
@@ -2996,13 +2798,8 @@ class VersionedParquetTable:
             raise ValueError("pass version or timestamp, not both")
         if timestamp is not None:
             version = self.version_at_timestamp(timestamp)
-        m = self._load_manifest(
-            self.latest_version() if version is None else version
-        )
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
-        return self._scan(
-            m["files"], schema, mapping=m.get("column_mapping")
-        )
+        m = self.snapshot(version)
+        return self._scan(m["files"], m)
 
     def read_partitions(
         self,
@@ -3011,24 +2808,16 @@ class VersionedParquetTable:
         *,
         with_position: bool = False,
     ) -> DataFrame:
-        """Manifest-level partition pruning: only the named partitions'
+        """Log-level partition pruning: only the named partitions'
         files are even listed — the scan never sees the rest."""
-        m = self._load_manifest(
-            self.latest_version() if version is None else version
-        )
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        m = self.snapshot(version)
         wanted = {tuple(sorted(p.items())) for p in partitions}
         files = [
             f
             for f in m["files"]
             if tuple(sorted(f["partition"].items())) in wanted
         ]
-        return self._scan(
-            files,
-            schema,
-            with_position=with_position,
-            mapping=m.get("column_mapping"),
-        )
+        return self._scan(files, m, with_position=with_position)
 
     # -- data skipping -------------------------------------------------------
 
@@ -3038,7 +2827,7 @@ class VersionedParquetTable:
         version: int | None = None,
     ) -> list[ManifestEntry]:
         """The live files that might satisfy ``filters`` — everything
-        else is skipped at PLAN time from manifest metadata alone, before
+        else is skipped at PLAN time from log metadata alone, before
         Spark ever lists a path (Delta data skipping / Zen of file
         pruning). ``filters`` is a conjunction of
         ``(col, op, value)`` with op in ``= < <= > >= in is_null
@@ -3047,14 +2836,12 @@ class VersionedParquetTable:
         files with no stats for a column always survive.
 
         At 100 TB this is the difference between a query touching one
-        day's files and listing the whole table: O(#files) manifest
+        day's files and listing the whole table: O(#files) log
         arithmetic on the driver, zero data I/O. (A table with millions
-        of files would page the manifest into a parquet checkpoint —
+        of files pages the log into a parquet checkpoint —
         same trade Delta makes.)
         """
-        m = self._load_manifest(
-            self.latest_version() if version is None else version
-        )
+        m = self.snapshot(version)
         pc = set(m["partition_cols"])
         # file stats are keyed by PHYSICAL column names (renames never
         # touch data files); partition columns cannot be renamed, so
@@ -3075,21 +2862,14 @@ class VersionedParquetTable:
         filters: "Sequence[tuple]",
         version: int | None = None,
     ) -> DataFrame:
-        """Filtered snapshot read with manifest-level data skipping:
+        """Filtered snapshot read with log-level data skipping:
         only ``files_for(filters)`` enter the scan, and the same
         predicate is applied to the rows (pushed into the parquet
         reader by Catalyst), so results are exact whether or not
         pruning fired."""
-        m = self._load_manifest(
-            self.latest_version() if version is None else version
-        )
-        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        m = self.snapshot(version)
         keep = {e.path for e in self.files_for(filters, version)}
-        df = self._scan(
-            [f for f in m["files"] if f["path"] in keep],
-            schema,
-            mapping=m.get("column_mapping"),
-        )
+        df = self._scan([f for f in m["files"] if f["path"] in keep], m)
         for c, op, v in filters:
             df = df.filter(_filter_expr(c, op, v))
         return df
@@ -3116,7 +2896,7 @@ class VersionedParquetTable:
         timestamp is part of the feed). Raises if every commit
         precedes the timestamp, as Delta does.
 
-        Scale: the two manifests are diffed FIRST — data files are
+        Scale: the two snapshots are diffed FIRST — data files are
         immutable, so any row whose file is referenced by both versions
         is bit-identical in both and cannot be a change. Only files
         dropped or added between the versions are read; with
@@ -3134,7 +2914,7 @@ class VersionedParquetTable:
             vs = self.versions()
             idx = None
             for i, v in enumerate(vs):
-                if self._load_commit(v)["timestamp"] >= timestamp_from:
+                if self._commit_info(v)["timestamp"] >= timestamp_from:
                     idx = i
                     break
             if idx is None:
@@ -3150,8 +2930,8 @@ class VersionedParquetTable:
                 )
             version_from = vs[idx - 1]
         v_to = self.latest_version() if version_to is None else version_to
-        m_from = self._load_manifest(version_from)
-        m_to = self._load_manifest(v_to)
+        m_from = self.snapshot(version_from)
+        m_to = self.snapshot(v_to)
         schema = T.StructType.fromJson(json.loads(m_to["schema"]))
 
         # Identity = (path, deletion-vector state): a DV update changes
@@ -3159,8 +2939,7 @@ class VersionedParquetTable:
         # file must enter the diff on both sides (read with each
         # version's own DVs — only the rows the DV killed differ).
         def ident(f: dict) -> tuple:
-            dv = f.get("dv") or {}
-            return (f["path"], tuple(dv.get("paths", [])))
+            return (f["path"], _dv_key(f["dv"]))
 
         fa = {ident(f) for f in m_from["files"]}
         fb = {ident(f) for f in m_to["files"]}
@@ -3213,29 +2992,26 @@ class VersionedParquetTable:
 
     def _read_paths(
         self,
-        manifest: dict,
+        m: dict,
         rel_paths: list[str],
         naming: dict | None = None,
     ) -> DataFrame:
-        """Read a path-subset of ``manifest`` with THAT version's
+        """Read a path-subset of snapshot ``m`` with THAT version's
         deletion vectors applied — time-travel-correct row content.
-        ``naming`` (a manifest) overrides which version's schema and
+        ``naming`` (a snapshot) overrides which version's schema and
         column mapping label the result: physical names are stable, so
         CDF can read an old snapshot's files under the new version's
         logical names after a rename."""
-        nm = naming or manifest
-        schema = T.StructType.fromJson(json.loads(nm["schema"]))
+        nm = naming or m
         wanted = set(rel_paths)
         return self._scan(
-            [f for f in manifest["files"] if f["path"] in wanted],
-            schema,
-            mapping=nm.get("column_mapping"),
+            [f for f in m["files"] if f["path"] in wanted],
+            {**m, "column_mapping": nm["column_mapping"]},
+            schema=T.StructType.fromJson(json.loads(nm["schema"])),
         )
 
     def partitions_of(self, version: int | None = None) -> list[dict[str, str]]:
-        m = self._load_manifest(
-            self.latest_version() if version is None else version
-        )
+        m = self.snapshot(version)
         seen: dict[tuple, dict[str, str]] = {}
         for f in m["files"]:
             seen[tuple(sorted(f["partition"].items()))] = f["partition"]
@@ -3353,6 +3129,21 @@ def _file_may_match(
         return True
 
 
+def _txn_applied(m: dict, txn: tuple[str, int] | None) -> bool:
+    """Whether snapshot ``m`` already records writer transaction ``txn``
+    (or a later one of the same app)."""
+    applied = None if txn is None else m["txns"].get(txn[0])
+    return applied is not None and applied >= txn[1]
+
+
+def _hit(filters: "Sequence[tuple]"):
+    """Rows matching every ``(col, op, value)`` filter (NULL: no match)."""
+    pred = F.lit(True)
+    for c, op, v in filters:
+        pred = pred & _filter_expr(c, op, v)
+    return F.coalesce(pred, F.lit(False))
+
+
 def _filter_expr(col: str, op: str, value):
     c = F.col(col)
     if op == "=":
@@ -3413,3 +3204,67 @@ def _align(df: DataFrame, schema: T.StructType) -> DataFrame:
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols)
+
+
+_EMPTY_META = {
+    "partition_cols": [],
+    "constraints": {},
+    "properties": {},
+    "generated_cols": {},
+    "identity_cols": {},
+    "column_mapping": {},
+    "retired_physical": [],
+}
+
+
+def _snapshot_dict(snap) -> dict:
+    """:meth:`VersionedParquetTable.snapshot`'s view of a log replay:
+    the Delta field metadata and configuration keys unpacked into this
+    class's metadata fields, and one record per live ``add``."""
+    conf = snap.configuration
+    name_mode = snap.column_mapping_mode != "none"
+    fields, mapping, gen, ident = [], {}, {}, {}
+    for f in snap.schema.fields:
+        md = f.metadata or {}
+        if name_mode and md.get(_PHYS, f.name) != f.name:
+            mapping[f.name] = md[_PHYS]
+        if "delta.generationExpression" in md:
+            gen[f.name] = md["delta.generationExpression"]
+        if "delta.identity.start" in md:
+            start, step = int(md["delta.identity.start"]), int(md["delta.identity.step"])
+            hwm = md.get("delta.identity.highWaterMark")
+            ident[f.name] = {
+                "start": start,
+                "step": step,
+                "next": start if hwm is None else int(hwm) + step,
+            }
+        fields.append(
+            T.StructField(
+                f.name, f.dataType, f.nullable,
+                {k: v for k, v in md.items() if not k.startswith("delta.")},
+            )
+        )
+    props = {v: k for k, v in _PROPERTY_KEYS.items()}
+    logical = {snap.physical_name(c): c for c in snap.partition_columns}
+    return {
+        "version": snap.version,
+        "schema": T.StructType(fields).json(),
+        "partition_cols": snap.partition_columns,
+        "constraints": {
+            k[len(_CONSTRAINT):]: v for k, v in conf.items() if k.startswith(_CONSTRAINT)
+        },
+        "properties": {
+            props.get(k, k): v
+            for k, v in conf.items()
+            if not k.startswith((_CONSTRAINT, "delta.columnMapping."))
+            and k != _RETIRED_KEY
+        },
+        "generated_cols": gen,
+        "identity_cols": ident,
+        "column_mapping": mapping,
+        "retired_physical": json.loads(conf.get(_RETIRED_KEY, "[]")),
+        "txns": dict(snap.txns),
+        "files": [_record(a, logical) for a in snap.adds.values()],
+        "protocol": snap.protocol,
+        "metadata": snap.metadata,
+    }

@@ -16,7 +16,10 @@ tables through notebook cells; this is the scriptable equivalent):
     vtable update   <path> --where col:op:value --set col=expr
     vtable restore  <path> --version N
     vtable clone    <path> <dest>
-    vtable export-delta <path> <dest>    # publish as a real _delta_log table
+
+Tables are Delta tables (``_delta_log``), so any Delta reader can open
+a table this CLI maintains, and the CLI maintains Delta tables other
+engines wrote.
 
 Every subcommand prints one JSON line (machine-parseable, like the ETL
 CLI) and exits nonzero on error. Maintenance commands are thin wrappers
@@ -50,7 +53,7 @@ def _build_parser() -> argparse.ArgumentParser:
     s.add_argument("--timestamp", type=float, default=None)
     s.add_argument("--limit", type=int, default=20)
 
-    s = sp("count", help="row count (manifest stats when exact, else scan)")
+    s = sp("count", help="row count (log stats when exact, else scan)")
     s.add_argument("--version", type=int, default=None)
 
     s = sp("changes", help="CDF rows between versions")
@@ -72,7 +75,7 @@ def _build_parser() -> argparse.ArgumentParser:
         "--deep",
         action="store_true",
         help="also compare each live file's parquet footer row count "
-        "to the manifest's recorded rows",
+        "to the log's recorded rows",
     )
 
     s = sp("delete", help="DELETE FROM ... WHERE (file-granular)")
@@ -88,7 +91,7 @@ def _build_parser() -> argparse.ArgumentParser:
         "purge",
         help="right-to-be-forgotten erasure: DELETE at head, then "
         "rewrite matching rows out of EVERY retained version's files, "
-        "manifests, checkpoints and change-data files",
+        "commits, checkpoints and change-data files",
     )
     s.add_argument("--where", action="append", required=True)
 
@@ -107,15 +110,6 @@ def _build_parser() -> argparse.ArgumentParser:
 
     s = sp("clone", help="zero-copy-read clone to a new path")
     s.add_argument("dest")
-
-    s = sp("export-delta", help="publish as a Delta Lake table (_delta_log)")
-    s.add_argument("dest")
-    s.add_argument(
-        "--preserve-dvs",
-        action="store_true",
-        help="zero-rewrite export: byte-copy data files and emit native "
-        "Delta deletion vectors (protocol (3,7) when DVs exist)",
-    )
 
     return p
 
@@ -162,7 +156,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "describe":
         df = t.read()
         hist = t.history()
-        n = t.detail().get("num_rows")  # manifest stats: no scan
+        n = t.detail().get("num_rows")  # log stats: no scan
         out = {
             "path": args.path,
             "version": t.latest_version(),
@@ -180,7 +174,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "count":
         n = None
         if args.version is None:
-            n = t.detail().get("num_rows")  # manifest stats: no scan
+            n = t.detail().get("num_rows")  # log stats: no scan
         if n is None:
             n = t.read(version=args.version).count()
         out = {
@@ -226,13 +220,6 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "clone":
         t.clone(args.dest)
         out = {"path": args.path, "cloned_to": args.dest}
-    elif args.cmd == "export-delta":
-        from delta_lake_pyspark_scd2_spark.sources.delta_writer import (
-            export_vtable_as_delta,
-        )
-
-        export_vtable_as_delta(t, args.dest, preserve_dvs=args.preserve_dvs)
-        out = {"path": args.path, "delta_table": args.dest}
     else:  # pragma: no cover — argparse enforces choices
         return 2
 

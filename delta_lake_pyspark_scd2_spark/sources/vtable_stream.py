@@ -12,9 +12,9 @@ replaying a version yields identical change rows (commits and their
 change files are immutable).
 
 **Executor-parallel by design** (the round-2 driver-materialization
-fix): planning (`partitions()`) touches COMMIT METADATA only — JSON
-manifests plus parquet checkpoints, read with plain ``json``/pyarrow,
-no SparkSession and no row materialization on the driver. Row reads
+fix): planning (`partitions()`) touches COMMIT METADATA only — the
+table's ``_delta_log`` JSON commits plus parquet checkpoints, read with
+plain ``json``/pyarrow, no row materialization on the driver. Row reads
 happen in ``read(partition)`` on EXECUTORS, one partition per change
 file or data file, via pyarrow directly against the parquet bytes. A
 ``startingversion=0`` replay of a large table therefore fans out one
@@ -23,16 +23,16 @@ driver.
 
 Where change rows come from, per commit (Delta CDF's exact model):
 
-- ``cdc_files`` in the commit record (written at commit time by
-  upsert/delete/remove_rows when the table property
+- ``cdc`` actions in the commit (written at commit time by
+  upsert/delete/update/remove_rows when the table property
   ``enableChangeDataFeed=true``): full ``insert`` / ``delete`` /
   ``update_preimage`` / ``update_postimage`` fidelity.
 - otherwise, a file-level interpretation of the commit's add/remove
   actions: rows of added files are ``insert``, rows of removed files
   are ``delete`` (both with that side's deletion vectors applied).
   Correct as a row-multiset diff; updates surface as delete+insert.
-- commits with ``data_change=false`` (COMPACT/ZORDER re-layouts) are
-  skipped, as Delta does.
+- commits whose file actions all carry ``dataChange=false``
+  (COMPACT/ZORDER re-layouts) are skipped, as Delta does.
 - a commit that mutates a file's deletion vector IN PLACE without
   change files cannot be interpreted file-wise; the stream raises and
   asks for ``enableChangeDataFeed=true`` (Delta's restriction too).
@@ -52,6 +52,7 @@ from __future__ import annotations
 import json
 import os
 from typing import Iterator
+from urllib.parse import unquote
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -64,8 +65,8 @@ _META_COLS = ("_change_type", "_commit_version")
 
 
 def _meta_table(path: str):
-    """Metadata-only table handle: versions()/_load_commit()/
-    _snapshot_files() are pure json+pyarrow and never touch
+    """Metadata-only table handle: versions()/snapshot()/
+    commit_actions() are pure json+pyarrow and never touch
     ``self.spark`` — safe in the stream-planner process and cheap."""
     from delta_lake_pyspark_scd2_spark.sources.vtable import (
         VersionedParquetTable,
@@ -77,16 +78,14 @@ def _meta_table(path: str):
 def _changes_schema(path: str) -> StructType:
     """Stream schema = latest commit's logical schema + CDF meta
     columns — parsed straight from the commit record (no Spark)."""
-    t = _meta_table(path)
-    m = t._load_commit(t.latest_version())
-    out = StructType.fromJson(json.loads(m["schema"]))
+    out = StructType.fromJson(json.loads(_meta_table(path).snapshot()["schema"]))
     return out.add("_change_type", "string").add("_commit_version", "long")
 
 
 def _cast_partition_value(raw: str, type_name: str):
     """Directory-encoded partition value → Python value of the logical
     column type (data files under ``partitionBy`` layouts don't store
-    the partition columns; the manifest record carries them as
+    the partition columns; the log's partitionValues carry them as
     strings)."""
     import datetime
 
@@ -113,7 +112,7 @@ class _ChangesPartition(InputPartition):
     - version: the commit version stamped into ``_commit_version``
     - table_path: table root (executors resolve files against it)
     - fields: [(logical_name, type_simple_string), ...] in output order
-    - cdc: relative path under ``_cdc/`` (kind=cdc)
+    - cdc: change file path relative to the table root (kind=cdc)
     - file / partition / dv / change_type / mapping (kind=file):
       data-file record bits + the side's classification
     """
@@ -146,10 +145,7 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
         # logical->physical mapping moves), and the stream's output
         # schema is the LATEST logical schema — so the head commit's
         # mapping is the right lens for files of every version.
-        t = _meta_table(self.path)
-        self._mapping = (
-            t._load_commit(t.latest_version()).get("column_mapping") or {}
-        )
+        self._mapping = _meta_table(self.path).column_mapping()
 
     # -- planning (driver, metadata only) ------------------------------------
 
@@ -178,7 +174,7 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
         #   commit's own kind — it already reflects the commit's
         #   effect, and a compacted/cdc commit's visible rows are
         #   exactly what the consumer must bootstrap from.
-        # * On a RESUMED stream (lo >= 0), versions whose manifests
+        # * On a RESUMED stream (lo >= 0), versions whose commits
         #   retention dropped inside (lo, first retained] mean their
         #   changes are UNRECOVERABLE — silently skipping them (or
         #   re-delivering a snapshot) double-applies or loses rows in
@@ -186,7 +182,7 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
         #   caller to re-bootstrap, exactly like the batch CDF reader
         #   does for a vacuumed startingVersion. A retained cdc or
         #   data_change=false first commit with an intact version
-        #   chain needs no predecessor manifest and streams normally.
+        #   chain needs no predecessor commit and streams normally.
         snapshot_replay_pending = False
         if versions:
             first_v = versions[0]
@@ -208,13 +204,18 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
                 "table_path": self.path,
                 "fields": self._fields,
             }
-            commit = t._load_commit(v)
+            actions = t.commit_actions(v)
             snapshot_replay = snapshot_replay_pending
             snapshot_replay_pending = False
             if not snapshot_replay:
-                if commit.get("data_change", True) is False:
-                    continue  # COMPACT/ZORDER: same visible rows, no feed
-                cdc = commit.get("cdc_files") or []
+                if not any(
+                    a[k].get("dataChange", True)
+                    for a in actions
+                    for k in ("add", "remove")
+                    if k in a
+                ):
+                    continue  # COMPACT/ZORDER or metadata only: no feed
+                cdc = [unquote(a["cdc"]["path"]) for a in actions if "cdc" in a]
                 if cdc:
                     out.extend(
                         _ChangesPartition({**base, "kind": "cdc", "cdc": p})
@@ -223,7 +224,7 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
                     continue
             prev_v = v - 1
             if not snapshot_replay and prev_v >= 0 and prev_v not in t.versions():
-                # diff-path commit whose predecessor manifest was
+                # diff-path commit whose predecessor commit was
                 # vacuumed: the file diff is uncomputable (can only be
                 # the batch's first version — retention is contiguous)
                 raise ValueError(
@@ -232,17 +233,16 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
                     f"changes for version {v} — restart the stream from "
                     "scratch (fresh checkpoint) to re-bootstrap"
                 )
-            cur_files = {f["path"]: f for f in t._snapshot_files(v)}
+            cur_files = {f["path"]: f for f in t.snapshot(v)["files"]}
             prev_files = (
                 {}
                 if snapshot_replay
-                else {f["path"]: f for f in t._snapshot_files(prev_v)}
+                else {f["path"]: f for f in t.snapshot(prev_v)["files"]}
             )
             dv_mutated = [
                 p
                 for p, f in cur_files.items()
-                if p in prev_files
-                and (f.get("dv") or None) != (prev_files[p].get("dv") or None)
+                if p in prev_files and f["dv"] != prev_files[p]["dv"]
             ]
             if dv_mutated:
                 raise ValueError(
@@ -258,8 +258,8 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
                         **base,
                         "kind": "file",
                         "file": f["path"],
-                        "partition": f.get("partition") or {},
-                        "dv": (f.get("dv") or {}).get("paths", []),
+                        "partition": f["partition"],
+                        "dv": f["dv"],
                         "change_type": change_type,
                         "mapping": self._mapping,
                     }
@@ -307,7 +307,7 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
     def _read_cdc(spec: dict) -> Iterator[tuple]:
         import pyarrow.parquet as pq
 
-        path = os.path.join(spec["table_path"], "_cdc", spec["cdc"])
+        path = os.path.join(spec["table_path"], spec["cdc"])
         tbl = pq.read_table(path)
         cols = set(tbl.column_names)
         names = [n for n, _ in spec["fields"]]
@@ -323,8 +323,10 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
     def _read_file(spec: dict) -> Iterator[tuple]:
         import pyarrow.parquet as pq
 
+        from delta_lake_pyspark_scd2_spark.sources import delta_dv, fsio
+
         root = spec["table_path"]
-        fpath = os.path.join(root, "data", spec["file"])
+        fpath = os.path.normpath(os.path.join(root, "data", spec["file"]))
         tbl = pq.read_table(fpath)
         cols = set(tbl.column_names)
         mapping = spec.get("mapping") or {}
@@ -332,14 +334,13 @@ class _VTableChangesStreamReader(DataSourceStreamReader):
         type_of = dict(spec["fields"])
         rows = tbl.to_pylist()
         # deletion vectors: this side's dead positions never enter the
-        # feed (``__pos`` is the row index within the file, which
+        # feed (positions are row indexes within the file, which
         # pyarrow reads in order)
         dead: set[int] = set()
-        for dv_rel in spec.get("dv") or []:
-            dv_tbl = pq.read_table(os.path.join(root, "_dv", dv_rel))
-            for r in dv_tbl.to_pylist():
-                if r["__file"] == spec["file"]:
-                    dead.add(r["__pos"])
+        if spec.get("dv"):
+            dead = set(
+                delta_dv.read_dv_positions(spec["dv"], root, fsio.LocalFS(root))
+            )
         ct, v = spec["change_type"], spec["version"]
 
         def _val(r: dict, name: str):

@@ -19,10 +19,10 @@ def _batch(spark, lo, n=10):
 def test_rename_is_metadata_only_and_reads_back(spark, tmp_path):
     path = str(tmp_path / "t")
     t = VersionedParquetTable.create(spark, _batch(spark, 0), path)
-    files_before = {f["path"] for f in t._current()["files"]}
+    files_before = {f["path"] for f in t.snapshot()["files"]}
     v = t.rename_column("val", "value")
     # zero data I/O: the commit carries the same file set
-    m = t._current()
+    m = t.snapshot()
     assert {f["path"] for f in m["files"]} == files_before
     assert t.column_mapping() == {"value": "val"}
     df = t.read()
@@ -142,9 +142,9 @@ def test_constraint_added_after_rename_enforces_on_write(spark, tmp_path):
 def test_drop_column_metadata_only(spark, tmp_path):
     path = str(tmp_path / "t")
     t = VersionedParquetTable.create(spark, _batch(spark, 0), path)
-    files_before = {f["path"] for f in t._current()["files"]}
+    files_before = {f["path"] for f in t.snapshot()["files"]}
     v = t.drop_column("val")
-    assert {f["path"] for f in t._current()["files"]} == files_before
+    assert {f["path"] for f in t.snapshot()["files"]} == files_before
     assert t.read().columns == ["id"]
     assert t.read(v - 1).columns == ["id", "val"]  # time travel intact
     # appends keep working with the narrowed schema

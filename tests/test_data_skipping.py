@@ -35,7 +35,7 @@ def _ids(spark, n, files):
 def test_footer_stats_recorded_and_carried(spark, tmp_path):
     path = str(tmp_path / "t")
     t = VersionedParquetTable.create(spark, _ids(spark, 1000, 4), path)
-    m = t._load_manifest(0)
+    m = t.snapshot(0)
     assert len(m["files"]) == 4
     for f in m["files"]:
         assert f["rows"] > 0
@@ -43,14 +43,15 @@ def test_footer_stats_recorded_and_carried(spark, tmp_path):
         assert f["stats"]["id"]["min"] <= f["stats"]["id"]["max"]
     # append: the old files' entries must keep their stats
     t.append(_ids(spark, 10, 1))
-    m1 = t._load_manifest(1)
+    m1 = t.snapshot(1)
     assert sum(1 for f in m1["files"] if f["stats"]) == len(m1["files"]) == 5
-    # and on disk the append commit is a DELTA record: only the new
-    # file is listed, the carried-over entries are not re-serialized
-    raw1 = json.load(open(t._manifest_path(1)))
-    assert "files" not in raw1
-    assert len(raw1["add"]) == 1 and raw1["remove"] == []
-    assert raw1["num_files"] == 5
+    # and in the log the append commit lists only the new file (with
+    # its stats); the carried-over entries are not re-serialized
+    actions = t.commit_actions(1)
+    adds = [a["add"] for a in actions if "add" in a]
+    assert len(adds) == 1 and not any("remove" in a for a in actions)
+    assert json.loads(adds[0]["stats"])["numRecords"] == 10
+    assert t.history()[0]["num_files"] == 5
 
 
 def test_files_pruned_and_result_exact(spark, tmp_path):
@@ -190,7 +191,7 @@ def test_zorder_on_string_column_prunes(spark, tmp_path):
         str(tmp_path / "t"),
     )
     t.compact(zorder_by=["lang", "n"], output_files=10)
-    m = t._current()
+    m = t.snapshot()
     assert len(m["files"]) >= 8
     pruned = t.files_for([("lang", "=", "zh")])
     assert len(pruned) < len(m["files"])  # skipping fires on the string col

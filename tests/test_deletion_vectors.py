@@ -1,6 +1,6 @@
 """Deletion vectors: row-level deletes/updates without file rewrites
-(Delta DV analogue). remove_rows marks (file, position) rows dead via
-a parquet sidecar and can append replacement rows in the same commit —
+(Delta DVs). remove_rows marks (file, position) rows dead in a Delta
+deletion vector and can append replacement rows in the same commit —
 the O(changed rows) alternative to partition copy-on-write."""
 
 import json
@@ -39,13 +39,17 @@ def test_remove_rows_basic_and_time_travel(spark, tmp_path):
     assert t.read(0).count() == 100  # time travel sees pre-DV rows
     d = t.detail()
     assert d["num_rows"] == 90 and d["num_dead_rows"] == 10
-    # the commit is a delta that RE-EMITS the dv'd entries, removes none
-    raw = json.load(open(t._manifest_path(1)))
-    assert raw["remove"] == []
-    assert all(a["dv"]["count"] > 0 for a in raw["add"])
+    # the commit removes and re-adds each dv'd file with its deletion
+    # vector; no other file action
+    actions = t.commit_actions(1)
+    adds = [a["add"] for a in actions if "add" in a]
+    removes = [a["remove"] for a in actions if "remove" in a]
+    assert {a["path"] for a in adds} == {r["path"] for r in removes}
+    assert all(a["deletionVector"]["cardinality"] > 0 for a in adds)
+    assert sum(a["deletionVector"]["cardinality"] for a in adds) == 10
     # no data file was rewritten
-    assert {f["path"] for f in t._load_manifest(0)["files"]} == {
-        f["path"] for f in t._load_manifest(1)["files"]
+    assert {f["path"] for f in t.snapshot(0)["files"]} == {
+        f["path"] for f in t.snapshot(1)["files"]
     }
 
 
@@ -76,7 +80,7 @@ def test_compact_materializes_and_clears_dvs(spark, tmp_path):
     t.remove_rows(_dead_for(t, F.col("id") % 10 == 0))
     assert t.read().count() == 90
     t.compact(max_files_per_partition=1000)  # only DV'd partitions rewrite
-    m = t._current()
+    m = t.snapshot()
     assert all(not f.get("dv") for f in m["files"])
     assert t.read().count() == 90
     assert t.detail()["num_dead_rows"] == 0
@@ -122,32 +126,36 @@ def test_vacuum_drops_orphaned_sidecars_restore_and_clone(spark, tmp_path):
 
 
 def test_vacuum_grace_spares_inflight_dv_sidecars(spark, tmp_path):
-    """A dv-mode writer stages its sidecar BEFORE its manifest commit;
-    a racing vacuum must not delete a young unreferenced sidecar (in
-    the real sweep or the dry-run preview) or the just-landed commit
-    would reference a missing DV file."""
+    """A dv-mode writer writes its deletion vector BEFORE its commit;
+    a racing vacuum must not delete a young unreferenced one (in the
+    real sweep or the dry-run preview) or the just-landed commit would
+    reference a missing DV file."""
     import os
 
     t = _table(spark, tmp_path)
     t.remove_rows(_dead_for(t, F.col("id") < 10))       # v1, dv A (referenced)
-    dv_root = os.path.join(t.path, "_dv")
-    live = set(os.listdir(dv_root))
-    # simulate a sidecar staged by an in-flight concurrent writer
-    staged = os.path.join(dv_root, "zz-inflight")
-    os.makedirs(staged)
-    with open(os.path.join(staged, "dv.parquet"), "w") as f:
-        f.write("x")
+
+    def dv_files():
+        return {n for n in os.listdir(t.path) if n.startswith("deletion_vector_")}
+
+    live = dv_files()
+    assert len(live) == 1
+    # simulate a deletion vector written by an in-flight concurrent writer
+    staged = os.path.join(t.path, "deletion_vector_inflight.bin")
+    with open(staged, "wb") as f:
+        f.write(b"\x01")
     preview = t.vacuum(keep_versions=1, dry_run=True)
     assert preview["n_dv"] == 0                          # young: not previewed
     out = t.vacuum(keep_versions=1)
     assert out["n_dv_deleted"] == 0
-    assert os.path.isdir(staged)                         # spared
-    assert set(os.listdir(dv_root)) >= live
+    assert os.path.exists(staged)                        # spared
+    assert dv_files() >= live
     preview = t.vacuum(keep_versions=1, dry_run=True, orphan_grace_s=0.0)
     assert preview["n_dv"] == 1                          # past grace: previewed
     out = t.vacuum(keep_versions=1, orphan_grace_s=0.0)
     assert out["n_dv_deleted"] == 1                      # past grace: swept
-    assert not os.path.isdir(staged)
+    assert not os.path.exists(staged)
+    assert dv_files() == live
     assert t.read().count() == 90                        # live DV intact
 
 
@@ -162,7 +170,7 @@ def test_remove_rows_unknown_file_rejected(spark, tmp_path):
 
 def test_upsert_dv_mode_equivalent_and_no_rewrite(spark, tmp_path):
     """Merge-on-read upsert: same result as rewrite mode in every
-    read, but the old files' bytes are untouched (DV sidecars only)."""
+    read, but the old files' bytes are untouched (deletion vectors only)."""
     import os
 
     rows = [(i, i % 3, i * 10) for i in range(30)]
@@ -179,7 +187,7 @@ def test_upsert_dv_mode_equivalent_and_no_rewrite(spark, tmp_path):
     dels = spark.createDataFrame([(5,)], "id long")
 
     out_rw = t_rw.upsert(upd, ["id"], deletes=dels)
-    files_before = {f["path"] for f in t_dv._current()["files"]}
+    files_before = {f["path"] for f in t_dv.snapshot()["files"]}
     out_dv = t_dv.upsert(upd, ["id"], deletes=dels, mode="dv")
     assert out_rw == out_dv
     got_rw = {(r["id"], r["val"]) for r in t_rw.read().collect()}
@@ -189,10 +197,10 @@ def test_upsert_dv_mode_equivalent_and_no_rewrite(spark, tmp_path):
         i for i, _ in got_dv
     }
     # no-rewrite pin: every pre-existing file path is still live
-    after = {f["path"] for f in t_dv._current()["files"]}
+    after = {f["path"] for f in t_dv.snapshot()["files"]}
     assert files_before <= after
-    assert any(f.get("dv") for f in t_dv._current()["files"])
+    assert any(f.get("dv") for f in t_dv.snapshot()["files"])
     # compaction materializes and results stay identical
     t_dv.compact()
     assert {(r["id"], r["val"]) for r in t_dv.read().collect()} == got_rw
-    assert not any(f.get("dv") for f in t_dv._current()["files"])
+    assert not any(f.get("dv") for f in t_dv.snapshot()["files"])

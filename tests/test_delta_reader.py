@@ -474,36 +474,33 @@ def test_reader_works_through_file_scheme_uri(spark, tmp_path):
     assert DeltaTableReader.is_delta_table("file:" + root)
 
 
-def test_import_reference_delta_table_as_vtable(spark, tmp_path):
-    """End-to-end migration: the reference repo's own Delta-3.1.0 table
-    imports into a VersionedParquetTable with identical rows and
-    partition layout, and the imported table is fully operational
-    (time travel base, partition-pruned reads)."""
-    from delta_lake_pyspark_scd2_spark.sources.delta_reader import (
-        DeltaTableReader,
-        import_delta_as_vtable,
-    )
+@needs_ref
+def test_reference_delta_table_opens_in_place(spark, tmp_path):
+    """The reference repo's own Delta-3.1.0 table opens IN PLACE as a
+    VersionedParquetTable (no import): identical rows and partition
+    layout, and it takes writes that the independent reader sees."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
     from delta_lake_pyspark_scd2_spark.sources.vtable import (
         VersionedParquetTable,
     )
 
-    dest = str(tmp_path / "imported")
-    t = import_delta_as_vtable(spark, REF_HEADER, dest)
+    dest = str(tmp_path / "header")
+    shutil.copytree(REF_HEADER, dest)  # writes must not touch the fixture
+    t = VersionedParquetTable(spark, dest)
     src = DeltaTableReader(spark, REF_HEADER)
     n_src = src.read().count()
     assert t.read().count() == n_src
     assert t.partition_columns() == list(src.snapshot().partition_columns)
-    # value-level spot check: per-partition counts agree
-    from pyspark.sql import functions as F
-
     pc = t.partition_columns()[0]
     a = {r[pc]: r["n"] for r in src.read().groupBy(pc).agg(F.count(F.lit(1)).alias("n")).collect()}
     b = {r[pc]: r["n"] for r in t.read().groupBy(pc).agg(F.count(F.lit(1)).alias("n")).collect()}
     assert a == b
-    # the import is a live table: appends work on top of it
-    hist = t.history()
-    assert hist[-1]["operation"] == "CREATE"
-    assert hist[-1]["metrics"]["imported_from"] == REF_HEADER
+    assert [h["version"] for h in t.history()] == [h["version"] for h in src.history()]
+    t.append(t.read().limit(5))
+    assert DeltaTableReader(spark, dest).read().count() == n_src + 5
 
 
 def test_delta_cdf_table_changes(spark, tmp_path):
@@ -515,18 +512,16 @@ def test_delta_cdf_table_changes(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from delta_lake_pyspark_scd2_spark.sources.delta_reader import (
-        DeltaTableReader,
+    from delta_lake_pyspark_scd2_spark.sources.vtable import (
+        VersionedParquetTable,
     )
-    from delta_lake_pyspark_scd2_spark.sources.delta_writer import write_delta
 
     dest = str(tmp_path / "cdf")
     df0 = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20)], "k int, part string, v int"
     )
-    write_delta(df0, dest, partition_cols=["part"], mode="create")   # v0
-    df1 = spark.createDataFrame([(3, "a", 30)], "k int, part string, v int")
-    write_delta(df1, dest, partition_cols=["part"], mode="append")   # v1
+    t = VersionedParquetTable.create(spark, df0, dest, partition_cols=["part"])  # v0
+    t.append(spark.createDataFrame([(3, "a", 30)], "k int, part string, v int"))  # v1
 
     # v2: hand-written cdc commit (update of k=1 in part=a)
     cdc_rel = "_change_data/cdc-00000-test.parquet"
@@ -656,66 +651,3 @@ def test_delta_cdf_with_name_column_mapping(spark, tmp_path):
         (1, "a", 10, "update_preimage", 1),
         (1, "a", 99, "update_postimage", 1),
     }
-
-
-def test_sync_delta_to_vtable_continuous(spark, tmp_path):
-    """Continuous migration: bootstrap from v0, catch up with appends
-    and cdc updates/deletes, resume from the txn watermark, replays
-    are no-ops."""
-    import json as _json
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from delta_lake_pyspark_scd2_spark.sources.delta_reader import (
-        DeltaTableReader,
-        sync_delta_to_vtable,
-    )
-    from delta_lake_pyspark_scd2_spark.sources.delta_writer import write_delta
-    from delta_lake_pyspark_scd2_spark.sources.vtable import (
-        VersionedParquetTable,
-    )
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    write_delta(
-        spark.createDataFrame([(1, 10), (2, 20)], "k int, v int"),
-        src, mode="create",
-    )  # v0
-    out = sync_delta_to_vtable(spark, src, dst, ["k"])
-    assert out == {"synced_to_version": 0, "commits_applied": 1}
-    t = VersionedParquetTable(spark, dst)
-    assert {(r.k, r.v) for r in t.read().collect()} == {(1, 10), (2, 20)}
-
-    # source advances: append + a cdc update/delete commit
-    write_delta(
-        spark.createDataFrame([(3, 30)], "k int, v int"), src, mode="append"
-    )  # v1
-    cdc_rel = "_change_data/cdc-1.parquet"
-    (tmp_path / "src" / "_change_data").mkdir()
-    pq.write_table(
-        pa.table({
-            "k": pa.array([1, 1, 2], pa.int32()),
-            "v": pa.array([10, 99, 20], pa.int32()),
-            "_change_type": ["update_preimage", "update_postimage", "delete"],
-        }),
-        str(tmp_path / "src" / cdc_rel),
-    )
-    (tmp_path / "src" / "_delta_log" / f"{2:020d}.json").write_text(
-        "\n".join(
-            _json.dumps(a)
-            for a in [
-                {"commitInfo": {"operation": "MERGE"}},
-                {"cdc": {"path": cdc_rel, "partitionValues": {},
-                         "size": 1, "dataChange": False}},
-            ]
-        )
-    )  # v2
-    out = sync_delta_to_vtable(spark, src, dst, ["k"])
-    assert out == {"synced_to_version": 2, "commits_applied": 2}
-    assert {(r.k, r.v) for r in t.read().collect()} == {(1, 99), (3, 30)}
-
-    # idle re-run: cursor says nothing to do
-    out = sync_delta_to_vtable(spark, src, dst, ["k"])
-    assert out["commits_applied"] == 0
-    assert {(r.k, r.v) for r in t.read().collect()} == {(1, 99), (3, 30)}

@@ -1,5 +1,7 @@
-"""Delta write-side interop (sources/delta_writer.py): tables we write
-must replay correctly through the independent log reader."""
+"""Delta write side: the tables VersionedParquetTable writes are Delta
+tables, and must replay correctly through the independent log reader
+(``DeltaTableReader``) — data, time travel, checkpoints, log cleanup,
+deletion vectors and the protocol action."""
 
 from __future__ import annotations
 
@@ -11,10 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from delta_lake_pyspark_scd2_spark.sources.delta_reader import DeltaTableReader
-from delta_lake_pyspark_scd2_spark.sources.delta_writer import (
-    export_vtable_as_delta,
-    write_delta,
-)
 from delta_lake_pyspark_scd2_spark.sources.tables import load_table
 from delta_lake_pyspark_scd2_spark.sources.vtable import VersionedParquetTable
 
@@ -26,8 +24,10 @@ def test_create_roundtrip_partitioned(spark, tmp_path):
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
     path = str(tmp_path / "d")
-    v = write_delta(orders, path, partition_cols=["o_orderpriority"])
-    assert v == 0
+    t = VersionedParquetTable.create(
+        spark, orders, path, partition_cols=["o_orderpriority"]
+    )
+    assert t.latest_version() == 0
     r = DeltaTableReader(spark, path)
     back = r.read()
     assert back.count() == orders.count()
@@ -43,57 +43,47 @@ def test_create_roundtrip_partitioned(spark, tmp_path):
 
 
 def test_writer_works_through_file_scheme_uri(spark, tmp_path):
-    """Directive: the writer's staging, listing, and commit publish run
-    through the Hadoop FS shim — a ``file:``-scheme table path must
-    behave identically to a raw local one, including checkpoints and
-    log cleanup."""
-    from delta_lake_pyspark_scd2_spark.sources.delta_writer import (
-        clean_log,
-        write_checkpoint,
-    )
-
+    """A ``file:``-scheme table path behaves identically to a raw local
+    one: commits, the commit publish, checkpoints and log cleanup."""
     path = "file:" + str(tmp_path / "d")
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
     df2 = spark.createDataFrame([(3, "c")], "id long, s string")
-    assert write_delta(df1, path, partition_cols=["s"]) == 0
-    assert write_delta(df2, path, mode="append") == 1
+    t = VersionedParquetTable.create(spark, df1, path, partition_cols=["s"])
+    assert t.append(df2) == 1
     r = DeltaTableReader(spark, path)
     assert r.read().count() == 3
-    assert write_checkpoint(path) == 1
-    assert clean_log(path) == 1
+    assert t.vacuum(keep_versions=1)["n_versions_dropped"] == 1
     assert DeltaTableReader(spark, path).read().count() == 3
+    assert VersionedParquetTable(spark, path).read().count() == 3
 
 
 def test_append_and_overwrite_time_travel(spark, tmp_path):
     path = str(tmp_path / "d")
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
     df2 = spark.createDataFrame([(3, "c")], "id long, s string")
-    assert write_delta(df1, path) == 0
-    assert write_delta(df2, path, mode="append") == 1
+    t = VersionedParquetTable.create(spark, df1, path)
+    assert t.append(df2) == 1
     r = DeltaTableReader(spark, path)
     assert r.read().count() == 3
     assert r.read(version=0).count() == 2
     df3 = spark.createDataFrame([(9, "z")], "id long, s string")
-    assert write_delta(df3, path, mode="overwrite") == 2
+    assert t.overwrite(df3) == 2
     assert [x["id"] for x in r.read().collect()] == [9]
     assert r.read(version=1).count() == 3  # history intact
 
 
-def test_create_refuses_existing_and_schema_mismatch(spark, tmp_path):
+def test_create_refuses_existing_table(spark, tmp_path):
     path = str(tmp_path / "d")
     df = spark.createDataFrame([(1, "a")], "id long, s string")
-    write_delta(df, path)
+    VersionedParquetTable.create(spark, df, path)
     with pytest.raises(FileExistsError):
-        write_delta(df, path)
-    bad = spark.createDataFrame([(1,)], "other long")
-    with pytest.raises(ValueError):
-        write_delta(bad, path, mode="append")
+        VersionedParquetTable.create(spark, df, path)
 
 
 def test_commit_stats_carry_numrecords(spark, tmp_path):
     path = str(tmp_path / "d")
     df = spark.createDataFrame([(i, "x") for i in range(10)], "id long, s string")
-    write_delta(df, path)
+    VersionedParquetTable.create(spark, df.coalesce(2), path)
     commit = os.path.join(path, "_delta_log", f"{0:020d}.json")
     adds = [
         json.loads(line)["add"]
@@ -101,19 +91,23 @@ def test_commit_stats_carry_numrecords(spark, tmp_path):
         if '"add"' in line
     ]
     assert adds
-    assert sum(json.loads(a["stats"])["numRecords"] for a in adds) == 10
+    stats = [json.loads(a["stats"]) for a in adds]
+    assert sum(s["numRecords"] for s in stats) == 10
+    assert min(s["minValues"]["id"] for s in stats) == 0
+    assert max(s["maxValues"]["id"] for s in stats) == 9
+    assert all(s["nullCount"]["s"] == 0 for s in stats)
 
 
 def test_export_vtable_snapshot(spark, tmp_path):
+    """No export step: a table's latest snapshot, after a DELETE, is
+    what a Delta reader sees at the table's own path."""
     docs = load_table(spark, SF, "documents")
     t = VersionedParquetTable.create(
         spark, docs, str(tmp_path / "vt")
     )
-    # mutate: delete some rows so the export is a non-trivial snapshot
+    # mutate: delete some rows so the snapshot is non-trivial
     t.delete([("doc_id", "<", 5)])
-    dest = str(tmp_path / "exported")
-    export_vtable_as_delta(t, dest)
-    back = DeltaTableReader(spark, dest).read()
+    back = DeltaTableReader(spark, t.path).read()
     want = t.read()
     assert back.count() == want.count()
     assert back.exceptAll(want).count() == 0
@@ -124,105 +118,64 @@ def test_roundtrip_reference_shaped_table(spark, tmp_path):
     # reader/writer pair (catches asymmetric encodings)
     li = load_table(spark, SF, "lineitem").limit(200)
     p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
-    write_delta(li, p1, partition_cols=["l_returnflag"])
+    VersionedParquetTable.create(spark, li, p1, partition_cols=["l_returnflag"])
     mid = DeltaTableReader(spark, p1).read()
-    write_delta(mid.select(*li.columns), p2, partition_cols=["l_returnflag"])
+    VersionedParquetTable.create(
+        spark, mid.select(*li.columns), p2, partition_cols=["l_returnflag"]
+    )
     final = DeltaTableReader(spark, p2).read()
     assert final.count() == 200
     assert final.select(*li.columns).exceptAll(li).count() == 0
 
 
 def test_checkpoint_and_log_cleanup(spark, tmp_path):
-    from delta_lake_pyspark_scd2_spark.sources.delta_writer import (
-        clean_log,
-        write_checkpoint,
-    )
-
     path = str(tmp_path / "d")
-    write_delta(
-        spark.createDataFrame([(1, "a")], "id long, s string"), path
+    t = VersionedParquetTable.create(
+        spark, spark.createDataFrame([(1, "a")], "id long, s string"), path
     )
-    for i in range(2, 6):
-        write_delta(
-            spark.createDataFrame([(i, "x")], "id long, s string"),
-            path,
-            mode="append",
-        )
-    assert write_checkpoint(path) == 4
-    assert clean_log(path) == 4  # commits 0-3 now redundant
+    for i in range(2, 13):
+        t.append(spark.createDataFrame([(i, "x")], "id long, s string"))
+    # v10 was checkpointed; vacuum drops the commits below v11
+    assert t.vacuum(keep_versions=1)["n_versions_dropped"] == 11
+    log = os.listdir(os.path.join(path, "_delta_log"))
+    assert f"{0:020d}.json" not in log
     r = DeltaTableReader(spark, path)
-    assert r.read().count() == 5  # replay = checkpoint + tail
+    assert r.read().count() == 12  # replay = checkpoint + tail
     # a further append after cleanup still reads correctly
-    write_delta(
-        spark.createDataFrame([(9, "z")], "id long, s string"),
-        path,
-        mode="append",
-    )
-    assert DeltaTableReader(spark, path).read().count() == 6
-    # and a SECOND checkpoint built on top of the first (early json gone)
-    assert write_checkpoint(path) == 5
-    assert clean_log(path) == 1
-    assert DeltaTableReader(spark, path).read().count() == 6
+    t.append(spark.createDataFrame([(99, "z")], "id long, s string"))
+    assert DeltaTableReader(spark, path).read().count() == 13
+    assert VersionedParquetTable(spark, path).read().count() == 13
 
 
 def test_export_preserve_dvs_roundtrip(spark, tmp_path):
-    """Zero-rewrite export: byte-copied data files + native Delta
-    deletion vectors, read back identically by the independent reader;
-    protocol gates to (3,7) iff a DV exists."""
-    import json
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from delta_lake_pyspark_scd2_spark.sources.delta_reader import (
-        DeltaTableReader,
-    )
-    from delta_lake_pyspark_scd2_spark.sources.delta_writer import (
-        export_vtable_as_delta,
-    )
-    from delta_lake_pyspark_scd2_spark.sources.vtable import (
-        VersionedParquetTable,
-    )
-
+    """Deletion vectors are native Delta DVs (roaring bitmaps in
+    ``deletion_vector_<uuid>.bin``), read back identically by the
+    independent reader; the protocol declares ``deletionVectors`` iff
+    a live file carries one."""
     p = str(tmp_path / "t")
     df = spark.range(0, 20).select(
         F.col("id").alias("k"),
         (F.col("id") % 3).cast("string").alias("part"),
         (F.col("id") * 2).alias("v"),
     )
-    VersionedParquetTable.create(spark, df, p, partition_cols=["part"])
-    t = VersionedParquetTable(spark, p)
-    m = t._current()
-    full = t._scan(
-        m["files"],
-        T.StructType.fromJson(json.loads(m["schema"])),
-        with_position=True,
-    )
+    t = VersionedParquetTable.create(spark, df, p, partition_cols=["part"])
+    protocol = next(a["protocol"] for a in t.commit_actions(0) if "protocol" in a)
+    assert protocol["minReaderVersion"] == 1
+    assert "deletionVectors" not in protocol["writerFeatures"]
+    full = t.read_partitions(t.partitions_of(), with_position=True)
     t.remove_rows(full.filter(F.col("k") % 4 == 0).select("__file", "__pos"))
+    assert any(f.startswith("deletion_vector_") for f in os.listdir(p))
 
-    dest = str(tmp_path / "delta_dv")
-    export_vtable_as_delta(t, dest, preserve_dvs=True)
-    got = DeltaTableReader(spark, dest).read()
+    got = DeltaTableReader(spark, p).read()
     want = sorted(tuple(r) for r in t.read().select("k", "part", "v").collect())
+    assert len(want) == 15
     assert sorted(tuple(r) for r in got.select("k", "part", "v").collect()) == want
+    protocol = next(a["protocol"] for a in t.commit_actions(1) if "protocol" in a)
+    assert protocol["minReaderVersion"] == 3
+    assert "deletionVectors" in protocol["readerFeatures"]
 
-    log = (tmp_path / "delta_dv" / "_delta_log" / f"{0:020d}.json").read_text()
-    prot = next(
-        json.loads(l)["protocol"] for l in log.splitlines() if "protocol" in l
-    )
-    assert prot["minReaderVersion"] == 3
-    assert "deletionVectors" in prot["readerFeatures"]
-
-    # a DV-free table exports on the widest-compat protocol
-    p2 = str(tmp_path / "t2")
-    VersionedParquetTable.create(spark, df, p2, partition_cols=["part"])
-    dest2 = str(tmp_path / "delta_plain")
-    export_vtable_as_delta(
-        VersionedParquetTable(spark, p2), dest2, preserve_dvs=True
-    )
-    log2 = (tmp_path / "delta_plain" / "_delta_log" / f"{0:020d}.json").read_text()
-    prot2 = next(
-        json.loads(l)["protocol"] for l in log2.splitlines() if "protocol" in l
-    )
-    assert (prot2["minReaderVersion"], prot2["minWriterVersion"]) == (1, 2)
-    assert DeltaTableReader(spark, dest2).read().count() == 20
+    # compaction materializes the deletes: the feature is gone again
+    t.compact(max_files_per_partition=1000)
+    protocol = next(a["protocol"] for a in t.commit_actions(2) if "protocol" in a)
+    assert protocol["minReaderVersion"] == 1
+    assert DeltaTableReader(spark, p).read().count() == 15

@@ -70,18 +70,17 @@ def test_fsck_detects_missing_dv_sidecar(spark, tmp_path):
         .select("__file", "__pos")
     )
     t.remove_rows(dead)
-    # remove a dv path the manifest actually references (the write job
-    # also leaves unreferenced empty parts + _SUCCESS markers behind)
-    m = t._load_manifest(t.latest_version())
-    referenced = sorted(
-        p
-        for f in m["files"]
-        for p in (f.get("dv") or {}).get("paths", [])
+    # remove the deletion-vector file the log actually references
+    from delta_lake_pyspark_scd2_spark.sources.delta_dv import (
+        dv_file_relative_path,
     )
-    assert referenced, "remove_rows should have attached dv sidecars"
-    import shutil
 
-    shutil.rmtree(str(tmp_path / "t" / "_dv" / referenced[0]))
+    m = t.snapshot(t.latest_version())
+    referenced = sorted(
+        {dv_file_relative_path(f["dv"]) for f in m["files"] if f["dv"]}
+    )
+    assert referenced, "remove_rows should have attached deletion vectors"
+    os.remove(str(tmp_path / "t" / referenced[0]))
     rep = t.fsck()
     assert not rep["ok"] and len(rep["missing_dvs"]) >= 1
     assert rep["missing_dvs"][0]["path"] == referenced[0]

@@ -28,10 +28,10 @@ def test_delete_rewrites_only_matching_files(spark, tmp_path):
         "id", (F.col("id") % 7).alias("v")
     ).repartitionByRange(8, "id")
     t = VersionedParquetTable.create(spark, df, path)
-    before = {f["path"] for f in t._load_manifest(0)["files"]}
+    before = {f["path"] for f in t.snapshot(0)["files"]}
     out = t.delete([("id", ">=", 875)])
     assert out == {"n_deleted": 125, "n_files_rewritten": 1}
-    after = {f["path"] for f in t._load_manifest(1)["files"]}
+    after = {f["path"] for f in t.snapshot(1)["files"]}
     # 7 of 8 range files carried by reference, 1 rewritten
     assert len(before & after) == 7
     assert t.read().count() == 875
@@ -201,10 +201,10 @@ def test_update_where_file_granular(spark, tmp_path):
     t = VersionedParquetTable.create(
         spark, df, path, properties={"enableChangeDataFeed": "true"}
     )
-    before = {f["path"] for f in t._load_manifest(0)["files"]}
+    before = {f["path"] for f in t.snapshot(0)["files"]}
     out = t.update([("id", ">=", 900)], {"v": "v + 100"})
     assert out == {"n_updated": 100, "n_files_rewritten": 1}
-    after = {f["path"] for f in t._load_manifest(1)["files"]}
+    after = {f["path"] for f in t.snapshot(1)["files"]}
     assert len(before & after) == 7  # 7 of 8 range files untouched
     assert t.read().count() == 1000
     got = {r.id: r.v for r in t.read_where([("id", ">=", 898)]).collect()}
@@ -267,7 +267,7 @@ def test_no_match_dml_preserves_constraints(spark, tmp_path):
 
     t.update([("id", "=", -1)], {"price": "0.0"})   # no file matches
     t.delete([("id", "=", -1)])                      # no file matches
-    assert "pos_price" in (t._current().get("constraints") or {})
+    assert "pos_price" in (t.snapshot().get("constraints") or {})
 
     # the constraint still enforces on the next real write
     import pytest as _pt

@@ -110,7 +110,7 @@ def test_incremental_semantic_probes_only_batch_clusters(spark, tmp_path):
         .collect()
     }
     # manifest pruning: the probed read lists only those partitions
-    m = index._load_manifest(index.latest_version())
+    m = index.snapshot(index.latest_version())
     all_parts = {f["partition"]["cluster_id"] for f in m["files"]}
     assert len(batch_clusters) < len(all_parts)
     probed = index.read_partitions(

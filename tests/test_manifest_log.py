@@ -1,8 +1,9 @@
-"""Incremental manifest log: commits are O(touched files) delta
-records, periodic checkpoints bound snapshot replay, and vacuum keeps
-the log reconstructible. This is the Delta-style checkpoint +
-incremental-log split that keeps commit metadata from becoming the
-bottleneck at millions of files (vtable.py module docstring)."""
+"""The transaction log (``_delta_log``): commits are O(touched files)
+sets of Delta actions, periodic parquet checkpoints bound snapshot
+replay, and vacuum keeps the log reconstructible. This is Delta's
+checkpoint + incremental-log split that keeps commit metadata from
+becoming the bottleneck at millions of files (vtable.py module
+docstring)."""
 
 import json
 import os
@@ -10,10 +11,24 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from delta_lake_pyspark_scd2_spark.sources.delta_reader import DeltaTableReader
 from delta_lake_pyspark_scd2_spark.sources.vtable import (
     CHECKPOINT_INTERVAL,
+    MANIFEST_DIR,
     VersionedParquetTable,
 )
+
+
+def _commit_file(path: str, version: int) -> str:
+    return os.path.join(path, MANIFEST_DIR, f"{version:020d}.json")
+
+
+def _checkpoints(path: str) -> list[int]:
+    return sorted(
+        int(f.split(".")[0])
+        for f in os.listdir(os.path.join(path, MANIFEST_DIR))
+        if f.endswith(".checkpoint.parquet")
+    )
 
 
 def _batch(spark, lo, n=10):
@@ -23,23 +38,24 @@ def _batch(spark, lo, n=10):
 
 
 def test_commit_size_flat_as_table_grows(spark, tmp_path):
-    """25 single-file appends: every delta commit lists exactly one
-    added file regardless of how many live files the table holds —
-    commit metadata cost ∝ operation, not table size."""
+    """25 single-file appends: every commit lists exactly one added
+    file regardless of how many live files the table holds — commit
+    metadata cost ∝ operation, not table size."""
     path = str(tmp_path / "t")
     t = VersionedParquetTable.create(spark, _batch(spark, 0), path)
     sizes = []
     for i in range(1, 26):
         t.append(_batch(spark, i * 10))
-        raw = json.load(open(t._manifest_path(i)))
-        assert len(raw["add"]) == 1 and raw["remove"] == []
-        assert raw["num_files"] == i + 1
-        sizes.append(os.path.getsize(t._manifest_path(i)))
-    # flat: the 25th commit is no bigger than ~2x the 1st (schema noise),
-    # while a full-list manifest would have grown ~25x
+        actions = t.commit_actions(i)
+        assert sum("add" in a for a in actions) == 1
+        assert not any("remove" in a for a in actions)
+        assert t.history()[0]["num_files"] == i + 1
+        sizes.append(os.path.getsize(_commit_file(path, i)))
+    # flat: the 25th commit is no bigger than ~2x the 1st (timestamp
+    # noise), while a full-list commit would have grown ~25x
     assert sizes[-1] < 2 * sizes[0]
     # checkpoints exist exactly at the interval versions
-    assert t._checkpoint_versions() == [
+    assert _checkpoints(path) == [
         v for v in range(1, 26) if v % CHECKPOINT_INTERVAL == 0
     ]
     # reconstruction is correct at every version (time travel intact)
@@ -62,10 +78,10 @@ def test_replace_partitions_commit_lists_only_touched(spark, tmp_path):
         F.col("id"), F.lit(1).alias("p"), (F.col("id") + 1000).alias("val")
     )
     t.replace_partitions(repl, [{"p": "1"}])
-    raw = json.load(open(t._manifest_path(1)))
+    actions = t.commit_actions(1)
     # only partition p=1's files churn; p=0,2,3 are carried silently
-    assert all(e["partition"] == {"p": "1"} for e in raw["add"])
-    assert all("p=1/" in p for p in raw["remove"])
+    assert all(a["add"]["partitionValues"] == {"p": "1"} for a in actions if "add" in a)
+    assert all("p=1/" in a["remove"]["path"] for a in actions if "remove" in a)
     assert t.read().filter("p = 1").agg(F.min("val")).first()[0] == 1000
     assert t.read().filter("p != 1").count() == 75
 
@@ -87,28 +103,6 @@ def test_vacuum_checkpoints_oldest_kept_version(spark, tmp_path):
     assert t2.detail()["num_files"] == 6
 
 
-def test_old_format_full_manifest_still_reads(spark, tmp_path):
-    """A pre-split manifest carrying a full ``files`` list is read as a
-    self-checkpoint; later commits on top of it are deltas."""
-    path = str(tmp_path / "t")
-    t = VersionedParquetTable.create(spark, _batch(spark, 0), path)
-    t.append(_batch(spark, 10))
-    # rewrite v1 on disk into the old full-list format
-    m1 = t._load_manifest(1)
-    raw = json.load(open(t._manifest_path(1)))
-    old = {k: v for k, v in raw.items() if k not in ("add", "remove", "num_files")}
-    old["files"] = m1["files"]
-    os.remove(t._manifest_path(1))
-    with open(t._manifest_path(1), "w") as fh:
-        json.dump(old, fh)
-    t2 = VersionedParquetTable(spark, path)
-    assert t2.read(1).count() == 20
-    t2.append(_batch(spark, 20))
-    assert "add" in json.load(open(t2._manifest_path(2)))
-    assert t2.read().count() == 30
-    assert [h["num_files"] for h in t2.history()] == [3, 2, 1]
-
-
 def test_restore_and_history_over_delta_log(spark, tmp_path):
     path = str(tmp_path / "t")
     t = VersionedParquetTable.create(spark, _batch(spark, 0), path)
@@ -121,33 +115,32 @@ def test_restore_and_history_over_delta_log(spark, tmp_path):
     assert h[0]["operation"] == "RESTORE" and h[0]["num_files"] == 4
 
 
-def test_parquet_checkpoint_roundtrip_and_legacy_json(spark, tmp_path):
-    """Checkpoints are parquet (columnar, zstd — no giant JSON parse at
-    millions of files); legacy .ckpt.json checkpoints still replay."""
-    import json as _json
-
+def test_parquet_checkpoint_roundtrip(spark, tmp_path):
+    """Checkpoints are Delta parquet checkpoints (columnar — no giant
+    JSON parse at millions of files) with a ``_last_checkpoint``
+    pointer; a cold handle, and the independent reader, reconstruct
+    through them once the JSON commits below are gone."""
     path = str(tmp_path / "t")
     t = VersionedParquetTable.create(spark, _batch(spark, 0), path)
     for i in range(1, CHECKPOINT_INTERVAL + 2):
-        t.append(_batch(spark, i * 10))
-    ck = t._ckpt_file(CHECKPOINT_INTERVAL)
-    assert ck is not None and ck.endswith(".ckpt.parquet")
-    # fresh handle reconstructs through the parquet checkpoint
+        t.append(_batch(spark, i * 10), txn=("app", i))
+    assert _checkpoints(path) == [CHECKPOINT_INTERVAL]
+    with open(os.path.join(path, MANIFEST_DIR, "_last_checkpoint")) as fh:
+        assert json.load(fh)["version"] == CHECKPOINT_INTERVAL
+    # log cleanup: the commits the checkpoint covers are redundant
+    for v in range(CHECKPOINT_INTERVAL):
+        os.remove(_commit_file(path, v))
     t2 = VersionedParquetTable(spark, path)
     assert t2.read(CHECKPOINT_INTERVAL).count() == 10 * (CHECKPOINT_INTERVAL + 1)
     assert t2.read().count() == 10 * (CHECKPOINT_INTERVAL + 2)
+    assert t2.last_txn_version("app") == CHECKPOINT_INTERVAL + 1
+    def files(tt):
+        return sorted(tt.snapshot(CHECKPOINT_INTERVAL)["files"], key=lambda f: f["path"])
 
-    # legacy JSON checkpoint: replace the parquet one with old format
-    files = t2._snapshot_files(CHECKPOINT_INTERVAL)
-    os.remove(ck)
-    legacy = os.path.join(
-        path, "_manifest", f"v{CHECKPOINT_INTERVAL:010d}.ckpt.json"
-    )
-    with open(legacy, "w") as fh:
-        _json.dump({"version": CHECKPOINT_INTERVAL, "files": files}, fh)
-    t3 = VersionedParquetTable(spark, path)
-    assert t3.read(CHECKPOINT_INTERVAL).count() == 10 * (CHECKPOINT_INTERVAL + 1)
-    assert t3.read().count() == 10 * (CHECKPOINT_INTERVAL + 2)
+    assert files(t2) == files(t)
+    assert DeltaTableReader(spark, path).read().count() == 10 * (CHECKPOINT_INTERVAL + 2)
+    with pytest.raises(FileNotFoundError):
+        t2.read(CHECKPOINT_INTERVAL - 1)
 
 
 def test_partitioned_append_writes_one_file_per_partition(spark, tmp_path):
@@ -165,9 +158,8 @@ def test_partitioned_append_writes_one_file_per_partition(spark, tmp_path):
         .select(F.col("id"), (F.col("id") % 4).cast("string").alias("p"))
     )
     t = VersionedParquetTable.create(spark, base, path, partition_cols=["p"])
-    raw = json.load(open(t._manifest_path(0)))
-    assert len(raw["add"]) == 4, [f["path"] for f in raw["add"]]
+    adds = [a["add"]["path"] for a in t.commit_actions(0) if "add" in a]
+    assert len(adds) == 4, adds
     t.append(base)
-    raw1 = json.load(open(t._manifest_path(1)))
-    assert len(raw1["add"]) == 4
+    assert sum("add" in a for a in t.commit_actions(1)) == 4
     assert t.read().count() == 8000

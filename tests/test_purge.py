@@ -100,7 +100,7 @@ def test_purge_scrubs_cdf_history(spark, tmp_path):
     ), ["id"])
 
     def cdc_u1_rows() -> int:
-        files = glob.glob(os.path.join(t.path, "_cdc", "**", "*.parquet"),
+        files = glob.glob(os.path.join(t.path, "_change_data", "**", "*.parquet"),
                           recursive=True)
         assert files  # the upsert staged change-data files
         return (
@@ -160,7 +160,7 @@ def test_purge_erases_through_deletion_vectors(spark, tmp_path):
     dead = pos.filter(F.col("id").isin(0, 1)).select("__file", "__pos")
     t.remove_rows(dead, operation="DELETE_DV")
     assert any(
-        f.get("dv") for f in t._snapshot_files(t.latest_version())
+        f.get("dv") for f in t.snapshot(t.latest_version())["files"]
     )  # premise: the shared file really is DV-covered
     n_u1_v0 = t.read(version=0).filter(F.col("user") == "u1").count()
     n_v0 = t.read(version=0).count()
@@ -216,7 +216,7 @@ def test_purge_on_dv_upsert_table(spark, tmp_path):
         ["id"],
         mode="dv",
     )
-    assert any(f.get("dv") for f in t._snapshot_files(t.latest_version()))
+    assert any(f.get("dv") for f in t.snapshot(t.latest_version())["files"])
 
     out = t.purge([("user", "=", "u2")])
     assert out["n_history_rows_purged"] > 0
@@ -228,7 +228,7 @@ def test_purge_on_dv_upsert_table(spark, tmp_path):
         assert t2.read(version=v).filter(F.col("user") == "u0").count() == 4
     # CDF files scrubbed: no u2 anywhere in change data
     files = glob.glob(
-        os.path.join(path, "_cdc", "**", "*.parquet"), recursive=True
+        os.path.join(path, "_change_data", "**", "*.parquet"), recursive=True
     )
     if files:
         assert (
@@ -289,9 +289,9 @@ def test_purge_across_schema_evolution(spark, tmp_path):
 
 
 def test_purge_with_missing_rows_stat_reports_exact_counts(spark, tmp_path):
-    """A manifest entry without a ``rows`` stat must neither corrupt the
-    erasure report (negative ``n_history_rows_purged``) nor trigger a
-    needless rewrite when the file has no matching rows (round-4
+    """A log entry without a ``numRecords`` stat must neither corrupt
+    the erasure report (negative ``n_history_rows_purged``) nor trigger
+    a needless rewrite when the file has no matching rows (round-4
     ADVICE): the pre-rewrite count is derived from the scanned file."""
     import json
     import os
@@ -299,18 +299,17 @@ def test_purge_with_missing_rows_stat_reports_exact_counts(spark, tmp_path):
     from delta_lake_pyspark_scd2_spark.sources.vtable import MANIFEST_DIR
 
     t = _mk(spark, tmp_path)
-    # strip every rows stat from the v0 commit on disk
-    mp = os.path.join(t.path, MANIFEST_DIR, f"v{0:010d}.json")
+    # strip every numRecords stat from the v0 commit on disk
+    mp = os.path.join(t.path, MANIFEST_DIR, f"{0:020d}.json")
     with open(mp) as fh:
-        raw = json.load(fh)
-    for key in ("files", "add"):
-        for f in raw.get(key) or []:
-            f.pop("rows", None)
+        actions = [json.loads(line) for line in fh]
+    for a in actions:
+        if "add" in a:
+            st = json.loads(a["add"]["stats"])
+            st.pop("numRecords")
+            a["add"]["stats"] = json.dumps(st)
     with open(mp, "w") as fh:
-        json.dump(raw, fh)
-    for crc in (os.path.join(os.path.dirname(mp), "." + os.path.basename(mp) + ".crc"),):
-        if os.path.exists(crc):
-            os.remove(crc)
+        fh.writelines(json.dumps(a) + "\n" for a in actions)
 
     t2 = VersionedParquetTable(spark, t.path)  # fresh handle, no caches
     n_u1 = t2.read(version=0).filter(F.col("user") == "u1").count()
@@ -323,9 +322,9 @@ def test_purge_with_missing_rows_stat_reports_exact_counts(spark, tmp_path):
 
     # second purge of a value that never existed: files (still without a
     # rows stat in v0's rewritten lineage) are scanned but NOT rewritten
-    files_before = {f["path"] for f in t3._snapshot_files(0)}
+    files_before = {f["path"] for f in t3.snapshot(0)["files"]}
     out2 = t3.purge([("user", "=", "nope")])
     assert out2["n_history_rows_purged"] == 0
     assert out2["n_history_files_rewritten"] == 0
     t4 = VersionedParquetTable(spark, t.path)
-    assert {f["path"] for f in t4._snapshot_files(0)} == files_before
+    assert {f["path"] for f in t4.snapshot(0)["files"]} == files_before

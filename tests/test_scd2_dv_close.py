@@ -78,15 +78,18 @@ def test_dv_close_rewrites_no_data_files(spark, tmp_path):
     path = str(tmp_path / "t")
     spec = replace(SPEC, close_mode="dv")
     t = _run(spark, spec, path)
-    # every SCD2_MERGE_DV commit re-emits dv metadata + adds closed
-    # copies and inserts, but never removes (rewrites) a file
+    # every SCD2_MERGE_DV commit re-adds files with deletion vectors
+    # and adds closed copies and inserts, but never removes (rewrites)
+    # a file: each removed path comes back with a deletion vector
     ops = {h["version"]: h["operation"] for h in t.history()}
     close_vs = [v for v, op in ops.items() if op == "SCD2_MERGE_DV"]
     assert close_vs, "no DV merge commits happened"
     for v in close_vs:
-        raw = t._load_commit(v)
-        assert raw["remove"] == []
-        assert any(a.get("dv") for a in raw["add"])
+        actions = t.commit_actions(v)
+        adds = [a["add"] for a in actions if "add" in a]
+        dv_paths = {a["path"] for a in adds if a.get("deletionVector")}
+        assert dv_paths
+        assert {a["remove"]["path"] for a in actions if "remove" in a} <= dv_paths
     assert t.detail()["num_dead_rows"] == 3  # A closed twice, C once
     # single-current invariant holds through DV closes
     cur = t.read().filter("is_current").groupBy("contract").count().collect()

@@ -380,10 +380,10 @@ def test_vtable_compaction(spark, table_path):
     t = VersionedParquetTable(spark, table_path)
     before = sorted(t.read().collect(), key=lambda r: r.valid_from)
     v_before = t.latest_version()
-    n_files_before = len(t._current()["files"])
+    n_files_before = len(t.snapshot()["files"])
     assert n_files_before > 1
     t.compact()
-    assert len(t._current()["files"]) == 1  # one partition day => one file
+    assert len(t.snapshot()["files"]) == 1  # one partition day => one file
     after = sorted(t.read().collect(), key=lambda r: r.valid_from)
     assert [r.asDict() for r in before] == [r.asDict() for r in after]
     assert t.read(v_before).count() == len(before)  # old snapshot intact
@@ -470,7 +470,7 @@ def test_vtable_vacuum_retention(spark, tmp_path):
     # old versions are gone (time travel beyond retention fails)
     assert t.versions() == [versions_before[-1]]
     with _pytest.raises(FileNotFoundError):
-        t._load_manifest(versions_before[0])
+        t.snapshot(versions_before[0])
 
 
 def test_late_tombstone_rebuild(spark, table_path):
@@ -643,8 +643,6 @@ def test_vtable_concurrent_append_retries(spark, tmp_path):
     wins the version race, the append rebases onto the new head and
     commits — both writers' rows survive. A concurrent metadata change
     (new constraint) is a real conflict and raises."""
-    import json as _json
-
     from pyspark.sql import Row
 
     schema = "k string, v int"
@@ -652,25 +650,22 @@ def test_vtable_concurrent_append_retries(spark, tmp_path):
         spark, spark.createDataFrame([Row(k="base", v=0)], schema), str(tmp_path / "cc")
     )
 
-    # Simulate a concurrent writer: every _commit first loses one race
-    # because a rival manifest appears at the target version.
-    orig_commit = t._commit
+    # Simulate a concurrent writer: the next commit first loses one race
+    # because a rival (an empty append) lands at the target version.
+    orig_commit = t._write_commit
     rival_done = {"done": False}
 
-    def racing_commit(version, files, sch, pc, op, *args, **kwargs):
+    def racing_commit(base, files, op, *args, **kwargs):
         if not rival_done["done"]:
             rival_done["done"] = True
-            m0 = t._load_manifest(t.latest_version())
-            rival = dict(m0)
-            rival["version"] = version
-            rival["operation"] = "APPEND"  # the rival's own append
-            with open(t._manifest_path(version), "w") as fh:
-                _json.dump(rival, fh)
-        return orig_commit(version, files, sch, pc, op, *args, **kwargs)
+            VersionedParquetTable(spark, t.path).append(
+                spark.createDataFrame([], schema)
+            )
+        return orig_commit(base, files, op, *args, **kwargs)
 
-    t._commit = racing_commit
+    t._write_commit = racing_commit
     v = t.append(spark.createDataFrame([Row(k="mine", v=1)], schema))
-    t._commit = orig_commit
+    t._write_commit = orig_commit
     # the rival took v1; our append must land at v2 with both visible
     assert v == 2
     assert {(r.k, r.v) for r in t.read().collect()} == {("base", 0), ("mine", 1)}
@@ -679,21 +674,16 @@ def test_vtable_concurrent_append_retries(spark, tmp_path):
     # concurrent CONSTRAINT change during the race → hard conflict
     rival_done["done"] = False
 
-    def constraint_racing_commit(version, files, sch, pc, op, *args, **kwargs):
+    def constraint_racing_commit(base, files, op, *args, **kwargs):
         if not rival_done["done"]:
             rival_done["done"] = True
-            m0 = t._load_manifest(t.latest_version())
-            rival = dict(m0)
-            rival["version"] = version
-            rival["constraints"] = {"v_pos": "v > 0"}
-            with open(t._manifest_path(version), "w") as fh:
-                _json.dump(rival, fh)
-        return orig_commit(version, files, sch, pc, op, *args, **kwargs)
+            VersionedParquetTable(spark, t.path).add_constraint("v_pos", "v >= 0")
+        return orig_commit(base, files, op, *args, **kwargs)
 
-    t._commit = constraint_racing_commit
+    t._write_commit = constraint_racing_commit
     with pytest.raises(RuntimeError, match="concurrent schema/constraint"):
         t.append(spark.createDataFrame([Row(k="late", v=-3)], schema))
-    t._commit = orig_commit
+    t._write_commit = orig_commit
 
 
 def test_vtable_merge_schema_rebase_keeps_winner_columns(spark, tmp_path):
@@ -708,10 +698,10 @@ def test_vtable_merge_schema_rebase_keeps_winner_columns(spark, tmp_path):
         spark.createDataFrame([Row(k="base", v=0)], "k string, v int"),
         str(tmp_path / "msr"),
     )
-    orig_commit = t._commit
+    orig_commit = t._write_commit
     rival_done = {"done": False}
 
-    def racing_commit(version, files, sch, pc, op, *args, **kwargs):
+    def racing_commit(base, files, op, *args, **kwargs):
         if not rival_done["done"]:
             rival_done["done"] = True
             # a REAL rival append through a second handle: adds column w
@@ -720,14 +710,14 @@ def test_vtable_merge_schema_rebase_keeps_winner_columns(spark, tmp_path):
                 spark.createDataFrame([Row(k="rival", w=7)], "k string, w int"),
                 merge_schema=True,
             )
-        return orig_commit(version, files, sch, pc, op, *args, **kwargs)
+        return orig_commit(base, files, op, *args, **kwargs)
 
-    t._commit = racing_commit
+    t._write_commit = racing_commit
     t.append(
         spark.createDataFrame([Row(k="mine", c=5)], "k string, c int"),
         merge_schema=True,
     )
-    t._commit = orig_commit
+    t._write_commit = orig_commit
 
     got = t.read()
     assert {"k", "v", "w", "c"} <= set(got.columns)
@@ -738,8 +728,8 @@ def test_vtable_merge_schema_rebase_keeps_winner_columns(spark, tmp_path):
 
 
 def test_vtable_commit_is_atomic_no_clobber(tmp_path, spark):
-    """_commit must never overwrite an existing manifest, even without
-    the pre-existence check having fired (os.link fails EEXIST
+    """A commit must never overwrite an existing log entry, even without
+    the pre-existence check having fired (put_if_absent fails EEXIST
     atomically; a check-then-rename can clobber)."""
     import os as _os
 
@@ -750,14 +740,15 @@ def test_vtable_commit_is_atomic_no_clobber(tmp_path, spark):
         spark.createDataFrame([Row(k="base", v=0)], "k string, v int"),
         str(tmp_path / "at"),
     )
-    v = t.latest_version()
-    before = open(t._manifest_path(v)).read()
+    v = t.append(spark.createDataFrame([Row(k="next", v=1)], "k string, v int"))
+    log = _os.path.join(t.path, "_delta_log")
+    commit = _os.path.join(log, f"{v:020d}.json")
+    before = open(commit).read()
     with pytest.raises(RuntimeError, match="already committed"):
-        t._commit(v, [], t.read().schema, [], "CLOBBER_ATTEMPT")
-    assert open(t._manifest_path(v)).read() == before  # intact
+        t._write_commit(t.snapshot(v - 1), [], "CLOBBER_ATTEMPT")
+    assert open(commit).read() == before  # intact
     # no orphaned tmp files left behind
-    mdir = _os.path.dirname(t._manifest_path(v))
-    assert not [f for f in _os.listdir(mdir) if ".tmp-" in f]
+    assert not [f for f in _os.listdir(log) if ".tmp" in f]
 
 
 def test_skew_preflight_split_matches_plain_merge(spark, tmp_path):
@@ -968,15 +959,15 @@ def test_failed_merge_commit_leaves_table_untouched(
                    path, batch_id="b1")
     t = VersionedParquetTable(spark, path)
     v0 = t.latest_version()
-    real_commit = VersionedParquetTable._commit
+    real_commit = VersionedParquetTable._write_commit
 
-    def crash_on_insert_commit(self, version, files, schema, pc, op, *a, **kw):
+    def crash_on_insert_commit(self, base, files, op, *a, **kw):
         metrics = a[0] if a else kw.get("metrics")
         if isinstance(metrics, dict) and "n_inserted" in metrics:
             raise OSError("injected crash before the commit")
-        return real_commit(self, version, files, schema, pc, op, *a, **kw)
+        return real_commit(self, base, files, op, *a, **kw)
 
-    monkeypatch.setattr(VersionedParquetTable, "_commit", crash_on_insert_commit)
+    monkeypatch.setattr(VersionedParquetTable, "_write_commit", crash_on_insert_commit)
     b2 = spark.createDataFrame(MERGE_B2, BATCH_SCHEMA)
     with pytest.raises(OSError, match="injected crash"):
         run_scd2_batch(spark, spec, b2, path, batch_id="b2")
@@ -985,3 +976,48 @@ def test_failed_merge_commit_leaves_table_untouched(
     assert scd2.check_invariants(_read(spark, path), "contract").count() == 0
     run_scd2_batch(spark, spec, b2, path, batch_id="b2")
     assert _history(spark, path) == MERGE_HISTORY
+
+
+def test_failed_rebuild_commit_leaves_merge_version(spark, tmp_path, monkeypatch):
+    """Crash injection at the merge → rebuild boundary
+    (``late_policy="rebuild"``): the late-event rebuild commit fails
+    after the batch's merge committed. The table must stay at the
+    SCD2_MERGE version with no invariant violated (every key still has
+    its current row), and a re-run must converge to the history of an
+    uninterrupted run."""
+    b1 = [ev("A", "2023-01-10T00:00:00", "Draft"), ev("A", "2023-01-20T00:00:00", "Signed")]
+    # a fresh key (merge commit) plus a late event inside A's closed
+    # interval (rebuild commit)
+    b2 = [ev("B", "2023-01-21T00:00:00", "Draft"), ev("A", "2023-01-15T00:00:00", "Sent")]
+    clean = str(tmp_path / "clean")
+    for bid, rows in (("b1", b1), ("b2", b2)):
+        run_scd2_batch(spark, REBUILD_SPEC, spark.createDataFrame(rows, BATCH_SCHEMA),
+                       clean, batch_id=bid)
+    assert [h["operation"] for h in VersionedParquetTable(spark, clean).history()[:2]] == [
+        "SCD2_REBUILD", "SCD2_MERGE",
+    ]
+
+    path = str(tmp_path / "t")
+    run_scd2_batch(spark, REBUILD_SPEC, spark.createDataFrame(b1, BATCH_SCHEMA),
+                   path, batch_id="b1")
+    t = VersionedParquetTable(spark, path)
+    v0 = t.latest_version()
+    real_commit = VersionedParquetTable._write_commit
+
+    def crash_on_rebuild_commit(self, base, files, op, *a, **kw):
+        if op == "SCD2_REBUILD":
+            raise OSError("injected crash before the rebuild commit")
+        return real_commit(self, base, files, op, *a, **kw)
+
+    monkeypatch.setattr(VersionedParquetTable, "_write_commit", crash_on_rebuild_commit)
+    with pytest.raises(OSError, match="injected crash"):
+        run_scd2_batch(spark, REBUILD_SPEC, spark.createDataFrame(b2, BATCH_SCHEMA),
+                       path, batch_id="b2")
+    monkeypatch.undo()
+    assert t.latest_version() == v0 + 1
+    assert t.history()[0]["operation"] == "SCD2_MERGE"
+    assert scd2.check_invariants(_read(spark, path), "contract").count() == 0
+    run_scd2_batch(spark, REBUILD_SPEC, spark.createDataFrame(b2, BATCH_SCHEMA),
+                   path, batch_id="b2")
+    assert _history(spark, path) == _history(spark, clean)
+    assert scd2.check_invariants(_read(spark, path), "contract").count() == 0

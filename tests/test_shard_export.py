@@ -269,3 +269,48 @@ def test_export_token_shards_null_or_dup_ids_take_window_path(spark, tmp_path):
     )
     man = export_token_shards(df, str(tmp_path / "n"), budget=100)
     assert man["total_rows"] == 6
+
+
+def test_export_token_shards_long_sources_size_the_gate(
+    spark, tmp_path, monkeypatch
+):
+    """The broadcast gate sizes the plan table from the data: long
+    source names (80 rows x 200 B; a shard directory embeds the name,
+    so it stays under the file-name limit) push the estimate past a
+    10 kB autoBroadcastJoinThreshold that a flat 64 B/row guess passes,
+    so the window path runs — and the export is identical to a forced
+    window-path run."""
+    from delta_lake_pyspark_scd2_spark.sources import export
+
+    calls = []
+    real = export.tokens_before
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(export, "tokens_before", counting)
+    long_a, long_b = "a" * 200, "b" * 200
+    rows = [
+        (i, long_a if i % 3 else long_b, f"w{i} " * ((i % 7) + 1))
+        for i in range(80)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(10_000))
+        assert 80 * 64 <= 10_000 < 80 * 2 * 200
+        m_gate = export.export_token_shards(df, str(tmp_path / "g"), budget=20)
+        n_gate = len(calls)
+        spark.conf.set(key, "-1")  # gate closed outright
+        m_window = export.export_token_shards(df, str(tmp_path / "w"), budget=20)
+    finally:
+        spark.conf.set(key, saved)
+    # the plan frame takes one tokens_before; the window path a second
+    assert n_gate == 2 and len(calls) == 4
+    assert m_gate["tokens_per_shard"] == m_window["tokens_per_shard"]
+    assert m_gate["rows_per_shard"] == m_window["rows_per_shard"]
+    a = spark.read.json(str(tmp_path / "g") + "/shard=*").orderBy("doc_id")
+    b = spark.read.json(str(tmp_path / "w") + "/shard=*").orderBy("doc_id")
+    assert a.collect() == b.collect()

@@ -41,7 +41,7 @@ def test_auto_compact_bounds_file_count(spark, tmp_path):
     t.set_property("autoCompact.minFiles", "4")
     for i in range(1, 10):
         t.append(_batch(spark, i * 10, "a"))
-        n_files = len(t._current()["files"])
+        n_files = len(t.snapshot()["files"])
         assert n_files < 4, f"append {i}: {n_files} files accumulated"
     assert t.read().count() == 50
     assert "COMPACT" in [h["operation"] for h in t.history()]
@@ -56,7 +56,7 @@ def test_auto_compact_only_touches_appended_partition(spark, tmp_path):
     for i in range(5):
         t.append(_batch(spark, 100 + i * 10, "b"))
     b_files = {
-        f["path"] for f in t._current()["files"] if f["partition"]["part"] == "b"
+        f["path"] for f in t.snapshot()["files"] if f["partition"]["part"] == "b"
     }
     assert len(b_files) == 5
     t.set_property("autoCompact", "true")
@@ -65,11 +65,11 @@ def test_auto_compact_only_touches_appended_partition(spark, tmp_path):
     for i in range(1, 6):
         t.append(_batch(spark, i * 10, "a"))
     after = {
-        f["path"] for f in t._current()["files"] if f["partition"]["part"] == "b"
+        f["path"] for f in t.snapshot()["files"] if f["partition"]["part"] == "b"
     }
     assert after == b_files  # untouched partition carried by reference
     a_files = [
-        f for f in t._current()["files"] if f["partition"]["part"] == "a"
+        f for f in t.snapshot()["files"] if f["partition"]["part"] == "a"
     ]
     assert len(a_files) < 4
 
@@ -80,7 +80,7 @@ def test_auto_compact_off_accumulates(spark, tmp_path):
     )
     for i in range(1, 6):
         t.append(_batch(spark, i * 10, "a"))
-    assert len(t._current()["files"]) == 6  # no property, no compaction
+    assert len(t.snapshot()["files"]) == 6  # no property, no compaction
 
 
 def test_upsert_sync_deletes_mirrors_source(spark, tmp_path):
@@ -118,10 +118,10 @@ def test_zorder_scoped_to_partitions(spark, tmp_path):
         partition_cols=["part"],
     )
     b_files = {
-        f["path"] for f in t._current()["files"] if f["partition"]["part"] == "b"
+        f["path"] for f in t.snapshot()["files"] if f["partition"]["part"] == "b"
     }
     t.compact(zorder_by=["x", "y"], only_partitions=[{"part": "a"}])
-    m = t._current()
+    m = t.snapshot()
     after_b = {f["path"] for f in m["files"] if f["partition"]["part"] == "b"}
     assert after_b == b_files  # partition b untouched
     assert t.read().count() == 100
@@ -129,17 +129,17 @@ def test_zorder_scoped_to_partitions(spark, tmp_path):
 
 
 def _race_once(t, rival_fn):
-    """Make t's next _commit lose one version race to rival_fn()."""
-    orig = t._commit
+    """Make t's next commit lose one version race to rival_fn()."""
+    orig = t._write_commit
     state = {"done": False}
 
-    def racing(version, files, schema, pc, op, *a, **kw):
+    def racing(base, files, op, *a, **kw):
         if not state["done"]:
             state["done"] = True
             rival_fn()
-        return orig(version, files, schema, pc, op, *a, **kw)
+        return orig(base, files, op, *a, **kw)
 
-    t._commit = racing
+    t._write_commit = racing
     return orig
 
 
@@ -159,7 +159,7 @@ def test_replace_partitions_rebases_over_disjoint_commit(spark, tmp_path):
 
     orig = _race_once(t, rival)
     t.replace_partitions(_batch(spark, 900, "a"), [{"part": "a"}])
-    t._commit = orig
+    t._write_commit = orig
     got = {r["id"] for r in t.read().collect()}
     assert got == set(range(900, 905)) | set(range(500, 505))
     assert t.latest_version() == 2  # both rewrites committed
@@ -181,7 +181,7 @@ def test_replace_partitions_conflicts_on_overlap(spark, tmp_path):
     orig = _race_once(t, rival)
     with pytest.raises(RuntimeError, match="same partition"):
         t.replace_partitions(_batch(spark, 900, "a"), [{"part": "a"}])
-    t._commit = orig
+    t._write_commit = orig
     # the winner's rewrite survives intact
     assert {r["id"] for r in t.read().collect()} == set(range(500, 505))
 
@@ -225,19 +225,19 @@ def test_concurrent_scd2_merges_different_days_both_land(spark, tmp_path):
     # merge; the rebase logic must let both land
     day1 = spark.createDataFrame([ev("A", "2023-01-22T09:00:00", "a2")], schema)
     raced = {"done": False}
-    orig_commit = VersionedParquetTable._commit
+    orig_commit = VersionedParquetTable._write_commit
 
-    def racing(self, version, files, schema_, pc, op, *a, **kw):
+    def racing(self, base, files, op, *a, **kw):
         if not raced["done"] and op == "SCD2_MERGE" and self.path == path:
             raced["done"] = True
             rival()
-        return orig_commit(self, version, files, schema_, pc, op, *a, **kw)
+        return orig_commit(self, base, files, op, *a, **kw)
 
-    VersionedParquetTable._commit = racing
+    VersionedParquetTable._write_commit = racing
     try:
         run_scd2_batch(spark, spec, day1, path, batch_id="jan")
     finally:
-        VersionedParquetTable._commit = orig_commit
+        VersionedParquetTable._write_commit = orig_commit
     rows = {(r["k"], r["v"], r["is_current"]) for r in t.read().collect()}
     assert ("A", "a2", True) in rows and ("B", "b2", True) in rows
     assert ("A", "a1", False) in rows and ("B", "b1", False) in rows
@@ -251,7 +251,7 @@ def test_create_with_properties_and_register_view(spark, tmp_path):
     assert t.properties() == {"autoCompact": "true", "autoCompact.minFiles": "4"}
     for i in range(1, 8):
         t.append(_batch(spark, i * 10, "a"))
-    assert len(t._current()["files"]) < 4  # property active from creation
+    assert len(t.snapshot()["files"]) < 4  # property active from creation
     t.register_view("props_t")
     assert spark.sql("SELECT COUNT(*) AS n FROM props_t").collect()[0]["n"] == 40
     t.register_view("props_t0", version=0)

@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from delta_lake_pyspark_scd2_spark.sources.delta_reader import DeltaTableReader
-from delta_lake_pyspark_scd2_spark.sources.delta_writer import write_delta
 from delta_lake_pyspark_scd2_spark.sources.vtable import VersionedParquetTable
 
 
@@ -76,20 +75,20 @@ def test_txn_race_lost_commit_still_exactly_once(spark, tmp_path):
     path = str(tmp_path / "t")
     t = VersionedParquetTable.create(spark, _batch(spark, 0), path)
 
-    orig_commit = t._commit
+    orig_commit = t._write_commit
     calls = {"n": 0}
 
-    def racing_commit(version, files, schema, pc, op, *a, **kw):
+    def racing_commit(base, files, op, *a, **kw):
         if calls["n"] == 0:
             calls["n"] += 1
             # another replica lands the same (app, 1) txn first
             other = VersionedParquetTable(spark, path)
             other.append(_batch(spark, 10), txn=("app", 1))
-        return orig_commit(version, files, schema, pc, op, *a, **kw)
+        return orig_commit(base, files, op, *a, **kw)
 
-    t._commit = racing_commit
+    t._write_commit = racing_commit
     v = t.append(_batch(spark, 10), txn=("app", 1))
-    t._commit = orig_commit
+    t._write_commit = orig_commit
     assert v == t.latest_version()
     assert t.read().count() == 20  # the batch landed exactly once
     assert t.last_txn_version("app") == 1
@@ -100,13 +99,15 @@ def test_txn_race_lost_commit_still_exactly_once(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def _set_commit_ts(t: VersionedParquetTable, version: int, ts: float):
-    p = t._manifest_path(version)
-    m = json.load(open(p))
-    m["timestamp"] = ts
-    os.chmod(p, 0o644)
+def _set_commit_ts(path: str, version: int, ts_ms: int):
+    """Pin the ``commitInfo.timestamp`` (epoch ms) of one commit."""
+    p = os.path.join(path, "_delta_log", f"{version:020d}.json")
+    lines = [json.loads(line) for line in open(p)]
+    for a in lines:
+        if "commitInfo" in a:
+            a["commitInfo"]["timestamp"] = ts_ms
     with open(p, "w") as fh:
-        json.dump(m, fh)
+        fh.write("\n".join(json.dumps(a) for a in lines) + "\n")
 
 
 def test_vtable_timestamp_as_of(spark, tmp_path):
@@ -115,8 +116,8 @@ def test_vtable_timestamp_as_of(spark, tmp_path):
     t.append(_batch(spark, 10))
     t.append(_batch(spark, 20))
     # pin deterministic commit timestamps 1000 / 2000 / 3000
-    for v, ts in [(0, 1000.0), (1, 2000.0), (2, 3000.0)]:
-        _set_commit_ts(t, v, ts)
+    for v, ts in [(0, 1_000_000), (1, 2_000_000), (2, 3_000_000)]:
+        _set_commit_ts(path, v, ts)
     t = VersionedParquetTable(spark, path)  # drop caches
     assert t.version_at_timestamp(1000.0) == 0
     assert t.version_at_timestamp(2500.0) == 1
@@ -130,21 +131,14 @@ def test_vtable_timestamp_as_of(spark, tmp_path):
 
 
 def test_delta_reader_timestamp_as_of(spark, tmp_path):
-    """timestampAsOf over a real _delta_log written by our own protocol
-    writer: resolution uses commitInfo.timestamp per commit."""
+    """timestampAsOf over the _delta_log a VersionedParquetTable wrote:
+    resolution uses commitInfo.timestamp per commit."""
     path = str(tmp_path / "d")
-    write_delta(_batch(spark, 0), path, mode="create")
-    write_delta(_batch(spark, 10), path, mode="append")
-    # rewrite commitInfo timestamps to known values (v0=10_000ms, v1=20_000ms)
-    log = os.path.join(path, "_delta_log")
+    t = VersionedParquetTable.create(spark, _batch(spark, 0), path)
+    t.append(_batch(spark, 10))
+    # pin commitInfo timestamps to known values (v0=10_000ms, v1=20_000ms)
     for v, ts in [(0, 10_000), (1, 20_000)]:
-        p = os.path.join(log, f"{v:020d}.json")
-        lines = [json.loads(line) for line in open(p)]
-        for a in lines:
-            if "commitInfo" in a:
-                a["commitInfo"]["timestamp"] = ts
-        with open(p, "w") as fh:
-            fh.write("\n".join(json.dumps(a) for a in lines) + "\n")
+        _set_commit_ts(path, v, ts)
     r = DeltaTableReader(spark, path)
     assert r.version_at_timestamp(15_000) == 0
     assert r.version_at_timestamp(20_000) == 1
@@ -276,8 +270,8 @@ def test_table_changes_by_timestamp(spark, tmp_path):
     t = VersionedParquetTable.create(spark, _batch(spark, 0), path)
     t.append(_batch(spark, 10))
     t.append(_batch(spark, 20))
-    for v, ts in [(0, 1000.0), (1, 2000.0), (2, 3000.0)]:
-        _set_commit_ts(t, v, ts)
+    for v, ts in [(0, 1_000_000), (1, 2_000_000), (2, 3_000_000)]:
+        _set_commit_ts(path, v, ts)
     t = VersionedParquetTable(spark, path)
     # Delta CDF startingTimestamp rule: the earliest commit at-or-after
     # the timestamp is INCLUDED — a commit landing exactly at ts=2000

@@ -59,15 +59,15 @@ def test_changes_and_maintenance(spark, table_path, capsys):
     assert t.read().count() == 2  # rolled back past the append
 
 
-def test_export_delta_roundtrip(spark, table_path, tmp_path, capsys):
-    dest = str(tmp_path / "delta")
-    out = _run(capsys, ["export-delta", table_path, dest])
-    assert out["delta_table"] == dest
+def test_maintained_table_reads_as_delta(spark, table_path, capsys):
+    """The CLI needs no export step: the table it maintains is a Delta
+    table that an independent Delta reader opens in place."""
+    _run(capsys, ["compact", table_path])
     from delta_lake_pyspark_scd2_spark.sources.delta_reader import (
         DeltaTableReader,
     )
 
-    got = DeltaTableReader(spark, dest).read()
+    got = DeltaTableReader(spark, table_path).read()
     assert got.count() == 3
 
 

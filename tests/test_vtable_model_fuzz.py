@@ -3,9 +3,14 @@ append / upsert / delete / compact / restore / purge are applied both to a
 VersionedParquetTable and to an in-memory model; after the sequence,
 the live table must equal the model AND every historical version must
 still read back as the snapshot recorded when it was committed — the
-storage-layer twin of the differential query fuzzer."""
+storage-layer twin of the differential query fuzzer. After every op the
+``_delta_log`` itself is checked against PROTOCOL.md (no Delta library
+is installed to do it)."""
 
 from __future__ import annotations
+
+import json
+import os
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -37,6 +42,58 @@ def _df(spark, rows):
     )
 
 
+def _check_delta_log(path: str) -> None:
+    """Replay ``path``'s ``_delta_log`` from scratch, independently of
+    the package, and check each commit against the protocol: one action
+    per line, exactly one commitInfo, unique live ``add`` paths,
+    ``partitionValues`` naming every partition column, parseable
+    ``stats``, and a protocol declaring exactly the features in use."""
+    log = os.path.join(path, "_delta_log")
+    versions = sorted(int(f[:20]) for f in os.listdir(log) if f.endswith(".json"))
+    assert versions == list(range(len(versions)))
+    protocol, meta, live = None, None, {}
+    for v in versions:
+        with open(os.path.join(log, f"{v:020d}.json")) as fh:
+            actions = [json.loads(line) for line in fh if line.strip()]
+        assert all(len(a) == 1 for a in actions), f"v{v}: not one action per line"
+        assert sum("commitInfo" in a for a in actions) == 1, f"v{v}: commitInfo"
+        adds = [a["add"] for a in actions if "add" in a]
+        removed = {a["remove"]["path"] for a in actions if "remove" in a}
+        assert len({a["path"] for a in adds}) == len(adds), f"v{v}: duplicate add"
+        for a in actions:
+            protocol = a.get("protocol", protocol)
+            meta = a.get("metaData", meta)
+        for p in removed:
+            assert p in live, f"v{v}: remove of a file that is not live: {p}"
+            live.pop(p)
+        for a in adds:
+            assert a["path"] not in live, f"v{v}: {a['path']} added twice"
+            live[a["path"]] = a
+        pcols = set(meta["partitionColumns"])
+        for a in live.values():
+            assert set(a["partitionValues"]) == pcols, f"v{v}: partitionValues"
+            assert isinstance(json.loads(a["stats"])["numRecords"], int)
+        conf = meta["configuration"]
+        schema = meta["schemaString"]
+        reader = {
+            "deletionVectors": any("deletionVector" in a for a in live.values()),
+            "columnMapping": conf.get("delta.columnMapping.mode", "none") != "none",
+            "timestampNtz": '"timestamp_ntz"' in schema,
+        }
+        writer = {
+            **reader,
+            "changeDataFeed": conf.get("delta.enableChangeDataFeed") == "true",
+            "checkConstraints": any(k.startswith("delta.constraints.") for k in conf),
+            "generatedColumns": "delta.generationExpression" in schema,
+            "identityColumns": "delta.identity.start" in schema,
+        }
+        assert protocol["minWriterVersion"] == 7
+        assert set(protocol["writerFeatures"]) == {f for f, on in writer.items() if on}
+        declared = set(protocol.get("readerFeatures", []))
+        assert declared == {f for f, on in reader.items() if on}, f"v{v}: reader features"
+        assert protocol["minReaderVersion"] == (3 if declared else 1)
+
+
 def _read_set(t, version=None):
     return {(r["id"], r["part"], r["val"]) for r in t.read(version).collect()}
 
@@ -64,6 +121,7 @@ def test_random_op_sequences_match_model(spark, tmp_path_factory, ops, data):
     history = [snap()]  # index = version
 
     for i, op in enumerate(ops):
+        _check_delta_log(path)
         val = seq + i + 1
         if op[0] == "append":
             rows = [(k, val) for k in sorted(set(op[1]))]
@@ -103,7 +161,7 @@ def test_random_op_sequences_match_model(spark, tmp_path_factory, ops, data):
             if any(
                 f.get("dv")
                 for v_ in t.versions()
-                for f in t._snapshot_files(v_)
+                for f in t.snapshot(v_)["files"]
             ):
                 continue
             thr = seq + (op[1] % 10)
@@ -143,6 +201,7 @@ def test_random_op_sequences_match_model(spark, tmp_path_factory, ops, data):
                 model[("r", len(history), j)] = row
             history.append(snap())
 
+    _check_delta_log(path)
     # 1. head matches the model
     assert _read_set(t) == set(model.values())
     # 2. every version still reads back as the snapshot recorded for it

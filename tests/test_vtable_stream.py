@@ -85,7 +85,7 @@ def test_planner_is_metadata_only_and_file_parallel(spark, tmp_path):
     )
     t = VersionedParquetTable.create(spark, df, path, partition_cols=["p"])
     t.append(spark.createDataFrame([(100, 1, "x")], "id long, p long, s string"))
-    n_files_v0 = len(t._snapshot_files(0))
+    n_files_v0 = len(t.snapshot(0)["files"])
     assert n_files_v0 >= 3  # one per partition at least
 
     reader = _VTableChangesStreamReader(_changes_schema(path), {"path": path})
@@ -156,8 +156,10 @@ def test_bootstrap_and_guard_survive_compact_first_version(spark, tmp_path):
     t.compact()  # version 4: data_change=false
     t.vacuum(keep_versions=1, orphan_grace_s=0.0)  # only v4 retained
     assert t.versions() == [4]
-    commit = t._load_commit(4)
-    assert commit.get("data_change", True) is False  # compact commit
+    # the compact commit: every file action is dataChange=false
+    assert not any(
+        a[k]["dataChange"] for a in t.commit_actions(4) for k in ("add", "remove") if k in a
+    )
 
     reader = _VTableChangesStreamReader(_changes_schema(path), {"path": path})
     # fresh start: full snapshot replays AT the compact version
@@ -187,7 +189,7 @@ def test_stream_skips_compaction_and_applies_dv(spark, tmp_path):
         spark, df, path, properties={"enableChangeDataFeed": "true"}
     )
     dead = (
-        t._scan(t._current()["files"], t.read().schema, with_position=True)
+        t.read_partitions(t.partitions_of(), with_position=True)
         .filter(F.col("id") < 3)
         .select("__file", "__pos")
     )
@@ -219,7 +221,7 @@ def test_stream_without_cdf_rejects_inplace_dv_commits(spark, tmp_path):
         path,
     )
     dead = (
-        t._scan(t._current()["files"], t.read().schema, with_position=True)
+        t.read_partitions(t.partitions_of(), with_position=True)
         .filter(F.col("id") < 3)
         .select("__file", "__pos")
     )
@@ -314,7 +316,7 @@ def test_vacuum_sweeps_unreferenced_cdc_dirs(spark, tmp_path):
     )
     t.upsert(spark.createDataFrame([(1, "A")], "id long, s string"), ["id"])
     t.upsert(spark.createDataFrame([(1, "B")], "id long, s string"), ["id"])
-    cdc_root = os.path.join(path, "_cdc")
+    cdc_root = os.path.join(path, "_change_data")
     assert len(os.listdir(cdc_root)) == 2
     # keep only the head version: v1's change files become garbage,
     # but the grace window spares young files...

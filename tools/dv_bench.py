@@ -16,7 +16,7 @@ shared scan+join. The metric that transfers to a cluster (object
 store, replicated writes) is ``commit_bytes_written``, the bytes of a
 batch's one merge commit: both modes write the same inserts, then
 rewrite mode re-writes every touched-partition byte per batch while dv
-mode writes the closed copies + a KB-scale sidecar. Measured before the
+mode writes the closed copies + a KB-scale deletion vector. Measured before the
 inserts joined the close commit (close bytes only; 2M base, 2k closes):
 rewrite ≈ 60 MB/day vs dv ≈ 0.2 MB/day — a ~300x write-amplification
 gap that scales with partition fatness, while the dv read-side
@@ -42,6 +42,9 @@ from delta_lake_pyspark_scd2_spark.pipeline import (  # noqa: E402
 )
 from delta_lake_pyspark_scd2_spark.session import get_spark  # noqa: E402
 from delta_lake_pyspark_scd2_spark.sources import generators as G  # noqa: E402
+from delta_lake_pyspark_scd2_spark.sources.delta_dv import (  # noqa: E402
+    dv_file_relative_path,
+)
 
 SPEC = SCD2Spec(
     key_cols=("user_id",),
@@ -53,33 +56,25 @@ SPEC = SCD2Spec(
 
 def _merge_commit_bytes(table, batch_id: str) -> int:
     """Bytes physically written by the merge commit of ``batch_id``:
-    data files in its ``add`` delta + any new DV sidecar."""
+    data files it adds + any new deletion-vector file."""
     total = 0
     for h in table.history():
         if h["operation"] not in ("SCD2_MERGE", "SCD2_MERGE_DV"):
             continue
         if h["metrics"].get("batch_id") != batch_id:
             continue
-        raw = table._load_commit(h["version"])
-        prev_paths = {
-            f["path"] for f in table._snapshot_files(h["version"] - 1)
-        }
-        new_dv = set()
-        for a in raw.get("add", raw.get("files", [])):
+        prev = table.snapshot(h["version"] - 1)["files"]
+        prev_paths = {f["path"] for f in prev}
+        prev_dvs = {dv_file_relative_path(f["dv"]) for f in prev if f["dv"]}
+        new_dvs = set()
+        for f in table.snapshot(h["version"])["files"]:
             # dv-only updates re-emit entries for EXISTING files —
             # those bytes were not written by this commit
-            p = os.path.join(table.path, "data", a["path"])
-            if a["path"] not in prev_paths and os.path.exists(p):
-                total += os.path.getsize(p)
-            paths = (a.get("dv") or {}).get("paths", [])
-            if paths:  # the sidecar THIS commit wrote is the last one
-                new_dv.add(paths[-1])
-        for dvp in new_dv:
-            droot = os.path.join(table.path, "_dv", dvp)
-            for root, _d, fs in os.walk(droot):
-                total += sum(
-                    os.path.getsize(os.path.join(root, f)) for f in fs
-                )
+            if f["path"] not in prev_paths:
+                total += f["size"]
+            if f["dv"] and dv_file_relative_path(f["dv"]) not in prev_dvs:
+                new_dvs.add(dv_file_relative_path(f["dv"]))
+        total += sum(os.path.getsize(os.path.join(table.path, p)) for p in new_dvs)
     return total
 
 

@@ -69,7 +69,7 @@ def main() -> int:
     )
     with tempfile.TemporaryDirectory() as tmp:
         index = S.build_ivfpq_index(emb, cents, books, tmp + "/ivfpq")
-        manifest = index._load_manifest(index.latest_version())
+        manifest = index.snapshot()
         all_files = manifest["files"]
         files_by_part = {}
         for f in all_files:
